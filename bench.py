@@ -383,14 +383,14 @@ def build_queries(spark, sf_dir: str):
         # ~256 MB of scan the cache write costs more than the md5 pass
         # it saves (sf0.1 A/B: fused 2.52 s vs plain 1.77; sf10 fused
         # 54.0 vs 63.8).
-        from relationaldecomposition_spark.operators.ivf import (
-            _plan_size_bytes)
+        from relationaldecomposition_spark.engine.cost import plan_bytes
         from relationaldecomposition_spark.operators.sketches import (
             KMV_THRESHOLD_MIN_BYTES, hashed_values, hll_distinct,
             kmv_distinct)
         # reuse kmv_distinct's own auto-dispatch cut so the bench's fuse
         # decision cannot drift if the constant is retuned (ADVICE r9)
-        if _plan_size_bytes(li) >= KMV_THRESHOLD_MIN_BYTES:
+        est = plan_bytes(li)
+        if est is None or est >= KMV_THRESHOLD_MIN_BYTES:
             hv = hashed_values(li, ["l_returnflag"], "l_orderkey") \
                 .persist()
             try:

@@ -47,6 +47,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
+from .fanout import fanout
 
 # Broadcast a fold side when its (exactly known) distinct row count is below
 # this. ~1M narrow rows ≈ tens of MB serialized: safely under default
@@ -199,14 +200,6 @@ class DecompositionValidator:
             projs = {c: e["df"] for c, e in entries.items()}
             # materialize + count all projections concurrently: each count is
             # an independent job over the cached base, so latency overlaps.
-            # Job groups are per-Python-thread in PySpark, so re-apply the
-            # caller's group inside each worker or cancellation would miss
-            # these jobs.
-            from concurrent.futures import ThreadPoolExecutor
-            sc = self.base.sparkSession.sparkContext
-            group = sc.getLocalProperty("spark.jobGroup.id")
-            desc = sc.getLocalProperty("spark.job.description")
-
             def count_one(c):
                 if stop():
                     raise DecompositionCanceled("canceled before projection count")
@@ -220,16 +213,14 @@ class DecompositionValidator:
                 with ent["mlock"]:
                     if ent["count"] is not None:
                         return ent["count"]
-                    if group is not None:
-                        sc.setJobGroup(group, desc, interruptOnCancel=True)
                     n = projs[c].count()
                     ent["count"] = n
                 return n
 
-            with ThreadPoolExecutor(max_workers=min(8, len(cl))) as pool:
-                for c, n in zip(cl, pool.map(count_one, cl)):
-                    counts[c] = n
-                    info.add(c, n)
+            ns = fanout(self.base.sparkSession, count_one, cl, 8)
+            for c, n in zip(cl, ns):
+                counts[c] = n
+                info.add(c, n)
 
             if stop():
                 raise DecompositionCanceled("canceled before final aggregate")
@@ -348,22 +339,13 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
     barrier, not executor saturation — three sf0.1 cluster writes
     measure ~5 s sequential vs ~2 s overlapped. Table names are disjoint
     per worker, so the DROP/orphan-cleanup prologue never races on the
-    same location; PySpark job groups are per-thread, so the caller's
-    group is re-applied inside each worker (cancellation would otherwise
-    miss these jobs)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    same location. The first failure cancels every not-yet-started write
+    and is re-raised."""
     base = df.distinct().persist()
     spark = df.sparkSession
-    sc = spark.sparkContext
-    group = sc.getLocalProperty("spark.jobGroup.id")
-    desc = sc.getLocalProperty("spark.job.description")
-    clusters = list(clusters)
 
     def write_one(item):
         i, cluster = item
-        if group is not None:
-            sc.setJobGroup(group, desc, interruptOnCancel=True)
         cols = sorted_cols(attrset(cluster), df.columns)
         name = f"{table_prefix}_cluster_{i:03d}"
         # mode("overwrite") only replaces tables THIS catalog knows;
@@ -380,23 +362,9 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
         return name
 
     try:
-        with ThreadPoolExecutor(
-                max_workers=min(4, max(1, len(clusters)))) as pool:
-            # submit (not map) so the first failure cancels every
-            # not-yet-started write — pool.map would let already-queued
-            # writes run to completion during shutdown, leaving an
-            # unreported mix of created tables (advisor, round 8).
-            futures = [pool.submit(write_one, item)
-                       for item in enumerate(clusters)]
-            try:
-                names = [f.result() for f in futures]
-            except BaseException:
-                for f in futures:
-                    f.cancel()
-                raise
+        return fanout(spark, write_one, enumerate(clusters), 4)
     finally:
         base.unpersist()
-    return names
 
 
 def write_decomposition(df: DataFrame, clusters, base_path: str,

@@ -41,11 +41,11 @@ import threading
 import time
 import uuid
 from collections.abc import Callable, Iterable, Sequence
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
+from .fanout import fanout
 
 
 class MiningCancelled(RuntimeError):
@@ -325,17 +325,15 @@ class SparkEntropyEngine:
         est0 = self._est_log2_groups(head)
         cur_mass = (2.0 ** est0) if est0 is not None else 0.0
         cur_union: set[str] = set(head)
-        # Cold-wide clamp (ADVICE r14): a chunk headed by a WIDE set with
-        # no cached estimate is budget-blind (every unknown set costs 0
-        # toward the group budget), so the r14 width raise 16 -> 32 would
-        # double the worst-case partial-agg working set exactly where the
-        # budget can't see. Clamp such chunks to the old width of 16 —
-        # the reference's RangeSize ceiling. Batches with singletons are
+        # Cold-wide clamp: a WIDE set with no cached estimate
+        # is budget-blind (it costs 0 toward the group budget), so the r14
+        # width raise 16 -> 32 would double the worst-case partial-agg
+        # working set exactly where the budget can't see. A chunk admits
+        # at most 16 such sets — the reference's RangeSize ceiling —
+        # whether or not its head is warm. Batches with singletons are
         # unaffected (singles seed estimates first, so every later chunk
         # is warm and keeps the full width).
-        width_cap = self.max_grouping_sets
-        if est0 is None and len(head) > 1:
-            width_cap = min(width_cap, 16)
+        cold_wide = int(est0 is None and len(head) > 1)
 
         def union_compact() -> bool:
             if thresh_bits is None:
@@ -344,9 +342,12 @@ class SparkEntropyEngine:
             return e is not None and e <= thresh_bits
 
         for x in todo[1:]:
-            if len(cur) >= width_cap:
+            if len(cur) >= self.max_grouping_sets:
                 break
             est = self._est_log2_groups(x)
+            cold = est is None and len(x) > 1
+            if cold and cold_wide >= 16:
+                continue
             # singletons never share a chunk with wider unknown-estimate
             # sets: running them alone first costs |cols| x N replication
             # instead of width x N, and their entropies are exactly what
@@ -368,6 +369,7 @@ class SparkEntropyEngine:
             cur.append(x)
             cur_mass += mass
             cur_union |= x
+            cold_wide += cold
         return cur
 
     def _batch_grouping_sets(self, subsets: list[frozenset[str]]) -> None:
@@ -597,22 +599,14 @@ class SparkEntropyEngine:
 
     def _batch_concurrent(self, subsets: list[frozenset[str]]) -> None:
         _ = self.num_rows  # materialize before fan-out
-        # propagate the caller's job group: groups are per-Python-thread, so
-        # cancellation would otherwise miss these fanned-out jobs
-        sc = self.df.sparkSession.sparkContext
-        group = sc.getLocalProperty("spark.jobGroup.id")
-        desc = sc.getLocalProperty("spark.job.description")
 
         def compute(x):
             if self.stop_check is not None and self.stop_check():
                 raise MiningCancelled(
                     "entropy batch cancelled by stop flag")
-            if group is not None:
-                sc.setJobGroup(group, desc, interruptOnCancel=True)
             return self._compute_single(x)
 
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            results = list(pool.map(compute, subsets))
+        results = fanout(self.df.sparkSession, compute, subsets, 8)
         with self._lock:
             for x, h in zip(subsets, results):
                 self._cache[x] = h

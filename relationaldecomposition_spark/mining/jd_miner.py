@@ -32,9 +32,9 @@ from __future__ import annotations
 import itertools
 import threading
 from collections import deque
-from concurrent.futures import ThreadPoolExecutor
 
 from ..core.deps import JD, MEASURE_ACCURACY
+from ..engine.fanout import fanout
 from ..engine.measures import MeasureEngine
 
 
@@ -79,28 +79,6 @@ class JDMiner:
         if stop_flag is not None:
             # engine hook: long chunked entropy batches stop mid-batch too
             self.eng.stop_check = stop_flag
-
-    def _map_pairs(self, fn, pairs):
-        """Run fn over pairs concurrently (thread pool + FAIR scheduler),
-        returning results in the deterministic input order. Spark job groups
-        are per-Python-thread, so the caller's group is re-applied inside
-        each worker — without this, B18 cancellation would miss the fanned
-        out jobs."""
-        pairs = list(pairs)
-        if self.max_parallel_pairs == 1 or len(pairs) <= 1:
-            return [fn(p) for p in pairs]
-        sc = self.eng.df.sparkSession.sparkContext
-        group = sc.getLocalProperty("spark.jobGroup.id")
-        desc = sc.getLocalProperty("spark.job.description")
-
-        def worker(p):
-            if group is not None:
-                sc.setJobGroup(group, desc, interruptOnCancel=True)
-            return fn(p)
-
-        with ThreadPoolExecutor(max_workers=self.max_parallel_pairs,
-                                thread_name_prefix="jdminer") as pool:
-            return list(pool.map(worker, pairs))
 
     # -- measures ------------------------------------------------------------
 
@@ -463,7 +441,9 @@ class JDMiner:
             ax, ay = pair
             return self.reduce_to_min_jd(ax, ay, self.full - {ax, ay})
 
-        for pair, jd in zip(todo, self._map_pairs(reduce_pair, todo)):
+        jds = fanout(self.eng.df.sparkSession, reduce_pair, todo,
+                     self.max_parallel_pairs)
+        for pair, jd in zip(todo, jds):
             if jd is None:
                 continue
             self.min_pairwise_seps[pair] = {jd.lhs}
@@ -528,7 +508,8 @@ class JDMiner:
             if not self._stop():
                 self.mine_all_min_seps_for_pair(*pair)
 
-        self._map_pairs(mine_pair, pairs)
+        fanout(self.eng.df.sparkSession, mine_pair, pairs,
+               self.max_parallel_pairs)
         out: set[frozenset[str]] = set()
         for seps in self.min_pairwise_seps.values():
             out |= seps

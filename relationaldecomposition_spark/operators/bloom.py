@@ -41,6 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..engine.cost import plan_bytes
 from ..functions.hashing import (
     H32_MOD, minhash_params, sql_affine_hash, sql_hash32)
 
@@ -257,9 +258,10 @@ def bloom_semi_join(big: DataFrame, big_key: str, small: DataFrame,
     words = bloom_build(small, small_key, m_bits, k, seed)
     use_arrow = m_bits > literal_max_bits
     if not use_arrow and arrow_probe_min_bytes is not None:
-        from .ivf import _plan_size_bytes
-
-        use_arrow = _plan_size_bytes(big) >= arrow_probe_min_bytes
+        # unknown size stays literal: the broadcast face needs a
+        # sparkContext, which Spark Connect (no plan stats) lacks
+        est = plan_bytes(big)
+        use_arrow = est is not None and est >= arrow_probe_min_bytes
     if use_arrow:
         probe = bloom_probe_broadcast(big, big_key, words, k, seed)
     else:

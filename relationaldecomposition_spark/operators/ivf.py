@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..engine.cost import plan_bytes
 from .dedup import _dot, _norm
 
 
@@ -978,23 +979,6 @@ def ivf_cell_index_hier(df: DataFrame, vec_col: str, id_col: str,
 PRUNE_MIN_INDEX_BYTES = 64 << 20
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate for the optimized plan — exact for
-    parquet scans (file footers), an overestimate for derived plans (the
-    safe direction here: over-pruning costs a small constant, skipping
-    the prune on a big index costs a full index shuffle).
-
-    ``_jdf`` is the classic-PySpark JVM handle — absent under Spark
-    Connect. When plan stats are unreachable, report "huge" so the
-    caller defaults to pruning (the pre-round-8 always-prune behavior:
-    a bounded constant, never a wrong answer)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes())
-    except Exception:
-        return 1 << 62
-
-
 def semdedup_incremental(new_df: DataFrame, index: DataFrame, vec_col: str,
                          id_col: str,
                          centroids: list[tuple[int, list[float]]],
@@ -1106,7 +1090,9 @@ def semdedup_incremental(new_df: DataFrame, index: DataFrame, vec_col: str,
         # callers that own the lifecycle still pass ``assigned``.
     assigned = assigned.withColumn("_new", F.lit(True))
     if prune_index is None:
-        prune_index = _plan_size_bytes(index) >= PRUNE_MIN_INDEX_BYTES
+        # unknown size prunes: a bounded constant, never a wrong answer
+        est = plan_bytes(index)
+        prune_index = est is None or est >= PRUNE_MIN_INDEX_BYTES
     if prune_index:
         touched = assigned.select("cell").distinct()
         pruned = index.join(F.broadcast(touched), "cell", "left_semi")

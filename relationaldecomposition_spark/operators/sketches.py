@@ -46,6 +46,7 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..engine.cost import plan_bytes
 from ..functions.hashing import sql_hash64
 
 HASH_BITS = 60
@@ -167,10 +168,10 @@ def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str,
     if method not in ("auto", "threshold", "partial"):
         raise ValueError(f"unknown kmv method: {method!r}")
     if method == "auto":
-        from .ivf import _plan_size_bytes
+        # unknown size takes the threshold face
+        est = plan_bytes(prehashed if prehashed is not None else df)
         method = ("threshold"
-                  if _plan_size_bytes(prehashed if prehashed is not None
-                                      else df) >= KMV_THRESHOLD_MIN_BYTES
+                  if est is None or est >= KMV_THRESHOLD_MIN_BYTES
                   else "partial")
     import numpy as np
 

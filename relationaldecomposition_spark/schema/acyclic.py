@@ -19,6 +19,7 @@ from collections import deque
 from dataclasses import dataclass, field
 
 from ..core.deps import JD
+from ..engine.fanout import fanout
 
 
 # ---------------------------------------------------------------------------
@@ -223,10 +224,9 @@ def validate_schema(validator, schema: AcyclicSchema):
     return validator.process_decomposition(schema.clusters)
 
 
-def validate_schemas_concurrent(validator, schemas,
-                                max_workers: int = 4) -> list:
-    """validate_schema over several CANDIDATE schemas concurrently,
-    preserving input order in the returned DecompositionInfo list.
+def validate_schemas_concurrent(validator, schemas) -> list:
+    """validate_schema over several CANDIDATE schemas concurrently (4 at a
+    time), preserving input order in the returned DecompositionInfo list.
 
     A single validation is ~8 short Spark jobs whose steady-state cost is
     per-action scheduling latency, not cluster load (the spurious_fold
@@ -235,23 +235,11 @@ def validate_schemas_concurrent(validator, schemas,
     ~14 s vs ~5 s concurrent. Thread-safety: the validator's shared state
     is the immutable persisted base plus a lazily-counted num_tuples
     (concurrent first reads both run the same count and store the same
-    int — benign). PySpark job groups are PER-THREAD, so the caller's
-    group is re-applied inside each worker — without this a cancellation
-    would miss every job these threads launch (same pattern as
-    process_decomposition's concurrent projection counts)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    int — benign)."""
     schemas = list(schemas)
     if not schemas:
         return []
-    sc = validator.base.sparkSession.sparkContext
-    group = sc.getLocalProperty("spark.jobGroup.id")
-    desc = sc.getLocalProperty("spark.job.description")
-
-    def one(schema):
-        if group is not None:
-            sc.setJobGroup(group, desc, interruptOnCancel=True)
-        return validate_schema(validator, schema)
+    spark = validator.base.sparkSession
 
     # Pre-warm the validator's shared projection cache over the DISTINCT
     # clusters of all candidates before forking: candidate schemas share
@@ -267,8 +255,6 @@ def validate_schemas_concurrent(validator, schemas,
     all_cl = sorted({attrset(c) for s in schemas for c in s.clusters},
                     key=sorted)
     def warm(c):
-        if group is not None:
-            sc.setJobGroup(group, desc, interruptOnCancel=True)
         ent = ents[c]
         if ent["count"] is None:
             ent["count"] = ent["df"].count()
@@ -280,12 +266,9 @@ def validate_schemas_concurrent(validator, schemas,
     try:
         for c in all_cl:
             ents[c] = validator._acquire_proj(c)
-        with ThreadPoolExecutor(
-                max_workers=min(8, len(all_cl))) as pool:
-            list(pool.map(warm, all_cl))
-        with ThreadPoolExecutor(
-                max_workers=min(max_workers, len(schemas))) as pool:
-            return list(pool.map(one, schemas))
+        fanout(spark, warm, all_cl, 8)
+        return fanout(spark, lambda s: validate_schema(validator, s),
+                      schemas, 4)
     finally:
         for c in ents:
             validator._release_proj(c)

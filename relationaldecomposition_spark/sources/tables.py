@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.cost import plan_bytes
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
@@ -120,8 +122,9 @@ def compact_write(df: DataFrame, path: str,
     only job; the range partitioner's sampling pass is Spark-internal.
     """
     if n_files is None:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
+        est = plan_bytes(df)
+        if est is None:
+            raise ValueError("plan size estimate unavailable: pass n_files")
         n_files = max(1, -(-est // target_file_bytes))
     else:
         est = -1

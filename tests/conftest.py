@@ -10,6 +10,11 @@ from pyspark.sql import SparkSession
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running sweep (still part of the default run)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = (

@@ -90,7 +90,7 @@ def test_validate_schemas_concurrent_matches_sequential(denorm6):
             break
     v = DecompositionValidator(denorm6)
     seq = [validate_schema(v, s) for s in schemas]
-    conc = validate_schemas_concurrent(v, schemas, max_workers=3)
+    conc = validate_schemas_concurrent(v, schemas)
     assert [
         (i.spurious_tuples, i.largest_relation, i.total_tuples,
          i.total_cells) for i in conc] == [

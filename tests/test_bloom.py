@@ -8,6 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from relationaldecomposition_spark.engine.cost import plan_bytes
 from relationaldecomposition_spark.operators import bloom
 
 from conftest import SF_DIR, load
@@ -197,6 +198,36 @@ def test_probe_side_gate_picks_arrow_for_big_probe_sides(spark, li, small):
                                 m_bits=M_BITS, k=K,
                                 arrow_probe_min_bytes=None)
     assert sorted(r["l_orderkey"] for r in gated.select("l_orderkey")
+                  .collect()) == \
+        sorted(r["l_orderkey"] for r in lit.select("l_orderkey").collect())
+
+
+@pytest.mark.parametrize("delta, arrow", [(0, True), (1, False)])
+def test_probe_side_gate_direction_at_real_estimate(spark, li, small, delta,
+                                                    arrow):
+    """The gate compares the probe side's real plan estimate with >=: a
+    threshold equal to it picks the Arrow probe, one byte above it the
+    literal face."""
+    plan = bloom.bloom_semi_join(
+        li, "l_orderkey", small, "o_orderkey", m_bits=M_BITS, k=K,
+        arrow_probe_min_bytes=plan_bytes(li) + delta) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert ("ArrowEvalPython" in plan) is arrow
+
+
+def test_probe_side_gate_unknown_estimate_stays_literal(spark, li, small,
+                                                        monkeypatch):
+    """Unreachable plan stats (no ``_jdf`` under Spark Connect) keep the
+    literal face: the Arrow face broadcasts through a sparkContext."""
+    monkeypatch.setattr(bloom, "plan_bytes", lambda df: None)
+    got = bloom.bloom_semi_join(li, "l_orderkey", small, "o_orderkey",
+                                m_bits=M_BITS, k=K, arrow_probe_min_bytes=0)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    lit = bloom.bloom_semi_join(li, "l_orderkey", small, "o_orderkey",
+                                m_bits=M_BITS, k=K,
+                                arrow_probe_min_bytes=None)
+    assert sorted(r["l_orderkey"] for r in got.select("l_orderkey")
                   .collect()) == \
         sorted(r["l_orderkey"] for r in lit.select("l_orderkey").collect())
 

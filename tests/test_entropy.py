@@ -194,9 +194,9 @@ def test_cold_wide_chunk_clamped_to_16(spark):
     """ADVICE r14: a COLD chunk headed by a wide (non-singleton) set has
     no cached estimates, so the group budget can't bound it — the r14
     width raise (16 -> 32) must not double that blind chunk's working
-    set. The planner clamps cold wide-headed chunks to the old width 16;
-    once estimates exist (singles cached) chunks keep the full width,
-    bounded by the group budget instead."""
+    set. The planner admits at most 16 cold wide sets per chunk, also
+    behind a warm head; once estimates exist (singles cached) chunks keep
+    the full width, bounded by the group budget instead."""
     cols = [f"c{i}" for i in range(7)]
     # every column = the same 8-valued cycle: singleton H = 3 bits, so a
     # pair estimates min(6, log2 64) = 6 bits — never union-compact
@@ -211,6 +211,10 @@ def test_cold_wide_chunk_clamped_to_16(spark):
         assert len(wide) == 21 > 16
         # cold, wide-headed: clamped to the pre-r14 width
         assert len(eng._next_chunk(wide)) == 16
+        # warm head (c0, c1 cached), cold tail: still at most 16 cold sets
+        eng.preload({frozenset(("c0",)): 3.0, frozenset(("c1",)): 3.0})
+        assert wide[0] == frozenset(("c0", "c1"))
+        assert len(eng._next_chunk(wide)) == 1 + 16
         # warm the singleton estimates
         eng.entropies([frozenset((c,)) for c in cols])
         # warm chunk keeps the FULL raised width (21 sets fit under both

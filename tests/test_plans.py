@@ -230,6 +230,7 @@ def test_incremental_probes_broadcast_prune_the_index(spark):
     fix: previously incremental_dedup distinct'ed the ENTIRE index and
     semdedup_incremental rode the whole index through the cell shuffle on
     every ingest)."""
+    from relationaldecomposition_spark.engine.cost import plan_bytes
     from relationaldecomposition_spark.operators import dedup, ivf
 
     docs = spark.createDataFrame(
@@ -258,8 +259,8 @@ def test_incremental_probes_broadcast_prune_the_index(spark):
     # (mapInPandas) index has no stats — Catalyst's default estimate is
     # huge, so it still prunes: the safe direction.
     small_idx = spark.createDataFrame(idx.toPandas())
-    assert ivf._plan_size_bytes(small_idx) < ivf.PRUNE_MIN_INDEX_BYTES
+    assert plan_bytes(small_idx) < ivf.PRUNE_MIN_INDEX_BYTES
     p3 = plan_of(ivf.semdedup_incremental(newb, small_idx, "embedding",
                                           "vec_id", cents, 0.9))
     assert not re.search(r"LeftSemi", p3), p3
-    assert ivf._plan_size_bytes(idx) >= ivf.PRUNE_MIN_INDEX_BYTES
+    assert plan_bytes(idx) >= ivf.PRUNE_MIN_INDEX_BYTES

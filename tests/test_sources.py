@@ -134,9 +134,11 @@ def test_compact_write_file_count_and_clustering(spark, tmp_path):
     assert spark.read.parquet(out).count() == li.count()
 
 
-def test_compact_write_sizes_from_catalyst_estimate(spark, tmp_path):
+def test_compact_write_sizes_from_catalyst_estimate(spark, tmp_path,
+                                                   monkeypatch):
     import glob
 
+    from relationaldecomposition_spark.sources import tables
     from relationaldecomposition_spark.sources.tables import (
         compact_write, load_table)
 
@@ -146,6 +148,10 @@ def test_compact_write_sizes_from_catalyst_estimate(spark, tmp_path):
     stats = compact_write(li, out, target_file_bytes=1 << 30)
     assert stats["n_files"] == 1 and stats["est_bytes"] > 0
     assert len(glob.glob(out + "/part-*.parquet")) == 1
+    # no plan stats (e.g. Spark Connect): ask for n_files, don't guess
+    monkeypatch.setattr(tables, "plan_bytes", lambda df: None)
+    with pytest.raises(ValueError, match="n_files"):
+        compact_write(li, out, target_file_bytes=1 << 30)
 
 
 def test_zorder_key_matches_python_reference(spark):
