@@ -187,7 +187,7 @@ def build_queries(spark, sf_dir: str):
         # candidate validations are independent short-job chains — run
         # them concurrently (sequential 3x ~4.6 s of per-action
         # scheduling vs ~5 s total overlapped; see
-        # acyclic.validate_schemas_concurrent)
+        # DecompositionValidator.validate)
         candidates = list(itertools.islice(
             AcyclicSchemaEnumerator(tuple(denorm.columns),
                                     sorted(miner.mined_jds, key=str)), 3))

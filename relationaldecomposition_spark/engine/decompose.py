@@ -96,6 +96,8 @@ def _greedy_order(clusters: list[frozenset[str]]) -> list[frozenset[str]]:
     set when possible (message-passing order for connected join trees);
     falls back to the largest-overlap-first heuristic on ties."""
     remaining = list(clusters)
+    if not remaining:
+        return []
     # start with the largest cluster: biggest side stays un-broadcast first
     start = max(remaining, key=len)
     remaining.remove(start)
@@ -112,53 +114,21 @@ def _greedy_order(clusters: list[frozenset[str]]) -> list[frozenset[str]]:
 class DecompositionValidator:
     """Spurious-tuple counting for a set of clusters over one relation."""
 
-    def __init__(self, df: DataFrame, broadcast_max_rows: int = BROADCAST_MAX_ROWS):
+    def __init__(self, df: DataFrame):
         self.schema_cols = tuple(df.columns)
         # validation-path semantics: dedup the base once, keep it hot
         self.base = df.distinct().persist()
         self._num_tuples: int | None = None
-        self.broadcast_max_rows = broadcast_max_rows
         # refcounted cluster-projection cache shared across (possibly
-        # CONCURRENT) process_decomposition calls: candidate schemas
-        # routinely share clusters, and two threads persisting the same
-        # projection plan double-persist it (WARN CacheManager) and race
-        # its materialization (WARN BlockManager). Sharing the frame
-        # computes each distinct projection once; the refcount keeps the
-        # leak-free invariant (unpersist when the last user releases).
+        # CONCURRENT) validate calls: candidate schemas routinely share
+        # clusters, and two threads persisting the same projection plan
+        # double-persist it (WARN CacheManager) and race its
+        # materialization (WARN BlockManager). Sharing the frame computes
+        # each distinct projection once; the refcount keeps the leak-free
+        # invariant (unpersist when the last user releases). Entries are
+        # {"df", "refs", "count", "mlock"}.
         self._projs: dict[frozenset, dict] = {}
         self._plock = threading.Lock()
-
-    def _acquire_proj(self, c: frozenset) -> dict:
-        """Take a reference on cluster c's persisted projection entry
-        {"df", "refs", "count"} — create+persist on first use."""
-        with self._plock:
-            ent = self._projs.get(c)
-            if ent is None:
-                ent = {"df": project_cluster(self.base, c,
-                                             self.schema_cols).persist(),
-                       "refs": 0, "count": None,
-                       # serializes the FIRST materialization: two schema
-                       # validations sharing a cluster would otherwise
-                       # count the same persisted frame concurrently and
-                       # double-compute its partitions ("Block already
-                       # exists" BlockManager warnings, wasted work)
-                       "mlock": threading.Lock()}
-                self._projs[c] = ent
-            ent["refs"] += 1
-            return ent
-
-    def _release_proj(self, c: frozenset) -> None:
-        # unpersist INSIDE the lock: Spark's CacheManager keys entries by
-        # logical plan, so an unpersist issued after dropping the lock can
-        # race a concurrent _acquire_proj persisting an identical-plan
-        # frame and evict the fresh entry (recompute, perf-only). Blocking
-        # is false, so holding the lock across the call is cheap.
-        with self._plock:
-            ent = self._projs[c]
-            ent["refs"] -= 1
-            if ent["refs"] == 0:
-                del self._projs[c]
-                ent["df"].unpersist()
 
     @property
     def num_tuples(self) -> int:
@@ -169,85 +139,101 @@ class DecompositionValidator:
 
     # -- A13/A14 count fold ---------------------------------------------------
 
-    def process_decomposition(self, clusters, order: str = "greedy",
+    def process_decomposition(self, clusters,
                               should_stop=None) -> DecompositionInfo:
-        """Join-size counting fold (proccessDecomposition). Returns
-        DecompositionInfo with spurious_tuples = |⋈ projections| − |base|.
+        """Join-size counting fold (proccessDecomposition) of one cluster
+        set; see validate."""
+        return self.validate([clusters], should_stop)[0]
+
+    def validate(self, cluster_sets,
+                 should_stop=None) -> list[DecompositionInfo]:
+        """Validate several cluster sets (e.g. candidate schemas); returns
+        one DecompositionInfo per set, in input order, with spurious_tuples
+        = |⋈ projections| − |base|.
+
+        Each distinct projection across all sets is persisted and counted
+        once (8 counts at a time) and shared by every set naming it; the
+        sets' count folds then run 4 at a time. Single validations are
+        chains of short jobs whose cost is per-action scheduling latency,
+        so overlapping them is what makes candidate validation fast.
 
         ``should_stop``: optional callable polled between Spark actions —
         cancelJobGroup only kills in-flight jobs, so without this check a
-        canceled run would still launch the remaining fold joins."""
+        canceled run would still launch the remaining counts and folds."""
         stop = should_stop or (lambda: False)
-        cl = [attrset(c) for c in clusters]
-        info = DecompositionInfo()
-        if not cl:
-            return info
-        if order == "greedy":
-            cl = _greedy_order(cl)
-
-        counts: dict[frozenset[str], int] = {}
-        entries: dict[frozenset[str], dict] = {}
+        orders = [_greedy_order([attrset(c) for c in cs])
+                  for cs in cluster_sets]
+        spark = self.base.sparkSession
+        taken: dict[frozenset[str], dict] = {}
         # try/finally: a cancellation (DecompositionCanceled) or Spark failure
         # anywhere — including while building/persisting the projections
-        # themselves — must not leak persisted projections into executor
-        # storage; DecompositionService resubmits CANCELED/FAILED jobs, so a
-        # long-lived service would accumulate them. Projections come from
-        # the validator-level refcounted cache (shared with concurrent
-        # validations of schemas having clusters in common).
+        # themselves — must release exactly the references taken, or
+        # persisted projections leak into executor storage;
+        # DecompositionService resubmits CANCELED/FAILED jobs, so a
+        # long-lived service would accumulate them.
         try:
-            for c in cl:
-                entries[c] = self._acquire_proj(c)
-            projs = {c: e["df"] for c, e in entries.items()}
-            # materialize + count all projections concurrently: each count is
-            # an independent job over the cached base, so latency overlaps.
-            def count_one(c):
+            with self._plock:
+                for c in dict.fromkeys(c for cl in orders for c in cl):
+                    ent = self._projs.get(c)
+                    if ent is None:
+                        proj = project_cluster(self.base, c, self.schema_cols)
+                        ent = self._projs[c] = {
+                            "df": proj.persist(), "refs": 0, "count": None,
+                            # serializes the materializing count: concurrent
+                            # validations sharing the cluster wait and reuse
+                            # the cached blocks instead of re-computing them
+                            "mlock": threading.Lock()}
+                    ent["refs"] += 1
+                    taken[c] = ent
+
+            def count(c):
                 if stop():
                     raise DecompositionCanceled("canceled before projection count")
-                ent = entries[c]
-                if ent["count"] is not None:
-                    return ent["count"]
-                # double-checked per-entry lock: only ONE thread runs the
-                # materializing count; concurrent validations sharing the
-                # cluster wait and reuse the cached blocks instead of
-                # re-computing them (BlockManager "already exists" race)
+                ent = taken[c]
                 with ent["mlock"]:
-                    if ent["count"] is not None:
-                        return ent["count"]
-                    n = projs[c].count()
-                    ent["count"] = n
-                return n
+                    if ent["count"] is None:
+                        ent["count"] = ent["df"].count()
+                    return ent["count"]
 
-            ns = fanout(self.base.sparkSession, count_one, cl, 8)
-            for c, n in zip(cl, ns):
-                counts[c] = n
-                info.add(c, n)
+            counts = dict(zip(taken, fanout(spark, count, taken, 8)))
 
-            if stop():
-                raise DecompositionCanceled("canceled before final aggregate")
-            row = self._fold_total_frame(cl, counts, projs).first()
-            total = row["total"] or 0
+            def fold(cl):
+                info = DecompositionInfo()
+                if not cl:
+                    return info
+                for c in cl:
+                    info.add(c, counts[c])
+                if stop():
+                    raise DecompositionCanceled("canceled before final aggregate")
+                total = self._fold_total_frame(cl, counts, taken).first()["total"]
+                # read in the worker, so the first base count overlaps the
+                # other sets' folds
+                info.spurious_tuples = int(total or 0) - self.num_tuples
+                return info
+
+            return fanout(spark, fold, orders, 4)
         finally:
-            for c in entries:
-                self._release_proj(c)
-        info.spurious_tuples = int(total) - self.num_tuples
-        return info
+            # unpersist INSIDE the lock: Spark's CacheManager keys entries by
+            # logical plan, so an unpersist issued after dropping the lock
+            # could race a concurrent validate persisting an identical-plan
+            # frame and evict the fresh entry (recompute, perf-only).
+            # Blocking is false, so holding the lock across it is cheap.
+            with self._plock:
+                for c, ent in taken.items():
+                    ent["refs"] -= 1
+                    if ent["refs"] == 0:
+                        del self._projs[c]
+                        ent["df"].unpersist()
 
-    def _fold_total_frame(self, cl, counts, projs) -> DataFrame:
-        """The LAZY join-size fold: a single-row DataFrame with column
-        ``total`` = |⋈ projections| for the (already greedy-ordered)
-        cluster list. Extracted from process_decomposition so callers
-        validating SEVERAL candidate schemas can union the per-schema
-        totals into ONE Spark action (validate_schemas_concurrent): the
-        fold is join/agg plan construction only — no action — and on
-        tiny-per-action workloads the scheduling latency of one action
-        per candidate dominated wall time (the spurious_fold floor note
-        in bench.py)."""
+    def _fold_total_frame(self, cl, counts, entries) -> DataFrame:
+        """The lazy join-size fold of a greedy-ordered cluster list: a
+        single-row DataFrame whose column ``total`` = |⋈ projections|."""
         acc_attrs = cl[0]
-        acc = projs[cl[0]]
+        acc = entries[cl[0]]["df"]
         acc_count = counts[cl[0]]
         for i in range(1, len(cl)):
             c2 = cl[i]
-            p2 = projs[c2].withColumnRenamed("cnt", "cnt_r")
+            p2 = entries[c2]["df"].withColumnRenamed("cnt", "cnt_r")
             join_cols = sorted_cols(acc_attrs & c2, self.schema_cols)
             new_attrs = acc_attrs | c2
             # attributes still needed: anything a remaining cluster mentions
@@ -255,9 +241,9 @@ class DecompositionValidator:
             group_cols = sorted_cols(needed & new_attrs, self.schema_cols)
 
             left, right = acc, p2
-            if counts[c2] <= self.broadcast_max_rows:
+            if counts[c2] <= BROADCAST_MAX_ROWS:
                 right = F.broadcast(right)
-            elif acc_count <= self.broadcast_max_rows:
+            elif acc_count <= BROADCAST_MAX_ROWS:
                 left = F.broadcast(left)
             joined = (left.join(right, on=join_cols) if join_cols
                       else left.crossJoin(right))
@@ -270,7 +256,7 @@ class DecompositionValidator:
             # after the group-by the running count is unknown; disable
             # count-based broadcast of the accumulator from here on (AQE
             # still upgrades it at runtime if it turns out small)
-            acc_count = self.broadcast_max_rows + 1
+            acc_count = BROADCAST_MAX_ROWS + 1
         return acc.agg(F.sum("cnt").alias("total"))
 
     # -- A15 naive oracle -----------------------------------------------------
@@ -365,28 +351,3 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
         return fanout(spark, write_one, enumerate(clusters), 4)
     finally:
         base.unpersist()
-
-
-def write_decomposition(df: DataFrame, clusters, base_path: str,
-                        fmt: str = "parquet") -> dict[str, int]:
-    """The ETL deliverable: materialize each cluster projection as a table
-    (normalization as a schema transformation). Returns {path: row_count}.
-
-    Each output is a distinct projection — one shuffle per cluster — written
-    columnar so downstream reads prune and push down.
-    """
-    base = df.distinct().persist()
-    out: dict[str, int] = {}
-    try:
-        for i, cluster in enumerate(clusters):
-            cols = sorted_cols(attrset(cluster), df.columns)
-            # persist so the count doesn't recompute the distinct projection
-            # the write just materialized
-            proj = base.select(*cols).distinct().persist()
-            path = f"{base_path}/cluster_{i:03d}"
-            proj.write.mode("overwrite").format(fmt).save(path)
-            out[path] = proj.count()
-            proj.unpersist()
-    finally:
-        base.unpersist()
-    return out

@@ -45,7 +45,6 @@ from collections.abc import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
-from .fanout import fanout
 
 
 class MiningCancelled(RuntimeError):
@@ -207,16 +206,12 @@ class SparkEntropyEngine:
 
     # ----- batched entropies (A8) -------------------------------------------
 
-    def entropies(self, subsets: Iterable[Iterable[str]],
-                  strategy: str = "grouping_sets") -> dict[frozenset[str], float]:
+    def entropies(self, subsets: Iterable[Iterable[str]]) -> dict[frozenset[str], float]:
         """Compute H(X) for many subsets; returns {frozenset: H}.
 
-        strategy='grouping_sets': chunks of <= max_grouping_sets subsets per
-        Spark job via GROUP BY GROUPING SETS — one scan + one shuffle per
-        chunk regardless of subset count.
-        strategy='concurrent': one groupBy job per subset submitted from a
-        thread pool against the persisted input — wins when subsets are few
-        and wide (grouping-set row replication would dominate).
+        Uncached subsets are computed in chunks of <= max_grouping_sets
+        subsets per Spark job via GROUP BY GROUPING SETS — one scan + one
+        shuffle per chunk regardless of subset count.
         """
         wanted = [attrset(s) for s in subsets]
         pending = [x for x in dict.fromkeys(wanted) if x]
@@ -238,24 +233,20 @@ class SparkEntropyEngine:
                         self._inflight[x] = batch_ev
             if todo:
                 try:
-                    if strategy == "concurrent":
-                        self._batch_concurrent(todo)
-                    else:
-                        # smallest subsets first: the singles chunk runs
-                        # before wider sets, so its entropies seed the
-                        # perplexity estimates that unlock pre-aggregation
-                        # and cost-budgeting for every later chunk (chunks
-                        # are planned LAZILY against the live cache)
-                        remaining = sorted(todo, key=len)
-                        while remaining:
-                            if self.stop_check is not None and self.stop_check():
-                                raise MiningCancelled(
-                                    "entropy batch cancelled by stop flag")
-                            chunk = self._next_chunk(remaining)
-                            taken = set(chunk)  # subsequence, not prefix
-                            remaining = [x for x in remaining
-                                         if x not in taken]
-                            self._batch_grouping_sets(chunk)
+                    # smallest subsets first: the singles chunk runs before
+                    # wider sets, so its entropies seed the perplexity
+                    # estimates that unlock pre-aggregation and
+                    # cost-budgeting for every later chunk (chunks are
+                    # planned LAZILY against the live cache)
+                    remaining = sorted(todo, key=len)
+                    while remaining:
+                        if self.stop_check is not None and self.stop_check():
+                            raise MiningCancelled(
+                                "entropy batch cancelled by stop flag")
+                        chunk = self._next_chunk(remaining)
+                        taken = set(chunk)  # subsequence, not prefix
+                        remaining = [x for x in remaining if x not in taken]
+                        self._batch_grouping_sets(chunk)
                 finally:
                     # always release waiters, even on failure/cancel — they
                     # re-check the cache and recompute what's still missing
@@ -596,20 +587,6 @@ class SparkEntropyEngine:
             with self._lock:
                 self._cube_inflight.pop(key, None)
             ev.set()
-
-    def _batch_concurrent(self, subsets: list[frozenset[str]]) -> None:
-        _ = self.num_rows  # materialize before fan-out
-
-        def compute(x):
-            if self.stop_check is not None and self.stop_check():
-                raise MiningCancelled(
-                    "entropy batch cancelled by stop flag")
-            return self._compute_single(x)
-
-        results = fanout(self.df.sparkSession, compute, subsets, 8)
-        with self._lock:
-            for x, h in zip(subsets, results):
-                self._cache[x] = h
 
     # ----- cache management -------------------------------------------------
 

@@ -9,8 +9,9 @@ JD-incompatibility graph) and `search/AcyclicSchemaEnumerator.java:40-133`
 (BFS enumeration of maximal independent sets = acyclic schemas).
 
 The data-plane validation of an enumerated schema (spurious-tuple count over
-its join-tree clusters) lives in engine/decompose.py; ``validate_schema``
-here just bridges the two.
+its join-tree clusters) is ``DecompositionValidator.validate`` in
+engine/decompose.py; ``validate_schema`` and ``validate_schemas_concurrent``
+here just bridge the two.
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from collections import deque
 from dataclasses import dataclass, field
 
 from ..core.deps import JD
-from ..engine.fanout import fanout
 
 
 # ---------------------------------------------------------------------------
@@ -219,56 +219,16 @@ def validate_schema(validator, schema: AcyclicSchema):
     """Bridge to the data plane: spurious-tuple count for the schema's
     join-tree clusters (the per-schema SQLite job of
     `search/AcyclicSchemaEnumerator.java:309-552` step 5, on Spark)."""
-    if not schema.clusters:
-        schema.build_join_tree()
-    return validator.process_decomposition(schema.clusters)
+    return validate_schemas_concurrent(validator, [schema])[0]
 
 
 def validate_schemas_concurrent(validator, schemas) -> list:
-    """validate_schema over several CANDIDATE schemas concurrently (4 at a
-    time), preserving input order in the returned DecompositionInfo list.
-
-    A single validation is ~8 short Spark jobs whose steady-state cost is
-    per-action scheduling latency, not cluster load (the spurious_fold
-    floor note in bench.py), so independent candidates overlap almost
-    perfectly — 3 sequential validations of the sf0.1 denorm measure
-    ~14 s vs ~5 s concurrent. Thread-safety: the validator's shared state
-    is the immutable persisted base plus a lazily-counted num_tuples
-    (concurrent first reads both run the same count and store the same
-    int — benign)."""
+    """validate_schema over several CANDIDATE schemas in one
+    ``DecompositionValidator.validate`` call, which counts the clusters
+    they share once and overlaps their folds; returns the
+    DecompositionInfo list in input order."""
     schemas = list(schemas)
-    if not schemas:
-        return []
-    spark = validator.base.sparkSession
-
-    # Pre-warm the validator's shared projection cache over the DISTINCT
-    # clusters of all candidates before forking: candidate schemas share
-    # clusters, and without this two validations would race the same
-    # projection's first materialization (WARN BlockManager duplicate
-    # blocks). Warming counts each distinct projection exactly once; the
-    # validations below then hit the memoized frames/counts.
-    from ..core.attrset import attrset
-
     for s in schemas:
         if not s.clusters:
             s.build_join_tree()
-    all_cl = sorted({attrset(c) for s in schemas for c in s.clusters},
-                    key=sorted)
-    def warm(c):
-        ent = ents[c]
-        if ent["count"] is None:
-            ent["count"] = ent["df"].count()
-
-    # acquire inside the try so a partway failure (e.g. persist raising)
-    # still releases exactly the refs actually taken — acquiring in a
-    # comprehension before the try leaked every prior ref until close()
-    ents: dict = {}
-    try:
-        for c in all_cl:
-            ents[c] = validator._acquire_proj(c)
-        fanout(spark, warm, all_cl, 8)
-        return fanout(spark, lambda s: validate_schema(validator, s),
-                      schemas, 4)
-    finally:
-        for c in ents:
-            validator._release_proj(c)
+    return validator.validate([s.clusters for s in schemas])

@@ -2,10 +2,13 @@
 dual-algorithm test: SmallDBInMemory.main runs testDecomposition and
 spuritousTuples on the same clusters and compares)."""
 
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 from relationaldecomposition_spark.engine.decompose import (
-    DecompositionValidator, write_decomposition)
+    DecompositionCanceled, DecompositionValidator)
 from tests.conftest import load
 
 
@@ -66,9 +69,9 @@ def test_duplicate_rows_are_dedupped_first(spark):
     v.close()
 
 
-def test_single_cluster_and_given_order(denorm):
+def test_single_cluster(denorm):
     v = DecompositionValidator(denorm)
-    info = v.process_decomposition([["c_custkey", "c_nationkey"]], order="given")
+    info = v.process_decomposition([["c_custkey", "c_nationkey"]])
     # single cluster: join size is the projection size
     assert info.spurious_tuples == info.total_tuples - v.num_tuples
     v.close()
@@ -85,11 +88,74 @@ def test_disconnected_clusters_cartesian(spark):
     v.close()
 
 
-def test_write_decomposition(denorm, tmp_path):
-    out = write_decomposition(denorm, GOOD, str(tmp_path / "decomp"))
-    assert len(out) == 3
-    spark = denorm.sparkSession
-    # re-joining the written tables reconstructs the base exactly
-    dfs = [spark.read.parquet(p) for p in out]
-    rejoined = dfs[0].join(dfs[1], "c_nationkey").join(dfs[2], "n_regionkey")
-    assert rejoined.distinct().count() == denorm.distinct().count()
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture
+def warm_validator(denorm):
+    """A validator whose persisted base is already materialized, so the
+    persistent-RDD count moves only with projection persists."""
+    v = DecompositionValidator(denorm)
+    assert v.num_tuples > 0
+    yield v
+    v.close()
+
+
+def test_validate_releases_projections_on_return(spark, warm_validator):
+    v = warm_validator
+    # the two sets share the ["n_regionkey", "r_name"] cluster
+    merged = [GOOD[0] + GOOD[1], GOOD[2]]
+    before = _persisted(spark)
+    good, other = v.validate([GOOD, merged])
+    assert good.spurious_tuples == 0 and other.spurious_tuples == 0
+    shared = ("n_regionkey", "r_name")
+    assert good.cluster_sizes[shared] == other.cluster_sizes[shared]
+    assert v._projs == {}
+    assert _persisted(spark) == before
+
+
+def test_validate_releases_projections_on_cancel(spark, warm_validator):
+    v = warm_validator
+    before = _persisted(spark)
+
+    def counted_one():
+        return any(e["count"] is not None for e in list(v._projs.values()))
+
+    with pytest.raises(DecompositionCanceled):
+        v.validate([GOOD, BAD], should_stop=counted_one)
+    assert v._projs == {}
+    assert _persisted(spark) == before
+    # nothing stale is left behind: the next validation is exact
+    assert v.process_decomposition(GOOD).spurious_tuples == 0
+
+
+def test_validate_releases_projections_on_unknown_column(spark, warm_validator):
+    v = warm_validator
+    before = _persisted(spark)
+    # GOOD's projections are taken before the unknown column is reached
+    with pytest.raises(ValueError, match="unknown column"):
+        v.validate([GOOD, [["c_custkey", "no_such_column"]]])
+    assert v._projs == {}
+    assert _persisted(spark) == before
+
+
+def test_concurrent_validates_share_and_release(spark, warm_validator):
+    """More callers than cores validating overlapping sets on one
+    validator: every caller gets exact counts and the refcounted
+    projection cache ends empty (a lost refcount update would leave an
+    entry behind or unpersist one still in use)."""
+    v = warm_validator
+    sets = [GOOD, [GOOD[0] + GOOD[1], GOOD[2]]]
+    before = _persisted(spark)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(6) as pool:
+            futures = [pool.submit(v.validate, sets) for _ in range(6)]
+            results = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert all([i.spurious_tuples for i in r] == [0, 0] for r in results)
+    assert v._projs == {}
+    assert _persisted(spark) == before

@@ -91,16 +91,6 @@ def test_batched_appearance_order_differs_from_schema(tiny):
     eng.unpersist()
 
 
-def test_concurrent_strategy(tiny):
-    df, data = tiny
-    eng = SparkEntropyEngine(df)
-    got = eng.entropies([["u"], ["v"], ["u", "w"]], strategy="concurrent")
-    for s, h in got.items():
-        idxs = [df.columns.index(c) for c in s]
-        assert h == pytest.approx(oracle_entropy(data, idxs), abs=1e-9)
-    eng.unpersist()
-
-
 def test_all_entropies_cube_matches_singles(tiny):
     df, data = tiny
     cols = df.columns
