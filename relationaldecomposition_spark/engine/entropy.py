@@ -20,8 +20,11 @@ Batching (A8, `ExternalFileDataSet.computeEntropies:111-166` — one scan
 feeding many count maps) maps to SQL ``GROUP BY GROUPING SETS``: one scan +
 one shuffle computes every subset's histogram, with ``grouping_id()``
 separating subsets. Each grouping set replicates every input row once into
-the shuffle, so batch width is capped (default 16 sets/job — the analogue of
-MasterCompressedDB's RangeSize bound) and large requests are chunked.
+the shuffle, so batch width is capped (default 32 sets/job, at most 16 of
+them wide and without a cached estimate — the analogue of
+MasterCompressedDB's RangeSize bound) and large requests are chunked. The
+A11 lattice (``GROUP BY CUBE``) is the same grouping-sets job over every
+subset.
 
 Scale notes (100 TB):
 - Entropy is algebraic: sum(c*log2(c)) over a group-by — partial aggregation
@@ -42,7 +45,7 @@ import time
 import uuid
 from collections.abc import Callable, Iterable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..core.attrset import attrset, sorted_cols
 
@@ -120,14 +123,10 @@ class SparkEntropyEngine:
         # ones). Raising (not returning partial results) keeps measure
         # semantics intact; the runner's worker thread dies on it.
         self.stop_check: Callable[[], bool] | None = None
-        # in-flight dedup: subset -> Event set when its batch lands in the
-        # cache; concurrent miner threads wait instead of recomputing
+        # in-flight dedup: subset -> Event set when its batch (or lattice)
+        # job lands in the cache; concurrent threads wait instead of
+        # recomputing
         self._inflight: dict[frozenset[str], threading.Event] = {}
-        # column sets whose full subset lattice is already cached (A11 CUBE)
-        self._cubes_done: set[frozenset[str]] = set()
-        # in-flight CUBE jobs: key -> Event, so two threads asking for the
-        # same lattice don't both run the 2^n job
-        self._cube_inflight: dict[frozenset[str], threading.Event] = {}
         self._num_rows: int | None = None
         self._num_distinct: int | None = None
         # Stats mirroring the reference's scan instrumentation
@@ -192,18 +191,6 @@ class SparkEntropyEngine:
             self.scan_seconds += seconds
             self.tuples_processed += tuples
 
-    def _compute_single(self, x: frozenset[str]) -> float:
-        cols = sorted_cols(x, self.schema_cols)
-        n = self.num_rows
-        gb = self.df.groupBy(*cols).agg(F.count(F.lit(1)).alias("cnt"))
-        t0 = time.monotonic()
-        row = gb.agg(
-            F.sum(F.col("cnt") * F.log2("cnt")).alias("clogc")
-        ).first()
-        self._note_job(time.monotonic() - t0, n, 1)
-        clogc = row["clogc"] or 0.0
-        return math.log2(n) - clogc / n if n > 0 else 0.0
-
     # ----- batched entropies (A8) -------------------------------------------
 
     def entropies(self, subsets: Iterable[Iterable[str]]) -> dict[frozenset[str], float]:
@@ -214,7 +201,17 @@ class SparkEntropyEngine:
         shuffle per chunk regardless of subset count.
         """
         wanted = [attrset(s) for s in subsets]
-        pending = [x for x in dict.fromkeys(wanted) if x]
+        self._claim_and_run(wanted, self._run_chunked)
+        return {x: (0.0 if not x else self._cache[x]) for x in wanted}
+
+    def _claim_and_run(self, subsets: Iterable[frozenset[str]],
+                       run: Callable[[list[frozenset[str]]], None]) -> None:
+        """Bring every non-empty subset into the cache: claim the ones that
+        are neither cached nor in flight, compute them with ``run(claimed)``
+        (which must cache them), and wait on the threads computing the
+        rest. Claims are released even on failure or cancel; waiters then
+        re-check the cache and claim whatever is still missing."""
+        pending = [x for x in dict.fromkeys(subsets) if x]
         while pending:
             todo: list[frozenset[str]] = []
             waits: list[threading.Event] = []
@@ -233,23 +230,8 @@ class SparkEntropyEngine:
                         self._inflight[x] = batch_ev
             if todo:
                 try:
-                    # smallest subsets first: the singles chunk runs before
-                    # wider sets, so its entropies seed the perplexity
-                    # estimates that unlock pre-aggregation and
-                    # cost-budgeting for every later chunk (chunks are
-                    # planned LAZILY against the live cache)
-                    remaining = sorted(todo, key=len)
-                    while remaining:
-                        if self.stop_check is not None and self.stop_check():
-                            raise MiningCancelled(
-                                "entropy batch cancelled by stop flag")
-                        chunk = self._next_chunk(remaining)
-                        taken = set(chunk)  # subsequence, not prefix
-                        remaining = [x for x in remaining if x not in taken]
-                        self._batch_grouping_sets(chunk)
+                    run(todo)
                 finally:
-                    # always release waiters, even on failure/cancel — they
-                    # re-check the cache and recompute what's still missing
                     with self._lock:
                         for x in todo:
                             self._inflight.pop(x, None)
@@ -260,7 +242,20 @@ class SparkEntropyEngine:
                 pending = [x for x in pending if x not in self._cache]
             if pending and not todo and not waits:  # pragma: no cover
                 raise RuntimeError("entropy batch made no progress")
-        return {x: (0.0 if not x else self._cache[x]) for x in wanted}
+
+    def _run_chunked(self, todo: list[frozenset[str]]) -> None:
+        # smallest subsets first: the singles chunk runs before wider sets,
+        # so its entropies seed the perplexity estimates that unlock
+        # pre-aggregation and cost-budgeting for every later chunk (chunks
+        # are planned LAZILY against the live cache)
+        remaining = sorted(todo, key=len)
+        while remaining:
+            if self.stop_check is not None and self.stop_check():
+                raise MiningCancelled("entropy batch cancelled by stop flag")
+            chunk = self._next_chunk(remaining)
+            taken = set(chunk)  # subsequence, not prefix
+            remaining = [x for x in remaining if x not in taken]
+            self._batch_grouping_sets(chunk)
 
     def _est_log2_groups(self, x: frozenset[str]) -> float | None:
         """Cache-derived upper bound on log2(#groups of X), or None when the
@@ -364,15 +359,10 @@ class SparkEntropyEngine:
         return cur
 
     def _batch_grouping_sets(self, subsets: list[frozenset[str]]) -> None:
-        if len(subsets) == 1:
-            # run the Spark job OUTSIDE the lock: concurrent miner threads
-            # must not serialize behind a blocking job (they only need the
-            # lock for the cache store itself)
-            x = subsets[0]
-            h = self._compute_single(x)
-            with self._lock:
-                self._cache[x] = h
-            return
+        """The one entropy job: H(X) for every X in ``subsets`` from one scan
+        and one GROUP BY GROUPING SETS shuffle, stored in the cache. Runs
+        outside the lock: concurrent threads must not serialize behind a
+        blocking job (they only need the lock for the cache store)."""
         union_cols: list[str] = []
         seen_cols: set[str] = set()
         for x in subsets:
@@ -423,9 +413,10 @@ class SparkEntropyEngine:
         # grouping() flags that build gid are unaffected). Conservative by
         # construction: cold caches or wide unions (est ~ log2 N) keep the
         # direct path, and a wrong estimate costs one extra aggregation,
-        # never correctness. Gate factor 8 = require est G <= N/8.
+        # never correctness. Gate factor 8 = require est G <= N/8. A single
+        # set replicates nothing, so it never pre-aggregates.
         est_union = self._est_log2_groups(frozenset(union_cols))
-        pre_agg = (est_union is not None and n > 0
+        pre_agg = (len(subsets) > 1 and est_union is not None and n > 0
                    and (2.0 ** est_union) * 8.0 <= n)
         with self._stats_lock:
             if pre_agg:
@@ -460,11 +451,10 @@ class SparkEntropyEngine:
                 continue  # duplicate-set gid collision impossible; ignore strays
             clogc = r["clogc"] or 0.0
             got[x] = math.log2(n) - clogc / n if n > 0 else 0.0
-        missing = [x for x in subsets if x not in got]
-        # A grouping set over an empty relation yields no rows; only possible
-        # when n == 0 — define H = 0 there.
-        for x in missing:
-            got[x] = 0.0 if n == 0 else self._compute_single(x)
+        # a grouping set over a non-empty input always yields a row; over an
+        # empty relation it yields none — define H = 0 there
+        for x in subsets:
+            got.setdefault(x, 0.0)
         with self._lock:
             self._cache.update(got)
         with self._stats_lock:
@@ -489,39 +479,6 @@ class SparkEntropyEngine:
             return frozenset(c for c in cols
                              if self._cache[frozenset((c,))] == logn)
 
-    def _cube_job(self, cols: list[str]) -> dict[frozenset[str], float]:
-        """One CUBE scan+shuffle computing H(X) for every subset of `cols`.
-        No memoization — callers coordinate."""
-        n = self.num_rows
-        out: dict[frozenset[str], float] = {frozenset(): 0.0}
-        if not cols or n == 0:
-            return out
-        quoted = ", ".join(f"`{c}`" for c in cols)
-        # explicit grouping(col) flags, same rationale as _batch_grouping_sets
-        gid_expr = " + ".join(
-            f"(cast(grouping(`{c}`) as bigint) * {1 << (len(cols) - 1 - i)})"
-            for i, c in enumerate(cols))
-        view = f"__rd_cube_{uuid.uuid4().hex[:12]}"
-        self.df.createOrReplaceTempView(view)
-        t0 = time.monotonic()
-        try:
-            rows = self.df.sparkSession.sql(
-                f"SELECT gid, sum(cnt * log2(cnt)) AS clogc FROM "
-                f"(SELECT ({gid_expr}) AS gid, count(1) AS cnt FROM {view} "
-                f" GROUP BY CUBE ({quoted})) GROUP BY gid"
-            ).collect()
-        finally:
-            self.df.sparkSession.catalog.dropTempView(view)
-        self._note_job(time.monotonic() - t0, n * (1 << len(cols)), 0)
-        for r in rows:
-            gid = r["gid"]
-            # bit i (MSB-first over cols) set => column aggregated away
-            x = frozenset(c for i, c in enumerate(cols)
-                          if not (gid >> (len(cols) - 1 - i)) & 1)
-            clogc = r["clogc"] or 0.0
-            out[x] = math.log2(n) - clogc / n
-        return out
-
     def all_entropies(self, cols: Iterable[str] | None = None) -> dict[frozenset[str], float]:
         """A11: eagerly materialize H(X) for EVERY subset of `cols` — the
         analogue of the reference's level-wise computeAllEntropies
@@ -531,13 +488,23 @@ class SparkEntropyEngine:
         Key-column shortcut: H(S) = log2(N) exactly for any S containing a
         unique-key column (all groups stay size 1 under refinement), so the
         singletons are computed first (one cheap chunked job), key columns
-        detected by exact float equality (see ``key_columns``), and the CUBE
-        runs only over the non-key columns. Every key-containing subset is
-        filled algebraically. For a relation with k key columns this cuts
-        the CUBE's row replication from 2^n to 2^(n-k) per input row AND
-        removes precisely the grouping sets whose group count equals N (the
-        ones hash aggregation cannot reduce) from the shuffle — measured 4x
-        on the sf1 denorm, where half the lattice contains c_custkey/c_name.
+        detected by exact float equality (see ``key_columns``), and the
+        lattice job covers only the non-key columns. Every key-containing
+        subset is filled algebraically. For a relation with k key columns
+        this cuts the job's row replication from 2^n to 2^(n-k) per input
+        row AND removes precisely the grouping sets whose group count
+        equals N (the ones hash aggregation cannot reduce) from the shuffle
+        — measured 4x on the sf1 denorm, where half the lattice contains
+        c_custkey/c_name.
+
+        The lattice job is ONE ``_batch_grouping_sets`` call over every
+        subset of the non-key columns, the empty set included: that is
+        what ``GROUP BY CUBE`` expands to, and Catalyst plans both as the
+        same Expand + aggregate. It bypasses ``_next_chunk`` — the group
+        budget would split it into many jobs. The whole lattice is claimed
+        in ``_inflight`` first, so a concurrent ``entropies()`` caller
+        waits on the running job instead of recomputing, and a second call
+        finds everything cached and runs nothing.
 
         Scale: row replication is 2^(n-k) per input row — only sane for
         n-k <= ~12 low-cardinality columns (the reference's use case:
@@ -547,46 +514,27 @@ class SparkEntropyEngine:
         if len(cols) > 20:
             raise ValueError(f"cube over {len(cols)} columns would replicate "
                              f"rows 2^{len(cols)}x; use entropies() instead")
-        key = frozenset(cols)
-        # coordinate with concurrent callers via the same Event pattern as
-        # entropies(): only one thread runs the 2^n CUBE job, the rest wait
-        while True:
-            with self._lock:
-                if key in self._cubes_done:  # memoized: serve the whole lattice
-                    return {x: self._cache[x]
-                            for x in map(frozenset, _powerset(cols))}
-                ev = self._cube_inflight.get(key)
-                if ev is None:
-                    ev = threading.Event()
-                    self._cube_inflight[key] = ev
-                    break
-            ev.wait()
-        try:
-            n = self.num_rows
-            if n == 0:
-                out = {frozenset(s): 0.0 for s in _powerset(cols)}
-            else:
-                keycols = self.key_columns(cols)
-                rest = [c for c in cols if c not in keycols]
-                out = self._cube_job(rest)
-                if keycols:
-                    logn = math.log2(n)
-                    for s in _powerset(cols):
-                        fs = frozenset(s)
-                        if fs & keycols:
-                            out[fs] = logn
-            with self._lock:
-                self._cache.update(out)
-                self._cubes_done.add(key)
-            with self._stats_lock:
-                self.entropies_computed += len(out)
-            return out
-        finally:
-            # release waiters even on failure/cancel; they re-check
-            # _cubes_done and, if the job failed, one of them retries
-            with self._lock:
-                self._cube_inflight.pop(key, None)
-            ev.set()
+        # key detection runs before the claim: it computes the singles via
+        # entropies(), which would otherwise wait on this thread's own claim
+        keycols = self.key_columns(cols)
+        rest = [c for c in cols if c not in keycols]
+        lattice = [frozenset(s) for s in _powerset(cols)]
+
+        def run(_claimed):
+            if rest:
+                self._batch_grouping_sets(
+                    [frozenset(s) for s in _powerset(rest)])
+            if keycols:
+                logn = math.log2(self.num_rows)
+                filled = {x: logn for x in lattice if x & keycols}
+                with self._lock:
+                    self._cache.update(filled)
+                with self._stats_lock:
+                    self.entropies_computed += len(filled)
+
+        self._claim_and_run(lattice, run)
+        with self._lock:
+            return {x: (0.0 if not x else self._cache[x]) for x in lattice}
 
     # ----- cache management -------------------------------------------------
 

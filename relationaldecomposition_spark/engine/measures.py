@@ -12,18 +12,16 @@ Reference semantics kept verbatim:
 - H(R) ("total entropy") in the reference is log2(num_rows)
   (`AbstractDataset.getTotalEntropy:203-207`) — correct only for
   duplicate-free relations; on duplicated rows it overstates H(R) and MVD/JD
-  measures go negative (violating I(Y;Z|X) >= 0). We default to
-  ``honest_total=True`` — compute H(R) by group-by over all columns — which
-  equals the reference's value exactly on duplicate-free inputs and is the
-  mathematically correct generalization otherwise. Pass False for the
-  reference's literal shortcut.
+  measures go negative (violating I(Y;Z|X) >= 0). We compute H(R) by
+  group-by over all columns, which equals the reference's value exactly on
+  duplicate-free inputs and is the mathematically correct generalization
+  otherwise.
 - MVD with X ∪ Y = R degenerates to H(R) - H(X)
   (`AbstractDataset.computeMVD:222-228`).
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterable, Sequence
 
 from ..core.attrset import attrset
@@ -38,10 +36,9 @@ def _clamp(x: float) -> float:
 class MeasureEngine:
     """FD/MVD/JD measures over one relation (the IDataset measure surface)."""
 
-    def __init__(self, engine: SparkEntropyEngine, honest_total: bool = True):
+    def __init__(self, engine: SparkEntropyEngine):
         self.engine = engine
         self.schema_cols = engine.schema_cols
-        self.honest_total = honest_total
         self._total: float | None = None
 
     # -- H(R) ---------------------------------------------------------------
@@ -49,11 +46,7 @@ class MeasureEngine:
     @property
     def total_entropy(self) -> float:
         if self._total is None:
-            if self.honest_total:
-                self._total = self.engine.entropy(self.schema_cols)
-            else:
-                n = self.engine.num_rows
-                self._total = math.log2(n) if n > 0 else 0.0
+            self._total = self.engine.entropy(self.schema_cols)
         return self._total
 
     # -- measures (A18-A20) ---------------------------------------------------

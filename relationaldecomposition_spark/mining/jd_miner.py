@@ -13,7 +13,7 @@ Pieces and their reference counterparts:
                                  :498-600): repeatedly merge component pairs
                                  with I > eps; fail if X,Y land together or
                                  one component remains
-- mine JDs with given lhs       (mineAllJDsWithLHS{DFS,BFS}, :320-496):
+- mine JDs with given lhs       (mineAllJDsWithLHSBFS, :395-449):
                                  search over component merges for JDs with
                                  measure <= eps, pruning via the
                                  (k-2)*eps bound, X,Y never merged
@@ -38,36 +38,31 @@ from ..engine.fanout import fanout
 from ..engine.measures import MeasureEngine
 
 
+# eager all-entropies budget: when rows * 2^(n-k) <= EAGER_CELLS, ONE lattice
+# job (A11, the reference's computeAllEntropies) materializes every subset
+# entropy and the whole search runs from cache
+EAGER_CELLS = 100_000_000
+# attribute pairs mined concurrently by init_min_seps and mine_all_min_seps
+PAIR_WIDTH = 8
+
+
 def is_greater_than_eps(measure: float, alpha: float) -> bool:
     return (measure - alpha) > MEASURE_ACCURACY
 
 
 class JDMiner:
-    """``max_parallel_pairs``: attribute pairs are mined concurrently from a
-    thread pool (the FAIR scheduler overlaps their small Spark jobs — the
-    mining is job-latency-bound, not data-bound). Per-pair results are
-    independent and merged deterministically, so the mined set is identical
-    to a sequential run (pinned by test); 1 disables concurrency."""
+    """Attribute pairs are mined concurrently, ``PAIR_WIDTH`` at a time (the
+    FAIR scheduler overlaps their small Spark jobs — the mining is
+    job-latency-bound, not data-bound). Per-pair results are independent
+    and merged deterministically, so the mined set is identical to a
+    sequential run (pinned by test)."""
 
-    def __init__(self, meng: MeasureEngine, epsilon: float,
-                 stop_flag=None, max_parallel_pairs: int = 8,
-                 eager_cells: int = 100_000_000, search: str = "bfs"):
-        if search not in ("bfs", "dfs"):
-            raise ValueError(f"search must be 'bfs' or 'dfs', got {search!r}")
+    def __init__(self, meng: MeasureEngine, epsilon: float, stop_flag=None):
         self.meng = meng
         self.eng = meng.engine
         self.epsilon = epsilon
         self.schema = list(meng.schema_cols)
         self.full = frozenset(self.schema)
-        self.max_parallel_pairs = max(1, max_parallel_pairs)
-        # B8 traversal order: the reference ships BOTH a BFS and a stack-DFS
-        # with resume indices over the same merge graph and prunes — we keep
-        # them as mutual cross-checks (tests assert identical mined sets)
-        self.search = search
-        # eager all-entropies budget: when rows * 2^n <= eager_cells, ONE
-        # CUBE job (A11, the reference's computeAllEntropies) materializes
-        # every subset entropy and the whole search runs from cache
-        self.eager_cells = eager_cells
         # results
         self.min_pairwise_seps: dict[tuple[str, str], set[frozenset[str]]] = {}
         self.mined_min_seps: set[frozenset[str]] = set()
@@ -138,84 +133,15 @@ class JDMiner:
             return None
         return JD(lhs, frozenset(comps))
 
-    def consistent_jd_candidate_cc(self, lhs, start: JD, x: str | None = None,
-                                   y: str | None = None) -> JD | None:
-        """B7 alternate implementation, kept as a CROSS-CHECK of
-        ``consistent_jd_candidate``: the reference ships the reduction twice
-        (pairwise merge loop in `search/MinimalJDGenerator.java:498-600`,
-        violation-graph connected components in
-        `search/JDGeneratorGivenLHS.java:337-405` over
-        `common/GraphUtils.java:17-62`) and so do we. Each round: build the
-        graph whose edges are component pairs with I(Ci;Cj|lhs) > eps, merge
-        every connected component wholesale, repeat until edge-free.
-        tests/test_jd_miner.py pins both reductions equal on every fixture
-        and on the sf0.01 gate relation."""
-        lhs = frozenset(lhs)
-        if x is not None and y is not None:
-            basic = self.imeasure({x}, {y}, lhs)
-            if is_greater_than_eps(basic, self.epsilon):
-                return None
-        comps = [frozenset(c) for c in start.components]
-        while True:
-            subsets = [lhs] + [lhs | c for c in comps] + \
-                [lhs | a | b for a, b in itertools.combinations(comps, 2)]
-            got = self.eng.entropies(subsets)
-            h_lhs = got[lhs]
-            adj: dict[int, set[int]] = {i: set() for i in range(len(comps))}
-            changed = False
-            for i, j in itertools.combinations(range(len(comps)), 2):
-                a, b = comps[i], comps[j]
-                im = got[lhs | a] + got[lhs | b] - got[lhs | a | b] - h_lhs
-                if is_greater_than_eps(im, self.epsilon):
-                    adj[i].add(j)
-                    adj[j].add(i)
-                    changed = True
-            if not changed:
-                break
-            # connected components (GraphUtils.getComponents), merged in one
-            # shot — the structural difference from the pairwise merge loop
-            seen: set[int] = set()
-            merged: list[frozenset[str]] = []
-            for i in range(len(comps)):
-                if i in seen:
-                    continue
-                stack, cc = [i], set()
-                while stack:
-                    u = stack.pop()
-                    if u in cc:
-                        continue
-                    cc.add(u)
-                    stack.extend(adj[u] - cc)
-                seen |= cc
-                merged.append(frozenset().union(*(comps[u] for u in cc)))
-            if x is not None and y is not None and any(
-                    x in c and y in c for c in merged):
-                return None
-            comps = merged
-        if len(comps) <= 1:
-            return None
-        return JD(lhs, frozenset(comps))
-
     # -- B8: mine all JDs with a given lhs -------------------------------------
 
     def mine_jds_with_lhs(self, lhs, limit: int = 0, x: str | None = None,
                           y: str | None = None,
                           start: JD | None = None) -> set[JD]:
-        """Search over component merges of the consistent starting JD for
-        JDs with measure <= eps. X,Y (when given) are never merged into one
-        component. limit=0 means unlimited.
-
-        Dispatches on the constructor's ``search`` mode; both orders explore
-        the same merge graph under the same pruning bounds, so with limit=0
-        the mined sets are identical (pinned by test_jd_miner)."""
-        if self.search == "dfs":
-            return self.mine_jds_with_lhs_dfs(lhs, limit, x, y, start)
-        return self._mine_jds_with_lhs_bfs(lhs, limit, x, y, start)
-
-    def _mine_jds_with_lhs_bfs(self, lhs, limit: int = 0,
-                               x: str | None = None, y: str | None = None,
-                               start: JD | None = None) -> set[JD]:
-        """B8, queue order (`search/MinimalJDGenerator.java:395-449`)."""
+        """B8, queue order (`search/MinimalJDGenerator.java:395-449`): search
+        over component merges of the consistent starting JD for JDs with
+        measure <= eps. X,Y (when given) are never merged into one
+        component. limit=0 means unlimited."""
         lhs = frozenset(lhs)
         if start is None:
             start = self.consistent_jd_candidate(
@@ -258,107 +184,6 @@ class JDMiner:
                 queue.append(cand)
         return found
 
-    def mine_jds_with_lhs_dfs(self, lhs, limit: int = 0,
-                              x: str | None = None, y: str | None = None,
-                              start: JD | None = None) -> set[JD]:
-        """B8, stack order with resume indices
-        (`search/MinimalJDGenerator.java:320-392`): each stack frame holds a
-        JD plus the index of the next component-pair merge to try; a frame
-        is re-entered after its child subtree finishes, resuming at that
-        index. Frontier memory is O(depth · 1) frames instead of BFS's
-        O(level width) queue — the shape that matters when a wide lattice
-        level would otherwise materialize thousands of candidate JDs.
-
-        Same merge graph, same consistent-reduction, same abort bounds, and
-        same visited-set dedup as the BFS, so with limit=0 the mined set is
-        identical (the cross-check tests pin this on every fixture, the same
-        pattern as B7's merge-loop/violation-graph pair). With limit>0 the
-        traversal order picks WHICH JDs are found first, exactly as in the
-        reference's two variants."""
-        lhs = frozenset(lhs)
-        if start is None:
-            start = self.consistent_jd_candidate(
-                lhs, JD.most_specific(lhs, self.schema), x, y)
-        if start is None:
-            return set()
-        m0 = self.jd_measure(start)
-        if is_greater_than_eps(m0, (len(start.components) - 1) * self.epsilon):
-            return set()
-
-        found: set[JD] = set()
-        visited: set[frozenset[frozenset[str]]] = {start.components}
-        # frames: [jd, pairs-to-merge or None (unexpanded), resume index]
-        stack: list[list] = [[start, None, 0]]
-        while stack and not self._stop():
-            frame = stack[-1]
-            jd, pairs, idx = frame
-            if pairs is None:
-                # first visit: classify, then expand or pop
-                m = self.jd_measure(jd)
-                if not is_greater_than_eps(m, self.epsilon):
-                    found.add(jd)
-                    stack.pop()
-                    if limit > 0 and len(found) >= limit:
-                        break
-                    continue
-                comps = sorted(jd.components, key=sorted)
-                if len(comps) <= 2:
-                    stack.pop()  # merging to one component can't be a JD
-                    continue
-                frame[1] = list(itertools.combinations(comps, 2))
-                continue
-            # resume at idx: descend into the first viable child
-            child = None
-            while idx < len(pairs):
-                a, b = pairs[idx]
-                idx += 1
-                if x is not None and y is not None:
-                    ab = a | b
-                    if x in ab and y in ab:
-                        continue  # never merge X's and Y's components
-                merged = jd.merge_components(a, b)
-                cand = self.consistent_jd_candidate(lhs, merged, x, y)
-                if cand is None or cand.components in visited:
-                    continue
-                mc = self.jd_measure(cand)
-                if is_greater_than_eps(
-                        mc, (len(cand.components) - 2) * self.epsilon):
-                    continue
-                visited.add(cand.components)
-                child = cand
-                break
-            frame[2] = idx
-            if child is not None:
-                stack.append([child, None, 0])
-            else:
-                stack.pop()  # all merges tried: backtrack
-        return found
-
-    # -- entropy prefetching ---------------------------------------------------
-
-    def _prefetch_lhs_family(self, lhs_list) -> None:
-        """Batch-warm the cache with every entropy a consistent-reduction
-        over singleton-component JDs with these lhs candidates can ask for:
-        H(lhs), H(lhs ∪ {a}) and H(lhs ∪ {a,b}) for a,b outside lhs.
-        Spark-side analogue of prepareEntropiesForReduction
-        (`search/JDGeneratorGivenLHS.java:408-423`): turns dozens of tiny
-        sequential jobs into a few chunked grouping-sets scans.
-
-        NOTE: measured at sf0.1, eager prefetch LOSES inside the greedy
-        reduction — the lazy path skips most pair entropies via the early
-        I(x;y|lhs) refutation. Only call this for subset families that are
-        always needed (init_min_seps does)."""
-        subsets: set[frozenset[str]] = set()
-        for lhs in lhs_list:
-            lhs = frozenset(lhs)
-            rest = [c for c in self.schema if c not in lhs]
-            subsets.add(lhs)
-            for a in rest:
-                subsets.add(lhs | {a})
-            for a, b in itertools.combinations(rest, 2):
-                subsets.add(lhs | {a, b})
-        self.eng.entropies(subsets)
-
     # -- B9: minimal-separator reduction ----------------------------------------
 
     def reduce_to_min_jd(self, x: str, y: str, lhs) -> JD | None:
@@ -391,7 +216,7 @@ class JDMiner:
         """Entropy warm-up, sized to the relation (the mining workload is
         job-latency-bound, not data-bound — fewer, fatter Spark jobs win):
 
-        - Small relation (rows * 2^(n-k) within ``eager_cells``, k = number
+        - Small relation (rows * 2^(n-k) within ``EAGER_CELLS``, k = number
           of unique-key columns detected from the singleton entropies —
           key-containing subsets are filled algebraically, see
           SparkEntropyEngine.all_entropies): one singles job + ONE CUBE job
@@ -413,7 +238,7 @@ class JDMiner:
             # singleton entropies are needed by every downstream path; the
             # key count they reveal shrinks the effective CUBE width
             keycols = self.eng.key_columns(self.schema)
-            if self.eng.num_rows * (1 << (n - len(keycols))) <= self.eager_cells:
+            if self.eng.num_rows * (1 << (n - len(keycols))) <= EAGER_CELLS:
                 self.eng.all_entropies()
                 return
         n1 = [self.full - {a} for a in self.schema]
@@ -442,7 +267,7 @@ class JDMiner:
             return self.reduce_to_min_jd(ax, ay, self.full - {ax, ay})
 
         jds = fanout(self.eng.df.sparkSession, reduce_pair, todo,
-                     self.max_parallel_pairs)
+                     PAIR_WIDTH)
         for pair, jd in zip(todo, jds):
             if jd is None:
                 continue
@@ -509,7 +334,7 @@ class JDMiner:
                 self.mine_all_min_seps_for_pair(*pair)
 
         fanout(self.eng.df.sparkSession, mine_pair, pairs,
-               self.max_parallel_pairs)
+               PAIR_WIDTH)
         out: set[frozenset[str]] = set()
         for seps in self.min_pairwise_seps.values():
             out |= seps

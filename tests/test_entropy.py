@@ -108,6 +108,56 @@ def test_all_entropies_cube_matches_singles(tiny):
     eng.unpersist()
 
 
+def test_entropies_waits_on_running_lattice_job(tiny):
+    """all_entropies claims its lattice in the same in-flight map as
+    entropies(): a second thread asking for lattice subsets while the
+    lattice job runs waits for it instead of launching its own job. The
+    kernel is wrapped so the lattice job blocks until released."""
+    import threading
+
+    df, data = tiny
+    cols = df.columns
+    eng = SparkEntropyEngine(df)
+    try:
+        eng.entropies([frozenset((c,)) for c in cols])
+        singles = eng.jobs_run
+        kernel = eng._batch_grouping_sets
+        started, release = threading.Event(), threading.Event()
+        calls = []
+
+        def blocking_kernel(subsets):
+            calls.append(len(subsets))
+            started.set()
+            assert release.wait(60)
+            kernel(subsets)
+
+        eng._batch_grouping_sets = blocking_kernel
+        lattice = threading.Thread(target=eng.all_entropies)
+        lattice.start()
+        try:
+            assert started.wait(30), "lattice job never reached the kernel"
+            asked = [frozenset(("u", "v")), frozenset(("u", "v", "w"))]
+            got = {}
+            asker = threading.Thread(
+                target=lambda: got.update(eng.entropies(asked)))
+            asker.start()
+            asker.join(1.0)
+            assert asker.is_alive(), "entropies() did not wait on the lattice"
+        finally:
+            release.set()
+            lattice.join(60)
+        asker.join(60)
+        assert not lattice.is_alive() and not asker.is_alive()
+        assert calls == [2 ** len(cols)]      # the lattice, nothing else
+        assert eng.jobs_run == singles + 1
+        for s in asked:
+            idxs = [cols.index(c) for c in s]
+            assert got[s] == pytest.approx(oracle_entropy(data, idxs),
+                                           abs=1e-9), s
+    finally:
+        eng.unpersist()
+
+
 def test_all_entropies_key_shortcut(spark):
     """Key-column shortcut: with unique-key columns present, all_entropies
     must (a) still match the brute-force oracle on EVERY subset — key

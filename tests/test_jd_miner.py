@@ -115,6 +115,19 @@ def test_consistent_jd_merges_correlated(spark):
     jd2 = miner.consistent_jd_candidate(
         ["k"], JD.most_specific(frozenset(["k"]), miner.schema), x="b", y="c")
     assert jd2 is None
+    # transitive merge: b == d and c is a bijection of b given k, so the
+    # pairwise merges chain into one component {b,c,d}
+    rows = [(k, a, v, (v + k) % 4, v) for k in range(6) for a in range(3)
+            for v in range(4)]
+    df = spark.createDataFrame(rows, ["k", "a", "b", "c", "d"])
+    m = JDMiner(MeasureEngine(SparkEntropyEngine(df)), epsilon=0.0)
+    try:
+        got = m.consistent_jd_candidate(
+            ["k"], JD.most_specific(frozenset(["k"]), m.schema))
+        assert got == JD(frozenset(["k"]), frozenset(
+            [frozenset("a"), frozenset(["b", "c", "d"])]))
+    finally:
+        m.eng.unpersist()
 
 
 def test_mine_jds_with_lhs(miner5):
@@ -124,6 +137,9 @@ def test_mine_jds_with_lhs(miner5):
         [frozenset("a"), frozenset("b"), frozenset("c")]) for jd in jds)
     for jd in jds:
         assert miner5.jd_measure(jd) <= miner5.epsilon + 1e-5
+    # limit>0 stops early but surfaces a JD from the same universe
+    first = miner5.mine_jds_with_lhs(["k"], limit=1)
+    assert len(first) == 1 and first <= jds
 
 
 def test_min_sep_mining(miner5):
@@ -142,133 +158,19 @@ def test_full_mvds(miner5):
                for jd in full)
 
 
-def test_cc_reduction_agrees_with_merge_loop(miner5, spark):
-    """B7 is implemented twice (pairwise merge loop + violation-graph
-    connected components, mirroring the reference's two variants); they must
-    produce identical consistent JDs on every fixture."""
-    cases = [(["k"], None, None), (["k"], "a", "b"), ([], "a", "b"),
-             (["k", "a"], "b", "c")]
-    for lhs, x, y in cases:
-        start = JD.most_specific(frozenset(lhs), miner5.schema)
-        got1 = miner5.consistent_jd_candidate(lhs, start, x, y)
-        got2 = miner5.consistent_jd_candidate_cc(lhs, start, x, y)
-        assert got1 == got2, (lhs, x, y)
-    # correlated fixture: b == c forces a transitive merge
-    rows = [(k, a, v, (v + k) % 4, v) for k in range(6) for a in range(3)
-            for v in range(4)]
-    df = spark.createDataFrame(rows, ["k", "a", "b", "c", "d"])
-    m = JDMiner(MeasureEngine(SparkEntropyEngine(df)), epsilon=0.0)
-    try:
-        for lhs, x, y in [(["k"], None, None), (["k"], "b", "d"),
-                          (["k", "a"], None, None)]:
-            start = JD.most_specific(frozenset(lhs), m.schema)
-            assert m.consistent_jd_candidate(lhs, start, x, y) == \
-                m.consistent_jd_candidate_cc(lhs, start, x, y), (lhs, x, y)
-    finally:
-        m.eng.unpersist()
-
-
-def test_cc_reduction_agrees_on_gate_relation(spark):
-    """Cross-check on the sf0.01 gate relation (the driver's b11/b15 input):
-    both reductions agree for every attribute pair at the seeding lhs
-    R - {x,y} and at the known planted separators."""
-    import itertools as it
-    c = spark.read.parquet("/root/testdata/sf0.01/customer.parquet")
-    n = spark.read.parquet("/root/testdata/sf0.01/nation.parquet")
-    r = spark.read.parquet("/root/testdata/sf0.01/region.parquet")
-    cols = ["c_custkey", "c_nationkey", "c_mktsegment",
-            "n_name", "n_regionkey", "r_name"]
-    denorm = (c.join(n, c.c_nationkey == n.n_nationkey)
-               .join(r, n.n_regionkey == r.r_regionkey).select(*cols))
-    m = JDMiner(MeasureEngine(SparkEntropyEngine(denorm)), epsilon=0.0)
-    try:
-        full = frozenset(cols)
-        lhs_list = [frozenset(["c_nationkey"]), frozenset(["n_name"])]
-        for x, y in it.combinations(cols, 2):
-            for lhs in [full - {x, y}] + lhs_list:
-                if x in lhs or y in lhs:
-                    continue
-                start = JD.most_specific(lhs, m.schema)
-                assert m.consistent_jd_candidate(lhs, start, x, y) == \
-                    m.consistent_jd_candidate_cc(lhs, start, x, y), (lhs, x, y)
-    finally:
-        m.eng.unpersist()
-
-
-def test_min_sep_mining_mode_invariant(planted5):
-    """Eager-CUBE + parallel pairs, lazy + sequential, and lazy + parallel
+def test_min_sep_mining_mode_invariant(planted5, monkeypatch):
+    """Eager lattice + parallel pairs, lazy + sequential, and lazy + parallel
     must mine identical separator sets (r2 perf work is pinned to be a pure
     plan change, never a semantic one)."""
+    from relationaldecomposition_spark.mining import jd_miner
+
     results = []
-    for kwargs in ({},  # default: eager cube, 8 parallel pairs
-                   {"eager_cells": 0, "max_parallel_pairs": 1},
-                   {"eager_cells": 0, "max_parallel_pairs": 8}):
+    for eager, width in ((jd_miner.EAGER_CELLS, jd_miner.PAIR_WIDTH),
+                         (0, 1), (0, 8)):
+        monkeypatch.setattr(jd_miner, "EAGER_CELLS", eager)
+        monkeypatch.setattr(jd_miner, "PAIR_WIDTH", width)
         miner = JDMiner(MeasureEngine(SparkEntropyEngine(planted5)),
-                        epsilon=0.0, **kwargs)
+                        epsilon=0.0)
         results.append(miner.mine_all_min_seps())
         miner.eng.unpersist()
     assert results[0] == results[1] == results[2] == {frozenset(["k"])}
-
-
-def test_dfs_equals_bfs_mined_sets(miner5, spark):
-    """B8 ships in both traversal orders (reference has BFS and stack-DFS
-    with resume indices); with limit=0 they must mine identical JD sets —
-    the same cross-check pattern as B7's two reductions."""
-    cases = [(["k"], None, None), (["k"], "a", "b"), ([], "a", "b"),
-             (["k", "a"], "b", "c"), ([], None, None)]
-    for lhs, x, y in cases:
-        bfs = miner5.mine_jds_with_lhs(lhs, limit=0, x=x, y=y)
-        dfs = miner5.mine_jds_with_lhs_dfs(lhs, limit=0, x=x, y=y)
-        assert bfs == dfs, (lhs, x, y)
-    # limit>0: order picks WHICH JDs surface, but both must surface valid
-    # ones from the same universe
-    b1 = miner5.mine_jds_with_lhs(["k"], limit=1)
-    d1 = miner5.mine_jds_with_lhs_dfs(["k"], limit=1)
-    universe = miner5.mine_jds_with_lhs(["k"], limit=0)
-    assert len(b1) == len(d1) == 1
-    assert b1 <= universe and d1 <= universe
-    # correlated fixture (transitive merges exercised)
-    rows = [(k, a, v, (v + k) % 4, v) for k in range(6) for a in range(3)
-            for v in range(4)]
-    df = spark.createDataFrame(rows, ["k", "a", "b", "c", "d"])
-    m = JDMiner(MeasureEngine(SparkEntropyEngine(df)), epsilon=0.0)
-    try:
-        for lhs, x, y in [(["k"], None, None), (["k"], "b", "d"),
-                          (["k", "a"], None, None)]:
-            assert m.mine_jds_with_lhs(lhs, limit=0, x=x, y=y) == \
-                m.mine_jds_with_lhs_dfs(lhs, limit=0, x=x, y=y), (lhs, x, y)
-    finally:
-        m.eng.unpersist()
-
-
-def test_dfs_search_mode_min_seps_invariant(planted5):
-    """End-to-end: a JDMiner running every B8 call through the DFS twin
-    mines the same minimal separators as the default BFS miner."""
-    m = JDMiner(MeasureEngine(SparkEntropyEngine(planted5)), epsilon=0.0,
-                search="dfs")
-    try:
-        assert m.mine_all_min_seps() == {frozenset(["k"])}
-    finally:
-        m.eng.unpersist()
-
-
-def test_dfs_equals_bfs_on_gate_relation(spark):
-    """DFS == BFS on the sf0.01 gate relation at the min-sep seeding lhs
-    for a spread of attribute pairs."""
-    c = spark.read.parquet("/root/testdata/sf0.01/customer.parquet")
-    n = spark.read.parquet("/root/testdata/sf0.01/nation.parquet")
-    r = spark.read.parquet("/root/testdata/sf0.01/region.parquet")
-    cols = ["c_custkey", "c_nationkey", "c_mktsegment",
-            "n_name", "n_regionkey", "r_name"]
-    denorm = (c.join(n, c.c_nationkey == n.n_nationkey)
-               .join(r, n.n_regionkey == r.r_regionkey).select(*cols))
-    m = JDMiner(MeasureEngine(SparkEntropyEngine(denorm)), epsilon=0.0)
-    full = frozenset(cols)
-    try:
-        for x, y in [("c_mktsegment", "n_name"), ("c_custkey", "r_name"),
-                     ("n_regionkey", "c_mktsegment")]:
-            lhs = full - {x, y}
-            assert m.mine_jds_with_lhs(lhs, limit=0, x=x, y=y) == \
-                m.mine_jds_with_lhs_dfs(lhs, limit=0, x=x, y=y), (x, y)
-    finally:
-        m.eng.unpersist()

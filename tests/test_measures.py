@@ -1,6 +1,7 @@
 """FD/MVD/JD measures on relations with planted structure (FIXTURES.md F5
 pattern: fixture = R1 ⋈ R2 ⋈ R3 sharing key k, so ground truth is known)."""
 
+import math
 import random
 
 import pytest
@@ -78,16 +79,17 @@ def test_measure_all_batch(meng):
 
 def test_honest_total_with_duplicate_rows(spark):
     # With duplicate rows, log2(N) over-states H(R) and the reference-style
-    # MVD measure can go negative; honest_total computes H(R) by group-by.
+    # MVD measure can go negative; MeasureEngine computes H(R) by group-by.
     rows = [(1, "x", "p"), (1, "x", "p"), (1, "y", "p"), (2, "x", "p")]
     df = spark.createDataFrame(rows, ["k", "y", "z"])
     eng = SparkEntropyEngine(df)
-    honest = MeasureEngine(eng, honest_total=True)
+    honest = MeasureEngine(eng)
     # z is constant => I(Y;Z|X) = 0 under the true joint entropy
     assert honest.mvd_measure(["k"], ["y"]) == 0.0
-    # the reference-style log2(N) total goes negative on duplicated rows
-    ref_style = MeasureEngine(eng, honest_total=False)
-    assert ref_style.mvd_measure(["k"], ["y"]) < 0.0
+    # the reference's literal H(R) = log2(N) goes negative on duplicated rows
+    ref_style = (eng.entropy(["k", "y"]) + eng.entropy(["k", "z"])
+                 - eng.entropy(["k"]) - math.log2(eng.num_rows))
+    assert ref_style < 0.0
 
 
 def test_measure_interval_logic():

@@ -94,9 +94,10 @@ def test_cancel_running_job(spark):
     v.close()
 
 
-def test_timeout_runner_stops_search(spark, validator):
+def test_timeout_runner_stops_search(spark, validator, monkeypatch):
     from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
     from relationaldecomposition_spark.engine.measures import MeasureEngine
+    from relationaldecomposition_spark.mining import jd_miner
     from relationaldecomposition_spark.mining.jd_miner import JDMiner
 
     runner = TimeoutRunner(spark)
@@ -106,8 +107,7 @@ def test_timeout_runner_stops_search(spark, validator):
         # inside any realistic timeout window at this scale, which is the
         # point of the optimization but not of this test
         miner = JDMiner(MeasureEngine(SparkEntropyEngine(validator.base)),
-                        epsilon=0.0, stop_flag=stop_flag,
-                        eager_cells=0, max_parallel_pairs=1)
+                        epsilon=0.0, stop_flag=stop_flag)
         miner.mine_all_min_seps()
         return miner
 
@@ -117,7 +117,9 @@ def test_timeout_runner_stops_search(spark, validator):
         miner.mine_all_min_seps()
         return miner
 
-    with pytest.raises(TimeoutError):
+    with monkeypatch.context() as mp, pytest.raises(TimeoutError):
+        mp.setattr(jd_miner, "EAGER_CELLS", 0)
+        mp.setattr(jd_miner, "PAIR_WIDTH", 1)
         runner.run(mine_slow, timeout=1.0)
     # generous timeout completes
     miner = runner.run(mine_fast, timeout=600)
