@@ -140,9 +140,10 @@ def build_queries(spark, sf_dir: str):
 
     def spurious_fold():
         # Floor note (round-6 profile): steady-state is ~2.5-2.7 s at
-        # sf0.1, dominated by per-action job scheduling of the ~8 jobs a
-        # validation needs (base distinct+persist, 3 concurrent projection
-        # counts, fold joins, final agg) — not data volume. The
+        # sf0.1, dominated by per-action job scheduling of the few jobs a
+        # validation needs (base distinct+persist, one entropy-kernel job
+        # pricing the projections and the base, fold joins, final agg) —
+        # not data volume. The
         # 2.78->3.38 s median creep flagged in round 5 was the COLD first
         # sample (the validator's base.distinct().persist() materializes
         # on first use: rep0 5.5 s vs rep1/2 2.5-2.7 s measured);

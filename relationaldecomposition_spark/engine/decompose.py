@@ -26,11 +26,13 @@ relation is deduplicated before anything else (worker copies are
 ``SELECT DISTINCT *``, `NewSmallDBInMemory.java:180-187`).
 
 Scale notes (100 TB):
-- Each projection is one shuffle on its own columns (column-pruned scan of
-  a persisted dedup'd base). Projection row counts are computed anyway for
-  DecompositionInfo, so the fold broadcasts any side known to be small —
-  exactly the "broadcast small dims" rule, driven by real counts instead of
-  stats guesses. AQE handles skewed join keys.
+- Projection sizes (A12) and the base count (A16) come from the entropy
+  kernel over the persisted dedup'd base: |π_X(R)| is the number of groups
+  of grouping set X, so one job prices every projection of a validate call.
+  Projections are not persisted; each is one column-pruned shuffle inside
+  its fold. The fold broadcasts any side known to be small — the "broadcast
+  small dims" rule, driven by exact counts instead of stats guesses. AQE
+  handles skewed join keys.
 - The group-by after every join keeps intermediates at most as wide as the
   union of remaining separators — the Yannakakis guarantee that
   intermediate size is bounded by output size for acyclic decompositions.
@@ -40,13 +42,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import threading
 from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
+from .entropy import SparkEntropyEngine
 from .fanout import fanout
 
 # Broadcast a fold side when its (exactly known) distinct row count is below
@@ -118,24 +120,14 @@ class DecompositionValidator:
         self.schema_cols = tuple(df.columns)
         # validation-path semantics: dedup the base once, keep it hot
         self.base = df.distinct().persist()
-        self._num_tuples: int | None = None
-        # refcounted cluster-projection cache shared across (possibly
-        # CONCURRENT) validate calls: candidate schemas routinely share
-        # clusters, and two threads persisting the same projection plan
-        # double-persist it (WARN CacheManager) and race its
-        # materialization (WARN BlockManager). Sharing the frame computes
-        # each distinct projection once; the refcount keeps the leak-free
-        # invariant (unpersist when the last user releases). Entries are
-        # {"df", "refs", "count", "mlock"}.
-        self._projs: dict[frozenset, dict] = {}
-        self._plock = threading.Lock()
+        # the one counter: cluster projection sizes are the kernel's group
+        # counts over the dedup'd base, and its N is |base|
+        self.eng = SparkEntropyEngine(self.base, cache_input=False)
 
     @property
     def num_tuples(self) -> int:
         """A16: |SELECT DISTINCT * FROM base|."""
-        if self._num_tuples is None:
-            self._num_tuples = self.base.count()
-        return self._num_tuples
+        return self.eng.num_rows
 
     # -- A13/A14 count fold ---------------------------------------------------
 
@@ -151,89 +143,47 @@ class DecompositionValidator:
         one DecompositionInfo per set, in input order, with spurious_tuples
         = |⋈ projections| − |base|.
 
-        Each distinct projection across all sets is persisted and counted
-        once (8 counts at a time) and shared by every set naming it; the
-        sets' count folds then run 4 at a time. Single validations are
-        chains of short jobs whose cost is per-action scheduling latency,
-        so overlapping them is what makes candidate validation fast.
+        ONE entropy-kernel job prices every distinct projection across all
+        sets, and the base (a repeat call finds them priced). The sets'
+        count folds then run 4 at a time: single validations are chains of
+        short jobs whose cost is per-action scheduling latency, so
+        overlapping them is what makes candidate validation fast.
 
-        ``should_stop``: optional callable polled between Spark actions —
-        cancelJobGroup only kills in-flight jobs, so without this check a
-        canceled run would still launch the remaining counts and folds."""
+        ``should_stop``: optional callable polled before the pricing job and
+        before each fold's final aggregate — cancelJobGroup only kills
+        in-flight jobs, so without this check a canceled run would still
+        launch the remaining ones."""
         stop = should_stop or (lambda: False)
         orders = [_greedy_order([attrset(c) for c in cs])
                   for cs in cluster_sets]
-        spark = self.base.sparkSession
-        taken: dict[frozenset[str], dict] = {}
-        # try/finally: a cancellation (DecompositionCanceled) or Spark failure
-        # anywhere — including while building/persisting the projections
-        # themselves — must release exactly the references taken, or
-        # persisted projections leak into executor storage;
-        # DecompositionService resubmits CANCELED/FAILED jobs, so a
-        # long-lived service would accumulate them.
-        try:
-            with self._plock:
-                for c in dict.fromkeys(c for cl in orders for c in cl):
-                    ent = self._projs.get(c)
-                    if ent is None:
-                        proj = project_cluster(self.base, c, self.schema_cols)
-                        ent = self._projs[c] = {
-                            "df": proj.persist(), "refs": 0, "count": None,
-                            # serializes the materializing count: concurrent
-                            # validations sharing the cluster wait and reuse
-                            # the cached blocks instead of re-computing them
-                            "mlock": threading.Lock()}
-                    ent["refs"] += 1
-                    taken[c] = ent
+        if stop():
+            raise DecompositionCanceled("canceled before projection pricing")
+        counts = self.eng.group_counts(c for cl in orders for c in cl)
 
-            def count(c):
-                if stop():
-                    raise DecompositionCanceled("canceled before projection count")
-                ent = taken[c]
-                with ent["mlock"]:
-                    if ent["count"] is None:
-                        ent["count"] = ent["df"].count()
-                    return ent["count"]
-
-            counts = dict(zip(taken, fanout(spark, count, taken, 8)))
-
-            def fold(cl):
-                info = DecompositionInfo()
-                if not cl:
-                    return info
-                for c in cl:
-                    info.add(c, counts[c])
-                if stop():
-                    raise DecompositionCanceled("canceled before final aggregate")
-                total = self._fold_total_frame(cl, counts, taken).first()["total"]
-                # read in the worker, so the first base count overlaps the
-                # other sets' folds
-                info.spurious_tuples = int(total or 0) - self.num_tuples
+        def fold(cl):
+            info = DecompositionInfo()
+            if not cl:
                 return info
+            for c in cl:
+                info.add(c, counts[c])
+            if stop():
+                raise DecompositionCanceled("canceled before final aggregate")
+            total = self._fold_total_frame(cl, counts).first()["total"]
+            info.spurious_tuples = int(total or 0) - self.num_tuples
+            return info
 
-            return fanout(spark, fold, orders, 4)
-        finally:
-            # unpersist INSIDE the lock: Spark's CacheManager keys entries by
-            # logical plan, so an unpersist issued after dropping the lock
-            # could race a concurrent validate persisting an identical-plan
-            # frame and evict the fresh entry (recompute, perf-only).
-            # Blocking is false, so holding the lock across it is cheap.
-            with self._plock:
-                for c, ent in taken.items():
-                    ent["refs"] -= 1
-                    if ent["refs"] == 0:
-                        del self._projs[c]
-                        ent["df"].unpersist()
+        return fanout(self.base.sparkSession, fold, orders, 4)
 
-    def _fold_total_frame(self, cl, counts, entries) -> DataFrame:
+    def _fold_total_frame(self, cl, counts) -> DataFrame:
         """The lazy join-size fold of a greedy-ordered cluster list: a
         single-row DataFrame whose column ``total`` = |⋈ projections|."""
         acc_attrs = cl[0]
-        acc = entries[cl[0]]["df"]
+        acc = project_cluster(self.base, cl[0], self.schema_cols)
         acc_count = counts[cl[0]]
         for i in range(1, len(cl)):
             c2 = cl[i]
-            p2 = entries[c2]["df"].withColumnRenamed("cnt", "cnt_r")
+            p2 = (project_cluster(self.base, c2, self.schema_cols)
+                  .withColumnRenamed("cnt", "cnt_r"))
             join_cols = sorted_cols(acc_attrs & c2, self.schema_cols)
             new_attrs = acc_attrs | c2
             # attributes still needed: anything a remaining cluster mentions
@@ -277,11 +227,6 @@ class DecompositionValidator:
         return joined.distinct().count() - self.num_tuples
 
     def close(self) -> None:
-        with self._plock:
-            leaked = list(self._projs.values())
-            self._projs.clear()
-        for ent in leaked:
-            ent["df"].unpersist()
         self.base.unpersist()
 
 

@@ -17,11 +17,14 @@ shuffle-based hash aggregate and Parquet's native dictionary encoding, so
 none of them are materialized here.
 
 Batching (A8, `ExternalFileDataSet.computeEntropies:111-166` — one scan
-feeding many count maps) maps to SQL ``GROUP BY GROUPING SETS``: one scan +
-one shuffle computes every subset's histogram, with ``grouping_id()``
-separating subsets. Each grouping set replicates every input row once into
-the shuffle, so batch width is capped (default 32 sets/job, at most 16 of
-them wide and without a cached estimate — the analogue of
+feeding many count maps) maps to ``DataFrame.groupingSets``: one scan +
+one shuffle computes every subset's histogram, with ``grouping()`` flags
+separating subsets. Beside sum(c*log2(c)) the job returns each set's group
+count |π_X(R)| and N = sum(c): it is the one place the paper pipeline
+counts groups, so projection sizes (A12) and distinct counts (A16) never
+run a job of their own. Each grouping set replicates every input row once
+into the shuffle, so batch width is capped (default 32 sets/job, at most
+16 of them wide and without a cached estimate — the analogue of
 MasterCompressedDB's RangeSize bound) and large requests are chunked. The
 A11 lattice (``GROUP BY CUBE``) is the same grouping-sets job over every
 subset.
@@ -42,10 +45,9 @@ from __future__ import annotations
 import math
 import threading
 import time
-import uuid
 from collections.abc import Callable, Iterable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
 
@@ -93,8 +95,9 @@ class SparkEntropyEngine:
     `entropy/IDataset.java:9-20`).
 
     Duplicate-row semantics follow the reference's entropy path: duplicates
-    count as probability mass (§1.1 of SURVEY.md). ``num_distinct`` exposes
-    the deduplicated count used by the decomposition-validation path.
+    count as probability mass (§1.1 of SURVEY.md). ``group_counts`` and
+    ``num_distinct`` expose the deduplicated counts the decomposition-
+    validation path uses.
     """
 
     def __init__(self, df: DataFrame, max_grouping_sets: int = DEFAULT_MAX_GROUPING_SETS,
@@ -116,6 +119,8 @@ class SparkEntropyEngine:
         # split, so near-key subsets don't amplify one job's shuffle 16x
         self.group_budget_rows = group_budget_rows
         self._cache: dict[frozenset[str], float] = {}
+        # group count |π_X(R)| of every subset the kernel computed
+        self._groups: dict[frozenset[str], int] = {}
         self._lock = threading.Lock()
         # cooperative cancellation (B18): when set, polled between chunk
         # jobs — a timed-out miner stops launching NEW Spark jobs with at
@@ -127,8 +132,8 @@ class SparkEntropyEngine:
         # job lands in the cache; concurrent threads wait instead of
         # recomputing
         self._inflight: dict[frozenset[str], threading.Event] = {}
+        # N: recorded by the first kernel job from its own sum(cnt)
         self._num_rows: int | None = None
-        self._num_distinct: int | None = None
         # Stats mirroring the reference's scan instrumentation
         # (entropy/IDataset.java:18-19 getNumDBScans/getTotalScanTime;
         # MasterCompressedDB totalNumQueriesIsuues/totalTimeSpentQuerying/
@@ -156,6 +161,8 @@ class SparkEntropyEngine:
 
     @property
     def num_rows(self) -> int:
+        """N. Every kernel job records it as its sum(cnt), so only a read
+        before the first job costs a count() of its own."""
         if self._num_rows is None:
             self._num_rows = self.df.count()
         return self._num_rows
@@ -163,10 +170,19 @@ class SparkEntropyEngine:
     @property
     def num_distinct(self) -> int:
         """COUNT(*) of SELECT DISTINCT * (A16,
-        `entropy/NewSmallDBInMemory.java:271-281`)."""
-        if self._num_distinct is None:
-            self._num_distinct = self.df.distinct().count()
-        return self._num_distinct
+        `entropy/NewSmallDBInMemory.java:271-281`): the group count of the
+        full column set."""
+        full = frozenset(self.schema_cols)
+        return self.group_counts([full])[full]
+
+    def group_counts(self, subsets: Iterable[Iterable[str]]) -> dict[frozenset[str], int]:
+        """|π_X(R)| = the number of groups of grouping set X, for many
+        subsets. Uncounted ones run in ONE kernel job, bypassing
+        ``_next_chunk`` as the lattice does."""
+        wanted = [attrset(s) for s in subsets]
+        self._claim_and_run(wanted, self._batch_grouping_sets, self._groups)
+        return {x: self._groups[x] if x else min(self.num_rows, 1)
+                for x in wanted}
 
     # ----- single-subset entropy ------------------------------------------
 
@@ -201,23 +217,25 @@ class SparkEntropyEngine:
         shuffle per chunk regardless of subset count.
         """
         wanted = [attrset(s) for s in subsets]
-        self._claim_and_run(wanted, self._run_chunked)
+        self._claim_and_run(wanted, self._run_chunked, self._cache)
         return {x: (0.0 if not x else self._cache[x]) for x in wanted}
 
     def _claim_and_run(self, subsets: Iterable[frozenset[str]],
-                       run: Callable[[list[frozenset[str]]], None]) -> None:
-        """Bring every non-empty subset into the cache: claim the ones that
-        are neither cached nor in flight, compute them with ``run(claimed)``
-        (which must cache them), and wait on the threads computing the
-        rest. Claims are released even on failure or cancel; waiters then
-        re-check the cache and claim whatever is still missing."""
+                       run: Callable[[list[frozenset[str]]], None],
+                       done: dict) -> None:
+        """Bring every non-empty subset into ``done`` (the H or the group
+        count cache): claim the ones that are neither there nor in flight,
+        compute them with ``run(claimed)`` (a kernel run, which fills both
+        caches), and wait on the threads computing the rest. Claims are
+        released even on failure or cancel; waiters then re-check and claim
+        whatever is still missing."""
         pending = [x for x in dict.fromkeys(subsets) if x]
         while pending:
             todo: list[frozenset[str]] = []
             waits: list[threading.Event] = []
             with self._lock:
                 for x in pending:
-                    if x in self._cache:
+                    if x in done:
                         continue
                     ev = self._inflight.get(x)
                     if ev is not None:
@@ -239,7 +257,7 @@ class SparkEntropyEngine:
             for ev in waits:
                 ev.wait()
             with self._lock:
-                pending = [x for x in pending if x not in self._cache]
+                pending = [x for x in pending if x not in done]
             if pending and not todo and not waits:  # pragma: no cover
                 raise RuntimeError("entropy batch made no progress")
 
@@ -264,7 +282,7 @@ class SparkEntropyEngine:
         but as a *budgeting* signal 2^H is the effective (perplexity) group
         count, which is what sizes the shuffle. Optimistic on cold caches by
         design: unknown subsets cost nothing toward the budget, so cold
-        batches keep the full width."""
+        batches keep the full width. Never forces a count of N."""
         total = 0.0
         with self._lock:
             for c in x:
@@ -272,8 +290,8 @@ class SparkEntropyEngine:
                 if h is None:
                     return None
                 total += h
-        n = self.num_rows
-        return min(total, math.log2(n)) if n > 0 else total
+        n = self._num_rows
+        return min(total, math.log2(n)) if n else total
 
     def _next_chunk(self, todo: list[frozenset[str]]) -> list[frozenset[str]]:
         """Width-capped, cost-aware chunking (VERDICT r2 'what's wrong' #3),
@@ -298,7 +316,7 @@ class SparkEntropyEngine:
         prefix chunking fired the gate on 1 of 4 chunks, subsequence
         chunking on 3 of 4 (the 4th is the cold singleton seeding chunk),
         116 s -> ~80 s."""
-        n = self.num_rows
+        n = self._num_rows or 0  # unknown before the first job: no budget
         budget = self.group_budget_rows * n
         # pre-agg qualification threshold in bits (see _batch_grouping_sets:
         # chunks whose UNION-column perplexity is <= N/8 aggregate once on
@@ -359,10 +377,12 @@ class SparkEntropyEngine:
         return cur
 
     def _batch_grouping_sets(self, subsets: list[frozenset[str]]) -> None:
-        """The one entropy job: H(X) for every X in ``subsets`` from one scan
-        and one GROUP BY GROUPING SETS shuffle, stored in the cache. Runs
-        outside the lock: concurrent threads must not serialize behind a
-        blocking job (they only need the lock for the cache store)."""
+        """The one entropy job: H(X) and the group count |π_X(R)| for every
+        X in ``subsets`` from one scan and one grouping-sets shuffle, stored
+        in the caches; the job's sum(cnt) records N. Runs outside the lock:
+        concurrent threads must not serialize behind a blocking job (they
+        only need the lock for the cache store). No temp view: dropping one
+        uncaches the persisted plan it names, which is this engine's input."""
         union_cols: list[str] = []
         seen_cols: set[str] = set()
         for x in subsets:
@@ -377,7 +397,8 @@ class SparkEntropyEngine:
             self._batch_grouping_sets(subsets[:mid])
             self._batch_grouping_sets(subsets[mid:])
             return
-        n = self.num_rows
+        # backquoted: a plain name like "a.b" would resolve as a struct field
+        col = {c: F.col(f"`{c}`") for c in union_cols}
         # bit i (MSB-first over union_cols) is 1 when that column is
         # aggregated away (absent from the set)
         def gid_of(x: frozenset[str]) -> int:
@@ -387,78 +408,69 @@ class SparkEntropyEngine:
             return g
 
         gid_to_set = {gid_of(x): x for x in subsets}
-        sets_sql = ", ".join(
-            "(" + ", ".join(f"`{c}`" for c in sorted_cols(x, self.schema_cols)) + ")"
-            for x in subsets
-        )
+        sets = [[col[c] for c in sorted_cols(x, self.schema_cols)]
+                for x in subsets]
         # build gid from explicit grouping(col) flags with OUR bit
         # assignment — never from bare grouping_id(), whose bit positions
         # follow Spark's internal expression ordering and could silently
         # reassign same-size subsets if that ordering ever changes
         nbits = len(union_cols)
-        gid_expr = " + ".join(
-            f"(cast(grouping(`{c}`) as bigint) * {1 << (nbits - 1 - i)})"
-            for i, c in enumerate(union_cols))
-        # unique per call: id()-derived names can collide across recycled
-        # objects, silently aiming the SQL at another engine's relation
-        view = f"__rd_entropy_{uuid.uuid4().hex[:12]}"
-        self.df.createOrReplaceTempView(view)
+        gid = sum((F.grouping(col[c]).cast("bigint") * (1 << (nbits - 1 - i))
+                   for i, c in enumerate(union_cols)), F.lit(0).cast("bigint"))
         # Pre-aggregation gate: GROUPING SETS replicates every INPUT row
         # once per set (a 16-set chunk pushes 16N rows into partial
         # aggregation). When the cached perplexity estimate says the union
         # columns' effective group count G is far below N, aggregate ONCE
         # on the union (N -> ~G rows) and run the grouping sets over the
         # compressed counts — sum(cnt) per set is identical to count(1) on
-        # the raw rows (null column values group the same way; the
-        # grouping() flags that build gid are unaffected). Conservative by
-        # construction: cold caches or wide unions (est ~ log2 N) keep the
-        # direct path, and a wrong estimate costs one extra aggregation,
-        # never correctness. Gate factor 8 = require est G <= N/8. A single
-        # set replicates nothing, so it never pre-aggregates.
+        # the raw rows, and the number of groups per set is unchanged (null
+        # column values group the same way; the grouping() flags that build
+        # gid are unaffected). Conservative by construction: cold caches or
+        # wide unions (est ~ log2 N) keep the direct path, and a wrong
+        # estimate costs one extra aggregation, never correctness. Gate
+        # factor 8 = require est G <= N/8. A single set replicates nothing,
+        # so it never pre-aggregates.
+        n = self._num_rows
         est_union = self._est_log2_groups(frozenset(union_cols))
-        pre_agg = (len(subsets) > 1 and est_union is not None and n > 0
+        pre_agg = (len(subsets) > 1 and est_union is not None and bool(n)
                    and (2.0 ** est_union) * 8.0 <= n)
         with self._stats_lock:
             if pre_agg:
                 self.pre_agg_chunks += 1
             else:
                 self.direct_chunks += 1
+        keys = list(col.values())
         if pre_agg:
-            cols_sql = ", ".join(f"`{c}`" for c in union_cols)
-            src = (f"(SELECT {cols_sql}, count(1) AS __base_cnt "
-                   f"FROM {view} GROUP BY {cols_sql})")
-            cnt_expr = "sum(__base_cnt)"
+            src = self.df.groupBy(*keys).agg(
+                F.count(F.lit(1)).alias("__base_cnt"))
+            cnt = F.sum("__base_cnt")
         else:
-            src, cnt_expr = view, "count(1)"
-        inner = (
-            f"SELECT ({gid_expr}) AS gid, {cnt_expr} AS cnt FROM {src} "
-            f"GROUP BY GROUPING SETS ({sets_sql})"
-        )
-        outer = (
-            f"SELECT gid, sum(cnt * log2(cnt)) AS clogc "
-            f"FROM ({inner}) GROUP BY gid"
-        )
+            src, cnt = self.df, F.count(F.lit(1))
+        per_group = (src.groupingSets(sets, *keys)
+                     .agg(gid.alias("__gid"), cnt.alias("__cnt")))
+        per_set = per_group.groupBy("__gid").agg(
+            F.sum(F.col("__cnt") * F.log2("__cnt")).alias("clogc"),
+            F.count(F.lit(1)).alias("groups"),
+            F.sum("__cnt").alias("n"))
         t0 = time.monotonic()
-        try:
-            rows = self.df.sparkSession.sql(outer).collect()
-        finally:
-            self.df.sparkSession.catalog.dropTempView(view)
-        self._note_job(time.monotonic() - t0, n * len(subsets), 0)
-        got = {}
+        rows = per_set.collect()
+        # every set's sum(cnt) is N; a grouping set over an empty relation
+        # yields no row, so no row means N = 0
+        n = rows[0]["n"] if rows else 0
+        self._note_job(time.monotonic() - t0, n * len(subsets), len(subsets))
+        h = dict.fromkeys(subsets, 0.0)
+        groups = dict.fromkeys(subsets, 0)
         for r in rows:
-            x = gid_to_set.get(r["gid"])
+            x = gid_to_set.get(r["__gid"])
             if x is None:
                 continue  # duplicate-set gid collision impossible; ignore strays
-            clogc = r["clogc"] or 0.0
-            got[x] = math.log2(n) - clogc / n if n > 0 else 0.0
-        # a grouping set over a non-empty input always yields a row; over an
-        # empty relation it yields none — define H = 0 there
-        for x in subsets:
-            got.setdefault(x, 0.0)
+            h[x] = math.log2(n) - (r["clogc"] or 0.0) / n
+            groups[x] = r["groups"]
         with self._lock:
-            self._cache.update(got)
-        with self._stats_lock:
-            self.entropies_computed += len(got)
+            if self._num_rows is None:
+                self._num_rows = n
+            self._cache.update(h)
+            self._groups.update(groups)
 
     def key_columns(self, cols: Iterable[str]) -> frozenset[str]:
         """Columns whose single-column entropy equals log2(N) EXACTLY — i.e.
@@ -468,12 +480,12 @@ class SparkEntropyEngine:
         above one ulp of log2(N) for any N below ~3e14 rows (and beyond that
         the difference is sub-ulp, so calling it a key is within 1 ulp of
         correct anyway). Computes the singletons (one chunked job) if not
-        already cached."""
+        already cached, before reading N, so that job records N."""
         cols = list(cols)
+        self.entropies([frozenset((c,)) for c in cols])
         n = self.num_rows
         if n <= 0:
             return frozenset()
-        self.entropies([frozenset((c,)) for c in cols])
         logn = math.log2(n)
         with self._lock:
             return frozenset(c for c in cols
@@ -525,14 +537,16 @@ class SparkEntropyEngine:
                 self._batch_grouping_sets(
                     [frozenset(s) for s in _powerset(rest)])
             if keycols:
-                logn = math.log2(self.num_rows)
-                filled = {x: logn for x in lattice if x & keycols}
+                # every key-containing subset has N groups of size 1
+                n = self.num_rows
+                filled = {x: math.log2(n) for x in lattice if x & keycols}
                 with self._lock:
                     self._cache.update(filled)
+                    self._groups.update(dict.fromkeys(filled, n))
                 with self._stats_lock:
                     self.entropies_computed += len(filled)
 
-        self._claim_and_run(lattice, run)
+        self._claim_and_run(lattice, run, self._cache)
         with self._lock:
             return {x: (0.0 if not x else self._cache[x]) for x in lattice}
 

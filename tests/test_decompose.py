@@ -111,7 +111,6 @@ def test_validate_releases_projections_on_return(spark, warm_validator):
     assert good.spurious_tuples == 0 and other.spurious_tuples == 0
     shared = ("n_regionkey", "r_name")
     assert good.cluster_sizes[shared] == other.cluster_sizes[shared]
-    assert v._projs == {}
     assert _persisted(spark) == before
 
 
@@ -119,12 +118,11 @@ def test_validate_releases_projections_on_cancel(spark, warm_validator):
     v = warm_validator
     before = _persisted(spark)
 
-    def counted_one():
-        return any(e["count"] is not None for e in list(v._projs.values()))
+    def priced():
+        return v.eng.jobs_run > 0
 
     with pytest.raises(DecompositionCanceled):
-        v.validate([GOOD, BAD], should_stop=counted_one)
-    assert v._projs == {}
+        v.validate([GOOD, BAD], should_stop=priced)
     assert _persisted(spark) == before
     # nothing stale is left behind: the next validation is exact
     assert v.process_decomposition(GOOD).spurious_tuples == 0
@@ -133,18 +131,16 @@ def test_validate_releases_projections_on_cancel(spark, warm_validator):
 def test_validate_releases_projections_on_unknown_column(spark, warm_validator):
     v = warm_validator
     before = _persisted(spark)
-    # GOOD's projections are taken before the unknown column is reached
+    # the unknown column fails the pricing of all sets, GOOD's included
     with pytest.raises(ValueError, match="unknown column"):
         v.validate([GOOD, [["c_custkey", "no_such_column"]]])
-    assert v._projs == {}
     assert _persisted(spark) == before
 
 
 def test_concurrent_validates_share_and_release(spark, warm_validator):
     """More callers than cores validating overlapping sets on one
-    validator: every caller gets exact counts and the refcounted
-    projection cache ends empty (a lost refcount update would leave an
-    entry behind or unpersist one still in use)."""
+    validator: every caller gets exact counts and nothing is left
+    persisted."""
     v = warm_validator
     sets = [GOOD, [GOOD[0] + GOOD[1], GOOD[2]]]
     before = _persisted(spark)
@@ -157,5 +153,28 @@ def test_concurrent_validates_share_and_release(spark, warm_validator):
     finally:
         sys.setswitchinterval(old)
     assert all([i.spurious_tuples for i in r] == [0, 0] for r in results)
-    assert v._projs == {}
     assert _persisted(spark) == before
+
+
+def _cached(spark, df):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_validate_prices_every_projection_in_one_job(spark, warm_validator):
+    """One validate call prices every distinct projection of its sets in
+    one entropy-kernel job; a repeat call finds the counts cached. The
+    base stays cached throughout."""
+    v = warm_validator
+    merged = [GOOD[0] + GOOD[1], GOOD[2]]
+    first = v.validate([GOOD, BAD, merged])
+    assert v.eng.jobs_run == 1
+    again = v.validate([GOOD, BAD, merged])
+    assert v.eng.jobs_run == 1
+    assert [i.spurious_tuples for i in first] == \
+        [i.spurious_tuples for i in again]
+    assert first[0].spurious_tuples == 0 and first[1].spurious_tuples > 0
+    for info in first:
+        for cols, n in info.cluster_sizes.items():
+            assert n == v.base.select(*cols).distinct().count(), cols
+    assert _cached(spark, v.base)

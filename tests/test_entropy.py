@@ -385,3 +385,131 @@ def test_subsequence_chunking_skips_union_wideners(spark):
                                            abs=1e-9)
     finally:
         eng.unpersist()
+
+
+def _cached(spark, df):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_persisted_input_stays_cached_across_jobs(tiny, spark):
+    """Kernel jobs leave the engine's persisted input cached: a later job
+    must not re-scan the source plan."""
+    df, _ = tiny
+    eng = SparkEntropyEngine(df)
+    try:
+        eng.entropies([["u"], ["v"]])
+        eng.entropies([["u", "v"], ["v", "w"]])
+        assert eng.jobs_run == 2
+        assert _cached(spark, eng.df)
+    finally:
+        eng.unpersist()
+
+
+def _distinct(df, cols):
+    return df.select(*[f"`{c}`" for c in cols]).distinct().count()
+
+
+def test_group_counts_match_distinct_counts(spark):
+    """The kernel's group count of X is |SELECT DISTINCT X|, on the direct
+    path, for a column holding nulls, and for column names that need
+    quoting; the entropies of the same job match the oracle."""
+    data = [(f"p{i % 5}", None if i % 3 == 0 else i % 4, f"s {i % 2}")
+            for i in range(30)]
+    cols = ["a.b", "n", "c d"]
+    df = spark.createDataFrame(data, "`a.b` string, n int, `c d` string")
+    eng = SparkEntropyEngine(df)
+    try:
+        subsets = [frozenset(c) for r in (1, 2, 3)
+                   for c in itertools.combinations(cols, r)]
+        counts = eng.group_counts(subsets)
+        assert eng.jobs_run == 1 and eng.direct_chunks == 1
+        for s in subsets:
+            assert counts[s] == _distinct(df, sorted(s)), s
+        got = eng.entropies(subsets)
+        assert eng.jobs_run == 1                       # same job priced H
+        for s in subsets:
+            idxs = [cols.index(c) for c in s]
+            assert got[s] == pytest.approx(oracle_entropy(data, idxs),
+                                           abs=1e-9), s
+        assert counts[frozenset(("n",))] == 5          # 4 values + NULL
+        # the values the SQL-string kernel produced for these names
+        pinned = {("a.b",): 2.3219280948873626, ("c d",): 1.0,
+                  ("a.b", "c d"): 3.321928094887362,
+                  ("a.b", "c d", "n"): 4.7068905956085185}
+        for s, h in pinned.items():
+            assert got[frozenset(s)] == pytest.approx(h, abs=1e-12), s
+    finally:
+        eng.unpersist()
+
+
+def test_group_counts_on_preaggregated_path(spark):
+    """Same frame as test_preaggregated_grouping_sets_values: with the
+    pre-aggregation gate engaged, the group counts stay exact."""
+    import random
+    rng = random.Random(4242)
+    data = [tuple(rng.choice("abc") for _ in range(4)) for _ in range(810)]
+    df = spark.createDataFrame(data, "u string, v string, w string, x string")
+    eng = SparkEntropyEngine(df)
+    try:
+        cols = df.columns
+        eng.entropies([frozenset((c,)) for c in cols])   # warm singles
+        pairs = [frozenset(p) for p in itertools.combinations(cols, 2)]
+        before = eng.pre_agg_chunks
+        counts = eng.group_counts(pairs + [frozenset(cols)])
+        assert eng.pre_agg_chunks == before + 1
+        for s in pairs + [frozenset(cols)]:
+            assert counts[s] == _distinct(df, sorted(s)), s
+    finally:
+        eng.unpersist()
+
+
+def test_group_counts_of_key_subsets_need_no_job(spark):
+    """all_entropies fills every key-containing subset algebraically, its
+    group count (N) included."""
+    data = [(i, i % 3, i % 2) for i in range(12)]
+    cols = ["pk", "grp", "flag"]
+    df = spark.createDataFrame(data, cols)
+    eng = SparkEntropyEngine(df)
+    try:
+        eng.all_entropies()
+        jobs = eng.jobs_run
+        subsets = [frozenset(c) for r in (1, 2, 3)
+                   for c in itertools.combinations(cols, r)]
+        counts = eng.group_counts(subsets)
+        assert eng.jobs_run == jobs
+        for s in subsets:
+            assert counts[s] == _distinct(df, sorted(s)), s
+    finally:
+        eng.unpersist()
+
+
+def test_group_counts_on_empty_frame(spark):
+    df = spark.createDataFrame([], "u string, v int")
+    eng = SparkEntropyEngine(df, cache_input=False)
+    counts = eng.group_counts([["u"], ["u", "v"]])
+    assert counts == {frozenset(("u",)): 0, frozenset(("u", "v")): 0}
+    assert eng.entropies([["u"], ["u", "v"]]) == {
+        frozenset(("u",)): 0.0, frozenset(("u", "v")): 0.0}
+    assert eng.num_rows == 0 and eng.num_distinct == 0
+
+
+def test_row_counts_read_from_the_kernel(tiny, spark):
+    """After one entropies() call that covers the full column set, N and the
+    distinct count come from that job: reading them starts no Spark job."""
+    df, _ = tiny
+    eng = SparkEntropyEngine(df)
+    sc = spark.sparkContext
+    group = "entropy-count-probe"
+    try:
+        eng.entropies([["u"], df.columns])
+        sc.setJobGroup(group, "reads after one entropy job")
+        try:
+            assert eng.num_rows == 8
+            assert eng.num_distinct == 6
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        eng.unpersist()
