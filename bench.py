@@ -142,8 +142,9 @@ def build_queries(spark, sf_dir: str):
         # Floor note (round-6 profile): steady-state is ~2.5-2.7 s at
         # sf0.1, dominated by per-action job scheduling of the few jobs a
         # validation needs (base distinct+persist, one entropy-kernel job
-        # pricing the projections and the base, fold joins, final agg) —
-        # not data volume. The
+        # pricing the projections and the base, and, under 1M base rows,
+        # one Arrow collect the fold runs over on the driver) — not data
+        # volume. The
         # 2.78->3.38 s median creep flagged in round 5 was the COLD first
         # sample (the validator's base.distinct().persist() materializes
         # on first use: rep0 5.5 s vs rep1/2 2.5-2.7 s measured);
@@ -185,10 +186,8 @@ def build_queries(spark, sf_dir: str):
                         epsilon=0.0)
         miner.mine_all_min_seps()
         v = DecompositionValidator(denorm)
-        # candidate validations are independent short-job chains — run
-        # them concurrently (sequential 3x ~4.6 s of per-action
-        # scheduling vs ~5 s total overlapped; see
-        # DecompositionValidator.validate)
+        # all candidates in one validate call: one pricing job, then every
+        # fold (see DecompositionValidator.validate)
         candidates = list(itertools.islice(
             AcyclicSchemaEnumerator(tuple(denorm.columns),
                                     sorted(miner.mined_jds, key=str)), 3))

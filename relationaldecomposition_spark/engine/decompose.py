@@ -29,15 +29,23 @@ Scale notes (100 TB):
 - Projection sizes (A12) and the base count (A16) come from the entropy
   kernel over the persisted dedup'd base: |π_X(R)| is the number of groups
   of grouping set X, so one job prices every projection of a validate call.
-  Projections are not persisted; each is one column-pruned shuffle inside
-  its fold. The fold broadcasts any side known to be small — the "broadcast
-  small dims" rule, driven by exact counts instead of stats guesses. AQE
-  handles skewed join keys.
+- The count fold has two faces, chosen by that job's |base|. At most
+  BROADCAST_MAX_ROWS rows (the bound under which the Spark face broadcasts
+  every projection through the driver anyway), the base's needed columns
+  are collected once as Arrow and every fold runs on the driver in numpy,
+  with no further Spark job — the reference's single-node in-memory
+  validation. A fold step that would hold more rows than that bound, or a
+  larger base, takes the Spark face.
+- On the Spark face projections are not persisted; each is one
+  column-pruned shuffle inside its fold. The fold broadcasts any side known
+  to be small — the "broadcast small dims" rule, driven by exact counts
+  instead of stats guesses. AQE handles skewed join keys. It collects
+  nothing but one final scalar per set.
 - The group-by after every join keeps intermediates at most as wide as the
   union of remaining separators — the Yannakakis guarantee that
   intermediate size is bounded by output size for acyclic decompositions.
-- The fold never collects anything but per-cluster counts and one final
-  scalar.
+- Both faces compute in exact int64 and raise ARITHMETIC_OVERFLOW (ANSI)
+  rather than wrap.
 """
 
 from __future__ import annotations
@@ -45,7 +53,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..core.attrset import attrset, sorted_cols
 from .entropy import SparkEntropyEngine
@@ -53,7 +66,9 @@ from .fanout import fanout
 
 # Broadcast a fold side when its (exactly known) distinct row count is below
 # this. ~1M narrow rows ≈ tens of MB serialized: safely under default
-# executor memory while saving a shuffle of the big side.
+# executor memory while saving a shuffle of the big side. The same envelope
+# bounds the driver face: a base of at most this many rows is folded on the
+# driver, and no driver fold step holds more rows than this.
 BROADCAST_MAX_ROWS = 1_000_000
 
 
@@ -113,6 +128,88 @@ def _greedy_order(clusters: list[frozenset[str]]) -> list[frozenset[str]]:
     return order
 
 
+def _encode(col: pa.ChunkedArray) -> np.ndarray:
+    """int64 codes of one column collected from the dedup'd base, equal
+    exactly where Spark's grouping and join keys are equal; null is -1.
+    Arrow keys floats by their bits, which is Spark's key equality here:
+    the base is a DISTINCT over every column, and Spark normalizes float
+    grouping keys (one NaN, -0.0 as 0.0) in what it outputs."""
+    idx = pc.dictionary_encode(col.combine_chunks()).indices.fill_null(-1)
+    return idx.to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _group_ids(cols: list[np.ndarray], n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Group ids 0..k-1 of n rows of code columns (equal codes, equal id;
+    null codes group together) and the first row of each group."""
+    ids = np.zeros(n, np.int64)
+    for c in cols:
+        # ids < n and codes < |base|, so the packed key stays far below 2^63
+        key = ids * (int(c.max(initial=-1)) + 2) + (c + 1)
+        ids = np.unique(key, return_inverse=True)[1]
+    return ids, np.unique(ids, return_index=True)[1]
+
+
+def _checked_sums(gid: np.ndarray, k: int, w: np.ndarray) -> np.ndarray:
+    """Exact int64 sums of the positive counts ``w`` per group; raises
+    ARITHMETIC_OVERFLOW where Spark's ANSI sum would, instead of wrapping."""
+    sums = np.zeros(k, np.int64)
+    np.add.at(sums, gid, w)
+    # over at most BROADCAST_MAX_ROWS terms a float sum is within a relative
+    # 1e-9 of exact, so every group that could pass 2^63 reads above 2^62;
+    # only those are re-summed exactly
+    approx = np.bincount(gid, weights=w, minlength=k)
+    for g in np.flatnonzero(approx >= 2.0 ** 62):
+        if sum(map(int, w[gid == g])) > np.iinfo(np.int64).max:
+            raise ArithmeticException(
+                "[ARITHMETIC_OVERFLOW] long overflow in the join-size fold")
+    return sums
+
+
+def _driver_fold_total(codes: dict, n: int, cl, schema_cols) -> int | None:
+    """A13 on the driver: the fold of _fold_total_frame over the n encoded
+    base rows, in the same greedy order, joining on shared columns (a null
+    key never matches) and summing counts per still-needed group. Returns
+    |⋈ projections|, or None when a step's join would hold more than
+    BROADCAST_MAX_ROWS rows, a size read off the two sides' key histograms
+    before the step is materialized."""
+    def project(c):
+        cols = sorted_cols(c, schema_cols)
+        first = _group_ids([codes[x] for x in cols], n)[1]
+        return {x: codes[x][first] for x in cols}, len(first)
+
+    acc, m = project(cl[0])
+    acc_attrs, cnt = cl[0], np.ones(m, np.int64)
+    for i in range(1, len(cl)):
+        p2, r = project(cl[i])  # distinct: every right-side count is 1
+        keys = [np.concatenate([acc[x], p2[x]])
+                for x in sorted_cols(acc_attrs & cl[i], schema_cols)]
+        ids = _group_ids(keys, m + r)[0]  # no shared column: all one key
+        for key in keys:
+            ids[key < 0] = -1
+        lid, rid = ids[:m], ids[m:]
+        rows = np.flatnonzero(rid >= 0)
+        # the extra last slot stays 0, so a null key (-1) finds no partner
+        hist = np.bincount(rid[rows], minlength=int(ids.max(initial=-1)) + 2)
+        per = hist[lid]
+        size = int(per.sum())
+        if size > BROADCAST_MAX_ROWS:
+            return None
+        # left row li[j] meets the right rows of its key, stored contiguously
+        li = np.repeat(np.arange(m), per)
+        run = np.arange(size) - np.repeat(np.cumsum(per) - per, per)
+        by_key = rows[np.argsort(rid[rows], kind="stable")]
+        ri = by_key[(np.cumsum(hist) - hist)[lid[li]] + run]
+        acc_attrs = acc_attrs | cl[i]
+        needed = frozenset().union(*cl[i + 1:])
+        group = sorted_cols(needed & acc_attrs, schema_cols)
+        vals = [acc[x][li] if x in acc else p2[x][ri] for x in group]
+        gid, first = _group_ids(vals, size)
+        acc, m = {x: v[first] for x, v in zip(group, vals)}, len(first)
+        cnt = _checked_sums(gid, m, cnt[li])
+    # the last step groups by nothing: cnt is one checked sum, or all 1s
+    return int(cnt.sum())
+
+
 class DecompositionValidator:
     """Spurious-tuple counting for a set of clusters over one relation."""
 
@@ -141,38 +238,75 @@ class DecompositionValidator:
                  should_stop=None) -> list[DecompositionInfo]:
         """Validate several cluster sets (e.g. candidate schemas); returns
         one DecompositionInfo per set, in input order, with spurious_tuples
-        = |⋈ projections| − |base|.
+        = |⋈ projections| − |base|. The joins are natural joins, so a null
+        in a join column matches nothing and the spurious count can be
+        negative when a join column holds nulls.
 
         ONE entropy-kernel job prices every distinct projection across all
-        sets, and the base (a repeat call finds them priced). The sets'
-        count folds then run 4 at a time: single validations are chains of
-        short jobs whose cost is per-action scheduling latency, so
-        overlapping them is what makes candidate validation fast.
+        sets, and the base (a repeat call finds them priced). The count
+        folds then take one of two faces, chosen by |base| from that job:
+
+        - |base| <= BROADCAST_MAX_ROWS: the fold would broadcast every
+          projection through the driver anyway, so the base's needed
+          columns are collected ONCE as Arrow and every set folds on the
+          driver (_driver_fold_total). A set whose fold would hold more
+          than BROADCAST_MAX_ROWS rows at any step falls to the Spark face.
+        - otherwise, and for those sets: the Spark fold, 4 sets at a time,
+          since a single fold is a chain of short jobs whose cost is
+          per-action scheduling latency.
 
         ``should_stop``: optional callable polled before the pricing job and
-        before each fold's final aggregate — cancelJobGroup only kills
-        in-flight jobs, so without this check a canceled run would still
-        launch the remaining ones."""
+        before each set's fold (on the Spark face, before its final
+        aggregate) — cancelJobGroup only kills in-flight jobs, so without
+        this check a canceled run would still launch the remaining ones."""
         stop = should_stop or (lambda: False)
         orders = [_greedy_order([attrset(c) for c in cs])
                   for cs in cluster_sets]
         if stop():
             raise DecompositionCanceled("canceled before projection pricing")
         counts = self.eng.group_counts(c for cl in orders for c in cl)
-
-        def fold(cl):
-            info = DecompositionInfo()
-            if not cl:
-                return info
+        infos = [DecompositionInfo() for _ in orders]
+        for info, cl in zip(infos, orders):
             for c in cl:
                 info.add(c, counts[c])
+        todo = [i for i, cl in enumerate(orders) if cl]
+        codes = self._driver_codes(orders) if todo else None
+        if codes is not None:
+            spark_todo = []
+            for i in todo:
+                if stop():
+                    raise DecompositionCanceled("canceled before a fold")
+                total = _driver_fold_total(codes, self.num_tuples, orders[i],
+                                           self.schema_cols)
+                if total is None:
+                    spark_todo.append(i)
+                else:
+                    infos[i].spurious_tuples = total - self.num_tuples
+            todo = spark_todo
+
+        def fold(i):
             if stop():
                 raise DecompositionCanceled("canceled before final aggregate")
-            total = self._fold_total_frame(cl, counts).first()["total"]
-            info.spurious_tuples = int(total or 0) - self.num_tuples
-            return info
+            total = self._fold_total_frame(orders[i], counts).first()["total"]
+            infos[i].spurious_tuples = int(total or 0) - self.num_tuples
 
-        return fanout(self.base.sparkSession, fold, orders, 4)
+        fanout(self.base.sparkSession, fold, todo, 4)
+        return infos
+
+    def _driver_codes(self, orders) -> dict | None:
+        """The driver face's input: every column the sets mention, collected
+        from the persisted base in one Arrow job and encoded (_encode).
+        None when |base| > BROADCAST_MAX_ROWS, or when a column is nested,
+        which the encoder cannot key."""
+        if self.num_tuples > BROADCAST_MAX_ROWS:
+            return None
+        cols = sorted_cols(frozenset().union(*(c for cl in orders for c in cl)),
+                           self.schema_cols)
+        nested = (ArrayType, MapType, StructType)
+        if any(isinstance(self.base.schema[c].dataType, nested) for c in cols):
+            return None
+        tbl = self.base.select(*[F.col(f"`{c}`") for c in cols]).toArrow()
+        return {c: _encode(tbl.column(i)) for i, c in enumerate(cols)}
 
     def _fold_total_frame(self, cl, counts) -> DataFrame:
         """The lazy join-size fold of a greedy-ordered cluster list: a

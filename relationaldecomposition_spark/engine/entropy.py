@@ -390,9 +390,10 @@ class SparkEntropyEngine:
                 if c not in seen_cols:
                     seen_cols.add(c)
                     union_cols.append(c)
-        if len(union_cols) > 62:
+        if len(union_cols) > 62 and len(subsets) > 1:
             # gid arithmetic below needs one bigint bit per union column;
-            # beyond 62 split the batch rather than overflow
+            # beyond 62 split the batch rather than overflow (one set needs
+            # no gid bits, so a single wide set never splits)
             mid = len(subsets) // 2
             self._batch_grouping_sets(subsets[:mid])
             self._batch_grouping_sets(subsets[mid:])
@@ -415,8 +416,14 @@ class SparkEntropyEngine:
         # follow Spark's internal expression ordering and could silently
         # reassign same-size subsets if that ordering ever changes
         nbits = len(union_cols)
-        gid = sum((F.grouping(col[c]).cast("bigint") * (1 << (nbits - 1 - i))
-                   for i, c in enumerate(union_cols)), F.lit(0).cast("bigint"))
+        if len(subsets) == 1:
+            # one set is a plain GROUP BY at gid 0: no grouping() flags, and
+            # no grouping-id width limit on how many columns it may hold
+            gid = F.lit(0).cast("bigint")
+        else:
+            gid = sum((F.grouping(col[c]).cast("bigint") * (1 << (nbits - 1 - i))
+                       for i, c in enumerate(union_cols)),
+                      F.lit(0).cast("bigint"))
         # Pre-aggregation gate: GROUPING SETS replicates every INPUT row
         # once per set (a 16-set chunk pushes 16N rows into partial
         # aggregation). When the cached perplexity estimate says the union
@@ -446,8 +453,9 @@ class SparkEntropyEngine:
             cnt = F.sum("__base_cnt")
         else:
             src, cnt = self.df, F.count(F.lit(1))
-        per_group = (src.groupingSets(sets, *keys)
-                     .agg(gid.alias("__gid"), cnt.alias("__cnt")))
+        grouped = (src.groupBy(*sets[0]) if len(subsets) == 1
+                   else src.groupingSets(sets, *keys))
+        per_group = grouped.agg(gid.alias("__gid"), cnt.alias("__cnt"))
         per_set = per_group.groupBy("__gid").agg(
             F.sum(F.col("__cnt") * F.log2("__cnt")).alias("clogc"),
             F.count(F.lit(1)).alias("groups"),

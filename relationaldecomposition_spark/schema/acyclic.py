@@ -224,8 +224,8 @@ def validate_schema(validator, schema: AcyclicSchema):
 
 def validate_schemas_concurrent(validator, schemas) -> list:
     """validate_schema over several CANDIDATE schemas in one
-    ``DecompositionValidator.validate`` call, which counts the clusters
-    they share once and overlaps their folds; returns the
+    ``DecompositionValidator.validate`` call, which prices the clusters
+    they share once and then folds every schema; returns the
     DecompositionInfo list in input order."""
     schemas = list(schemas)
     for s in schemas:

@@ -1,3 +1,4 @@
+import functools
 import os
 import sys
 
@@ -39,3 +40,24 @@ def sf_dir():
 
 def load(spark, table, sf_dir=SF_DIR):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def both_faces(test):
+    """Run a validation test on both faces of the count fold under its one
+    name: first the driver face (the default for every base this small),
+    then the Spark face, reached by withholding the driver face's input.
+    The size bound keeps its value, so the Spark face broadcasts as it
+    does in production."""
+    from relationaldecomposition_spark.engine import decompose
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        test(*args, **kwargs)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(decompose.DecompositionValidator, "_driver_codes",
+                       lambda self, orders: None)
+            try:
+                test(*args, **kwargs)
+            except AssertionError as e:
+                raise AssertionError(f"on the Spark face: {e}") from e
+    return run

@@ -10,7 +10,7 @@ from relationaldecomposition_spark.engine.measures import MeasureEngine
 from relationaldecomposition_spark.mining.jd_miner import JDMiner
 from relationaldecomposition_spark.schema.acyclic import (
     AcyclicSchema, AcyclicSchemaEnumerator, is_compatible, validate_schema)
-from tests.conftest import load
+from tests.conftest import both_faces, load
 
 COLS = ["c_custkey", "c_nationkey", "c_mktsegment", "n_name", "n_regionkey", "r_name"]
 
@@ -72,6 +72,7 @@ def denorm6(spark):
              .select(*COLS))
 
 
+@both_faces
 def test_validate_schemas_concurrent_matches_sequential(denorm6):
     """The thread-pooled candidate validation must return the same
     DecompositionInfo values, in input order, as sequential
@@ -100,6 +101,7 @@ def test_validate_schemas_concurrent_matches_sequential(denorm6):
     v.close()
 
 
+@both_faces
 def test_mine_enumerate_validate_pipeline(denorm6):
     """End-to-end: mine JDs -> enumerate acyclic schemas -> every schema's
     decomposition is lossless (measure 0 JDs => 0 spurious tuples)."""

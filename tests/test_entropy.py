@@ -513,3 +513,23 @@ def test_row_counts_read_from_the_kernel(tiny, spark):
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     finally:
         eng.unpersist()
+
+
+@pytest.mark.parametrize("width", [63, 70])
+def test_single_grouping_set_wider_than_62_columns(spark, width):
+    """One set needs no gid bits: a set wider than the 62-column gid budget
+    (and wider than Spark's 64-column grouping-set limit) runs as a plain
+    GROUP BY, and a batch of such sets splits down to single sets."""
+    df = spark.range(4).selectExpr(*[f"id % 2 AS c{j}" for j in range(width)])
+    eng = SparkEntropyEngine(df)
+    try:
+        assert eng.num_distinct == 2
+        assert eng.jobs_run == 1
+        full = frozenset(df.columns)
+        assert eng.entropy(full) == pytest.approx(1.0, abs=1e-12)
+        rest = full - {"c0"}
+        assert eng.group_counts([rest, full - {"c1"}]) == {
+            rest: 2, full - {"c1"}: 2}
+        assert eng.jobs_run == 3
+    finally:
+        eng.unpersist()
