@@ -28,19 +28,23 @@ relation is deduplicated before anything else (worker copies are
 Scale notes (100 TB):
 - Projection sizes (A12) and the base count (A16) come from the entropy
   kernel over the persisted dedup'd base: |π_X(R)| is the number of groups
-  of grouping set X, so one job prices every projection of a validate call.
-- The count fold has two faces, chosen by that job's |base|. At most
-  BROADCAST_MAX_ROWS rows (the bound under which the Spark face broadcasts
-  every projection through the driver anyway), the base's needed columns
-  are collected once as Arrow and every fold runs on the driver in numpy,
-  with no further Spark job — the reference's single-node in-memory
-  validation. A fold step that would hold more rows than that bound, or a
-  larger base, takes the Spark face.
+  of grouping set X.
+- The kernel's sizing count() reads |base|, and both the pricing and the
+  count fold follow it. At most BROADCAST_MAX_ROWS rows (the bound under which
+  the Spark face broadcasts every projection through the driver anyway),
+  the kernel collects the base once as Arrow and encodes it; pricing and
+  every fold then run on the driver in numpy from those codes, with no
+  further Spark job — the reference's single-node in-memory validation.
+  Concurrent validations on one validator share that one collect. A fold
+  step that would hold more rows than that bound, or a larger base, takes
+  the Spark face, after one pricing job per validate call.
 - On the Spark face projections are not persisted; each is one
-  column-pruned shuffle inside its fold. The fold broadcasts any side known
-  to be small — the "broadcast small dims" rule, driven by exact counts
-  instead of stats guesses. AQE handles skewed join keys. It collects
-  nothing but one final scalar per set.
+  column-pruned shuffle inside its fold. Columns are referenced backquoted
+  and the count columns are named apart from the base's, so any column
+  name folds. The fold broadcasts any side known to be small — the
+  "broadcast small dims" rule, driven by exact counts instead of stats
+  guesses. AQE handles skewed join keys. It collects nothing but one final
+  scalar per set.
 - The group-by after every join keeps intermediates at most as wide as the
   union of remaining separators — the Yannakakis guarantee that
   intermediate size is bounded by output size for acyclic decompositions.
@@ -54,22 +58,13 @@ from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..core.attrset import attrset, sorted_cols
-from .entropy import SparkEntropyEngine
+from .entropy import (BROADCAST_MAX_ROWS, SparkEntropyEngine, _col, _fresh,
+                      _group_ids)
 from .fanout import fanout
-
-# Broadcast a fold side when its (exactly known) distinct row count is below
-# this. ~1M narrow rows ≈ tens of MB serialized: safely under default
-# executor memory while saving a shuffle of the big side. The same envelope
-# bounds the driver face: a base of at most this many rows is folded on the
-# driver, and no driver fold step holds more rows than this.
-BROADCAST_MAX_ROWS = 1_000_000
 
 
 class DecompositionCanceled(RuntimeError):
@@ -98,13 +93,13 @@ class DecompositionInfo:
 
 
 def project_cluster(base: DataFrame, cluster, schema_cols=None,
-                    with_cnt: bool = True) -> DataFrame:
-    """A12: distinct projection of one cluster, with the literal cnt column
-    the count-fold multiplies through."""
+                    cnt: str | None = "cnt") -> DataFrame:
+    """A12: distinct projection of one cluster, with the literal count
+    column ``cnt`` the count-fold multiplies through (none when None)."""
     cols = sorted_cols(attrset(cluster), schema_cols or base.columns)
-    proj = base.select(*cols).distinct()
-    if with_cnt:
-        proj = proj.withColumn("cnt", F.lit(1).cast("bigint"))
+    proj = base.select(*map(_col, cols)).distinct()
+    if cnt is not None:
+        proj = proj.withColumn(cnt, F.lit(1).cast("bigint"))
     return proj
 
 
@@ -126,27 +121,6 @@ def _greedy_order(clusters: list[frozenset[str]]) -> list[frozenset[str]]:
         order.append(best)
         acc |= best
     return order
-
-
-def _encode(col: pa.ChunkedArray) -> np.ndarray:
-    """int64 codes of one column collected from the dedup'd base, equal
-    exactly where Spark's grouping and join keys are equal; null is -1.
-    Arrow keys floats by their bits, which is Spark's key equality here:
-    the base is a DISTINCT over every column, and Spark normalizes float
-    grouping keys (one NaN, -0.0 as 0.0) in what it outputs."""
-    idx = pc.dictionary_encode(col.combine_chunks()).indices.fill_null(-1)
-    return idx.to_numpy(zero_copy_only=False).astype(np.int64)
-
-
-def _group_ids(cols: list[np.ndarray], n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Group ids 0..k-1 of n rows of code columns (equal codes, equal id;
-    null codes group together) and the first row of each group."""
-    ids = np.zeros(n, np.int64)
-    for c in cols:
-        # ids < n and codes < |base|, so the packed key stays far below 2^63
-        key = ids * (int(c.max(initial=-1)) + 2) + (c + 1)
-        ids = np.unique(key, return_inverse=True)[1]
-    return ids, np.unique(ids, return_index=True)[1]
 
 
 def _checked_sums(gid: np.ndarray, k: int, w: np.ndarray) -> np.ndarray:
@@ -242,18 +216,21 @@ class DecompositionValidator:
         in a join column matches nothing and the spurious count can be
         negative when a join column holds nulls.
 
-        ONE entropy-kernel job prices every distinct projection across all
+        The entropy kernel prices every distinct projection across all
         sets, and the base (a repeat call finds them priced). The count
-        folds then take one of two faces, chosen by |base| from that job:
+        folds then take the kernel's face, chosen by its sizing count of
+        |base|:
 
         - |base| <= BROADCAST_MAX_ROWS: the fold would broadcast every
-          projection through the driver anyway, so the base's needed
-          columns are collected ONCE as Arrow and every set folds on the
-          driver (_driver_fold_total). A set whose fold would hold more
-          than BROADCAST_MAX_ROWS rows at any step falls to the Spark face.
-        - otherwise, and for those sets: the Spark fold, 4 sets at a time,
-          since a single fold is a chain of short jobs whose cost is
-          per-action scheduling latency.
+          projection through the driver anyway, so every set folds on the
+          driver (_driver_fold_total) over the codes of the kernel's one
+          Arrow collect of the base, which priced the projections too. A
+          set whose fold would hold more than BROADCAST_MAX_ROWS rows at
+          any step falls to the Spark face.
+        - otherwise, and for those sets: one kernel job prices the
+          projections, and the Spark fold runs 4 sets at a time, since a
+          single fold is a chain of short jobs whose cost is per-action
+          scheduling latency.
 
         ``should_stop``: optional callable polled before the pricing job and
         before each set's fold (on the Spark face, before its final
@@ -270,13 +247,13 @@ class DecompositionValidator:
             for c in cl:
                 info.add(c, counts[c])
         todo = [i for i, cl in enumerate(orders) if cl]
-        codes = self._driver_codes(orders) if todo else None
-        if codes is not None:
+        table = self.eng.driver_table() if todo else None
+        if table is not None:
             spark_todo = []
             for i in todo:
                 if stop():
                     raise DecompositionCanceled("canceled before a fold")
-                total = _driver_fold_total(codes, self.num_tuples, orders[i],
+                total = _driver_fold_total(table.codes, table.rows, orders[i],
                                            self.schema_cols)
                 if total is None:
                     spark_todo.append(i)
@@ -293,31 +270,17 @@ class DecompositionValidator:
         fanout(self.base.sparkSession, fold, todo, 4)
         return infos
 
-    def _driver_codes(self, orders) -> dict | None:
-        """The driver face's input: every column the sets mention, collected
-        from the persisted base in one Arrow job and encoded (_encode).
-        None when |base| > BROADCAST_MAX_ROWS, or when a column is nested,
-        which the encoder cannot key."""
-        if self.num_tuples > BROADCAST_MAX_ROWS:
-            return None
-        cols = sorted_cols(frozenset().union(*(c for cl in orders for c in cl)),
-                           self.schema_cols)
-        nested = (ArrayType, MapType, StructType)
-        if any(isinstance(self.base.schema[c].dataType, nested) for c in cols):
-            return None
-        tbl = self.base.select(*[F.col(f"`{c}`") for c in cols]).toArrow()
-        return {c: _encode(tbl.column(i)) for i, c in enumerate(cols)}
-
     def _fold_total_frame(self, cl, counts) -> DataFrame:
         """The lazy join-size fold of a greedy-ordered cluster list: a
         single-row DataFrame whose column ``total`` = |⋈ projections|."""
+        cnt = _fresh("cnt", self.schema_cols)
+        cnt_r = _fresh("cnt_r", self.schema_cols)
         acc_attrs = cl[0]
-        acc = project_cluster(self.base, cl[0], self.schema_cols)
+        acc = project_cluster(self.base, cl[0], self.schema_cols, cnt)
         acc_count = counts[cl[0]]
         for i in range(1, len(cl)):
             c2 = cl[i]
-            p2 = (project_cluster(self.base, c2, self.schema_cols)
-                  .withColumnRenamed("cnt", "cnt_r"))
+            p2 = project_cluster(self.base, c2, self.schema_cols, cnt_r)
             join_cols = sorted_cols(acc_attrs & c2, self.schema_cols)
             new_attrs = acc_attrs | c2
             # attributes still needed: anything a remaining cluster mentions
@@ -331,9 +294,9 @@ class DecompositionValidator:
                 left = F.broadcast(left)
             joined = (left.join(right, on=join_cols) if join_cols
                       else left.crossJoin(right))
-            prod = (F.sum(F.col("cnt") * F.col("cnt_r"))).alias("cnt")
+            prod = F.sum(F.col(cnt) * F.col(cnt_r)).alias(cnt)
             if group_cols:
-                acc = joined.groupBy(*group_cols).agg(prod)
+                acc = joined.groupBy(*map(_col, group_cols)).agg(prod)
             else:
                 acc = joined.agg(prod)
             acc_attrs = new_attrs
@@ -341,7 +304,7 @@ class DecompositionValidator:
             # count-based broadcast of the accumulator from here on (AQE
             # still upgrades it at runtime if it turns out small)
             acc_count = BROADCAST_MAX_ROWS + 1
-        return acc.agg(F.sum("cnt").alias("total"))
+        return acc.agg(F.sum(F.col(cnt)).alias("total"))
 
     # -- A15 naive oracle -----------------------------------------------------
 
@@ -350,7 +313,7 @@ class DecompositionValidator:
         base count (testDecomposition)."""
         cl = [attrset(c) for c in clusters]
         cl = _greedy_order(cl)
-        dfs = [project_cluster(self.base, c, self.schema_cols, with_cnt=False)
+        dfs = [project_cluster(self.base, c, self.schema_cols, cnt=None)
                for c in cl]
 
         def nat_join(a, b):
@@ -420,7 +383,7 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
         # local location first. Real metastores never orphan.
         spark.sql(f"DROP TABLE IF EXISTS `{name}`")
         _remove_orphan_table_location(spark, name)
-        writer = base.select(*cols).distinct().write.mode("overwrite")
+        writer = base.select(*map(_col, cols)).distinct().write.mode("overwrite")
         if join_key in cols:
             writer = writer.bucketBy(num_buckets, join_key).sortBy(join_key)
         writer.saveAsTable(name)

@@ -3,18 +3,31 @@
 Replaces the reference's three entropy backends — full-scan counting
 (`entropy/ExternalFileDataSet.java:44-166`), H2 inverted-index SQL
 (`entropy/CompressedDB.java`), and column-range-partitioned k-way joins
-(`entropy/MasterCompressedDB.java`) — with one Spark-native design:
+(`entropy/MasterCompressedDB.java`) — with one rule: count on the driver
+when the relation is small, on Spark otherwise. Both faces compute
 
   H(X) = log2(N) - (1/N) * sum over groups g of X of (c_g * log2(c_g))
 
-computed as ``df.groupBy(*X).count()`` + a scalar aggregate: one shuffle of
-exactly the columns in X (Catalyst prunes the parquet scan to X), partial
-map-side aggregation, and a one-row collect. The reference's dictionary
-encoding (A3), inverted indexes (A4), tid joins (A6), and HAVING-singleton
-correction (`entropy/CompressedDB.java:275-284,330-340`) all exist to make a
-single-node SQL engine do this cheaply; on Spark they are subsumed by the
-shuffle-based hash aggregate and Parquet's native dictionary encoding, so
-none of them are materialized here.
+Sizing. The engine's first kernel action is a count() of its persisted
+input: N, which the lazy mining path (H(R)) and the validator (|base|)
+need anyway. It scans the cache and shuffles nothing.
+
+Driver face. When N <= BROADCAST_MAX_ROWS and no column is nested, the raw
+rows are collected ONCE as Arrow, every column is dictionary-encoded (A3,
+``_encode``), and repeated rows fold into D distinct rows with their
+multiplicities. From then on every request is answered in numpy with no
+Spark job: group ids, weighted ``bincount``, then H and the group count.
+This is the reference's single-node design (`entropy/CompressedDB.java`:
+encode once into in-memory H2, memoize every entropy); at this size a
+Spark job is planning and scheduling latency, not work.
+
+Spark face (larger N, or a nested column): ``df.groupBy(*X).count()`` + a
+scalar aggregate: one shuffle of exactly the columns in X (Catalyst prunes
+the scan to X), partial map-side aggregation, and a collect of one row per
+set. The reference's inverted indexes (A4), tid joins (A6), and
+HAVING-singleton correction (`entropy/CompressedDB.java:275-284,330-340`)
+exist to make a single-node SQL engine do this cheaply; on Spark they are
+subsumed by the shuffle-based hash aggregate.
 
 Batching (A8, `ExternalFileDataSet.computeEntropies:111-166` — one scan
 feeding many count maps) maps to ``DataFrame.groupingSets``: one scan +
@@ -33,8 +46,11 @@ Scale notes (100 TB):
 - Entropy is algebraic: sum(c*log2(c)) over a group-by — partial aggregation
   means shuffled bytes are O(#distinct groups), not O(rows).
 - High-cardinality subsets (worst case: near-key column sets) shuffle one
-  row per group; AQE coalescing keeps partition counts sane. No driver-side
-  data beyond the final scalar ever materializes.
+  row per group; AQE coalescing keeps partition counts sane. The Spark face
+  collects one row per grouping set.
+- The driver face holds at most BROADCAST_MAX_ROWS rows as int64 codes
+  (8 bytes per cell) for the engine's lifetime. Above the bound the only
+  cost it adds is the count() per engine, a scan of the cached input.
 - The driver-side cache (A9) is the real optimizer: lattice searches re-ask
   the same subsets constantly; the reference relies on the same memoization
   (`entropy/ExternalFileDataSet.java:15,44-48`).
@@ -46,8 +62,13 @@ import math
 import threading
 import time
 from collections.abc import Callable, Iterable, Sequence
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..core.attrset import attrset, sorted_cols
 
@@ -80,6 +101,76 @@ def _powerset(cols: Sequence[str]):
     import itertools
     for r in range(len(cols) + 1):
         yield from itertools.combinations(cols, r)
+
+
+def _col(name: str) -> Column:
+    """A column by its exact name: backquoted, so "a.b" is not read as a
+    struct field."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _fresh(name: str, taken) -> str:
+    """``name``, prefixed with underscores until no column of ``taken``
+    has it (Spark resolves names case-insensitively)."""
+    low = {c.lower() for c in taken}
+    while name.lower() in low:
+        name = "_" + name
+    return name
+
+
+# Broadcast a Spark fold side when its (exactly known) distinct row count is
+# below this. ~1M narrow rows ≈ tens of MB serialized: safely under default
+# executor memory while saving a shuffle of the big side. The same envelope
+# bounds the driver faces: a relation of at most this many rows is
+# collected and counted on the driver, and no driver fold step holds more
+# rows than this.
+BROADCAST_MAX_ROWS = 1_000_000
+
+
+# ----- dictionary codes: the driver faces' one in-memory form ---------------
+
+
+@dataclass(frozen=True)
+class CodeTable:
+    """A relation's D distinct rows as codes: column -> int64 codes (null is
+    -1), and each row's multiplicity (None when every row occurs once).
+    The entropy kernel's driver face counts group sizes on it, and the
+    validator's count fold joins on it."""
+
+    codes: dict[str, np.ndarray]
+    weights: np.ndarray | None
+    rows: int
+
+
+def _encode(col: pa.ChunkedArray) -> np.ndarray:
+    """int64 codes of one collected column, equal exactly where Spark's
+    grouping and join keys are equal; null is -1. Arrow keys floats by
+    their bits, so floats are first normalized as Spark normalizes its
+    grouping keys: -0.0 becomes 0.0 and every NaN one NaN."""
+    arr = col.combine_chunks()
+    if pa.types.is_floating(arr.type):
+        arr = pc.if_else(pc.is_nan(arr), pa.scalar(float("nan"), arr.type),
+                         pc.add(arr, pa.scalar(0.0, arr.type)))
+    idx = pc.dictionary_encode(arr).indices.fill_null(-1)
+    return idx.to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _refine(ids: np.ndarray, codes: np.ndarray) -> tuple[np.ndarray, int]:
+    """Group ids 0..k-1 of the rows keyed by (ids, codes), and k: rows with
+    equal ids and equal codes share an id, null codes group together."""
+    # ids < rows and codes < rows, so the packed key stays far below 2^63
+    key = ids * (int(codes.max(initial=-1)) + 2) + (codes + 1)
+    uniq, inv = np.unique(key, return_inverse=True)
+    return inv, len(uniq)
+
+
+def _group_ids(cols: list[np.ndarray], n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Group ids 0..k-1 of n rows of code columns (equal codes, equal id;
+    null codes group together) and the first row of each group."""
+    ids = np.zeros(n, np.int64)
+    for c in cols:
+        ids = _refine(ids, c)[0]
+    return ids, np.unique(ids, return_index=True)[1]
 
 
 def entropy_from_counts(counts: Iterable[int], num_rows: int) -> float:
@@ -134,6 +225,11 @@ class SparkEntropyEngine:
         self._inflight: dict[frozenset[str], threading.Event] = {}
         # N: recorded by the first kernel job from its own sum(cnt)
         self._num_rows: int | None = None
+        # the driver face's input, built once by sizing under _size_lock;
+        # None after sizing means the Spark face
+        self._table: CodeTable | None = None
+        self._sized = False
+        self._size_lock = threading.Lock()
         # Stats mirroring the reference's scan instrumentation
         # (entropy/IDataset.java:18-19 getNumDBScans/getTotalScanTime;
         # MasterCompressedDB totalNumQueriesIsuues/totalTimeSpentQuerying/
@@ -161,8 +257,11 @@ class SparkEntropyEngine:
 
     @property
     def num_rows(self) -> int:
-        """N. Every kernel job records it as its sum(cnt), so only a read
-        before the first job costs a count() of its own."""
+        """N. Sizing counts it, and every kernel job records it as its
+        sum(cnt); with no sizing (a nested column) a read before the first
+        job costs a count() of its own."""
+        if self._num_rows is None:
+            self.driver_table()
         if self._num_rows is None:
             self._num_rows = self.df.count()
         return self._num_rows
@@ -200,9 +299,10 @@ class SparkEntropyEngine:
             return 0.0
         return self.entropies([x])[x]
 
-    def _note_job(self, seconds: float, tuples: int, entropies: int) -> None:
+    def _note_job(self, seconds: float, tuples: int, entropies: int,
+                  jobs: int = 1) -> None:
         with self._stats_lock:
-            self.jobs_run += 1
+            self.jobs_run += jobs
             self.entropies_computed += entropies
             self.scan_seconds += seconds
             self.tuples_processed += tuples
@@ -270,7 +370,9 @@ class SparkEntropyEngine:
         while remaining:
             if self.stop_check is not None and self.stop_check():
                 raise MiningCancelled("entropy batch cancelled by stop flag")
-            chunk = self._next_chunk(remaining)
+            # the driver face answers any batch in numpy: nothing to chunk
+            chunk = (remaining if self.driver_table() is not None
+                     else self._next_chunk(remaining))
             taken = set(chunk)  # subsequence, not prefix
             remaining = [x for x in remaining if x not in taken]
             self._batch_grouping_sets(chunk)
@@ -377,6 +479,96 @@ class SparkEntropyEngine:
         return cur
 
     def _batch_grouping_sets(self, subsets: list[frozenset[str]]) -> None:
+        """H(X) and the group count |π_X(R)| for every X in ``subsets``,
+        stored in the caches: in numpy on the driver face, else in one
+        Spark job."""
+        table = self.driver_table()
+        if table is not None:
+            self._driver_batch(table, subsets)
+        else:
+            self._spark_batch(subsets)
+
+    # ----- driver face --------------------------------------------------------
+
+    def driver_table(self) -> CodeTable | None:
+        """The driver face's codes, or None for the Spark face. The first
+        call sizes the input (``_collect_table``); concurrent callers wait
+        for it, so the input is counted and collected at most once per
+        engine."""
+        if not self._sized:
+            with self._size_lock:
+                if not self._sized:
+                    self._table = self._collect_table()
+                    self._sized = True
+        return self._table
+
+    def _collect_table(self) -> CodeTable | None:
+        """Sizing, then the driver face's one Arrow collect. N is a count()
+        of the persisted input (a scan of the cache, no shuffle). When N <=
+        BROADCAST_MAX_ROWS the raw rows are collected, every column is
+        encoded, and repeated rows fold into one row with its multiplicity,
+        so every later set costs O(D). None, with no job, when a column is
+        nested (the encoder cannot key it); None after the count when N is
+        above the bound."""
+        nested = (ArrayType, MapType, StructType)
+        if any(isinstance(f.dataType, nested) for f in self.df.schema.fields):
+            return None
+        n = self._num_rows = self.df.count()
+        if n > BROADCAST_MAX_ROWS:
+            return None
+        t0 = time.monotonic()
+        tbl = self.df.select(*map(_col, self.schema_cols)).toArrow()
+        self._note_job(time.monotonic() - t0, n, 0)
+        cols = [_encode(c) for c in tbl.columns]
+        ids, first = _group_ids(cols, n)
+        weights = None
+        if len(first) < n:
+            weights = np.bincount(ids, minlength=len(first))
+            cols = [c[first] for c in cols]
+        return CodeTable(dict(zip(self.schema_cols, cols)), weights, len(first))
+
+    def _driver_batch(self, table: CodeTable, subsets: list[frozenset[str]]) -> None:
+        """The numpy kernel: group ids of each set, weighted group sizes,
+        then H and the group count. Sets are visited in schema-lexicographic
+        order so each one refines the ids of its longest visited prefix (a
+        stack of at most one id array per column). ``stop_check`` is polled
+        between sets; the sets done by then are kept."""
+        pos = {c: i for i, c in enumerate(self.schema_cols)}
+        keyed = sorted(((tuple(sorted_cols(x, self.schema_cols)), x)
+                        for x in subsets),
+                       key=lambda t: [pos[c] for c in t[0]])
+        n, rows = self._num_rows, table.rows
+        root = (np.zeros(rows, np.int64), min(rows, 1))
+        stack: list[tuple[str, np.ndarray, int]] = []
+        h: dict[frozenset[str], float] = {}
+        groups: dict[frozenset[str], int] = {}
+        try:
+            for cols, x in keyed:
+                if self.stop_check is not None and self.stop_check():
+                    raise MiningCancelled("entropy batch cancelled by stop flag")
+                keep = 0
+                while (keep < min(len(stack), len(cols))
+                       and stack[keep][0] == cols[keep]):
+                    keep += 1
+                del stack[keep:]
+                for c in cols[keep:]:
+                    prev = stack[-1][1] if stack else root[0]
+                    stack.append((c, *_refine(prev, table.codes[c])))
+                ids, k = stack[-1][1:] if stack else root
+                # sorted, so the sum cannot depend on the collect's row order
+                cnt = np.sort(np.bincount(ids, table.weights, k))
+                clogc = float(np.sum(cnt * np.log2(cnt))) if k else 0.0
+                h[x] = math.log2(n) - clogc / n if n else 0.0
+                groups[x] = k
+        finally:
+            with self._lock:
+                self._cache.update(h)
+                self._groups.update(groups)
+            self._note_job(0.0, rows * len(h), len(h), jobs=0)
+
+    # ----- Spark face ---------------------------------------------------------
+
+    def _spark_batch(self, subsets: list[frozenset[str]]) -> None:
         """The one entropy job: H(X) and the group count |π_X(R)| for every
         X in ``subsets`` from one scan and one grouping-sets shuffle, stored
         in the caches; the job's sum(cnt) records N. Runs outside the lock:
@@ -395,11 +587,10 @@ class SparkEntropyEngine:
             # beyond 62 split the batch rather than overflow (one set needs
             # no gid bits, so a single wide set never splits)
             mid = len(subsets) // 2
-            self._batch_grouping_sets(subsets[:mid])
-            self._batch_grouping_sets(subsets[mid:])
+            self._spark_batch(subsets[:mid])
+            self._spark_batch(subsets[mid:])
             return
-        # backquoted: a plain name like "a.b" would resolve as a struct field
-        col = {c: F.col(f"`{c}`") for c in union_cols}
+        col = {c: _col(c) for c in union_cols}
         # bit i (MSB-first over union_cols) is 1 when that column is
         # aggregated away (absent from the set)
         def gid_of(x: frozenset[str]) -> int:
@@ -447,19 +638,22 @@ class SparkEntropyEngine:
             else:
                 self.direct_chunks += 1
         keys = list(col.values())
+        # the kernel's own columns are named apart from the input's
+        gid_c, cnt_c, base_c = (_fresh(c, self.schema_cols)
+                                for c in ("__gid", "__cnt", "__base_cnt"))
         if pre_agg:
             src = self.df.groupBy(*keys).agg(
-                F.count(F.lit(1)).alias("__base_cnt"))
-            cnt = F.sum("__base_cnt")
+                F.count(F.lit(1)).alias(base_c))
+            cnt = F.sum(base_c)
         else:
             src, cnt = self.df, F.count(F.lit(1))
         grouped = (src.groupBy(*sets[0]) if len(subsets) == 1
                    else src.groupingSets(sets, *keys))
-        per_group = grouped.agg(gid.alias("__gid"), cnt.alias("__cnt"))
-        per_set = per_group.groupBy("__gid").agg(
-            F.sum(F.col("__cnt") * F.log2("__cnt")).alias("clogc"),
+        per_group = grouped.agg(gid.alias(gid_c), cnt.alias(cnt_c))
+        per_set = per_group.groupBy(gid_c).agg(
+            F.sum(F.col(cnt_c) * F.log2(cnt_c)).alias("clogc"),
             F.count(F.lit(1)).alias("groups"),
-            F.sum("__cnt").alias("n"))
+            F.sum(cnt_c).alias("n"))
         t0 = time.monotonic()
         rows = per_set.collect()
         # every set's sum(cnt) is N; a grouping set over an empty relation
@@ -469,7 +663,7 @@ class SparkEntropyEngine:
         h = dict.fromkeys(subsets, 0.0)
         groups = dict.fromkeys(subsets, 0)
         for r in rows:
-            x = gid_to_set.get(r["__gid"])
+            x = gid_to_set.get(r[gid_c])
             if x is None:
                 continue  # duplicate-set gid collision impossible; ignore strays
             h[x] = math.log2(n) - (r["clogc"] or 0.0) / n

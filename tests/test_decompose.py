@@ -100,18 +100,26 @@ def _persisted(spark):
 
 
 @pytest.fixture
-def warm_validator(denorm):
-    """A validator whose persisted base is already materialized, so the
-    persistent-RDD count moves only with projection persists."""
-    v = DecompositionValidator(denorm)
-    assert v.num_tuples > 0
-    yield v
-    v.close()
+def new_warm_validator(denorm):
+    """Builds validators whose persisted base is already materialized, so
+    the persistent-RDD count moves only with projection persists. A
+    factory, so each face of a both_faces test sizes its own engine."""
+    made = []
+
+    def make():
+        v = DecompositionValidator(denorm)
+        made.append(v)
+        assert v.num_tuples > 0
+        return v
+
+    yield make
+    for v in made:
+        v.close()
 
 
 @both_faces
-def test_validate_releases_projections_on_return(spark, warm_validator):
-    v = warm_validator
+def test_validate_releases_projections_on_return(spark, new_warm_validator):
+    v = new_warm_validator()
     # the two sets share the ["n_regionkey", "r_name"] cluster
     merged = [GOOD[0] + GOOD[1], GOOD[2]]
     before = _persisted(spark)
@@ -123,8 +131,8 @@ def test_validate_releases_projections_on_return(spark, warm_validator):
 
 
 @both_faces
-def test_validate_releases_projections_on_cancel(spark, warm_validator):
-    v = warm_validator
+def test_validate_releases_projections_on_cancel(spark, new_warm_validator):
+    v = new_warm_validator()
     before = _persisted(spark)
 
     polls = []
@@ -142,8 +150,8 @@ def test_validate_releases_projections_on_cancel(spark, warm_validator):
 
 
 @both_faces
-def test_validate_releases_projections_on_unknown_column(spark, warm_validator):
-    v = warm_validator
+def test_validate_releases_projections_on_unknown_column(spark, new_warm_validator):
+    v = new_warm_validator()
     before = _persisted(spark)
     # the unknown column fails the pricing of all sets, GOOD's included
     with pytest.raises(ValueError, match="unknown column"):
@@ -152,11 +160,11 @@ def test_validate_releases_projections_on_unknown_column(spark, warm_validator):
 
 
 @both_faces
-def test_concurrent_validates_share_and_release(spark, warm_validator):
+def test_concurrent_validates_share_and_release(spark, new_warm_validator):
     """More callers than cores validating overlapping sets on one
     validator: every caller gets exact counts and nothing is left
     persisted."""
-    v = warm_validator
+    v = new_warm_validator()
     sets = [GOOD, [GOOD[0] + GOOD[1], GOOD[2]]]
     before = _persisted(spark)
     old = sys.getswitchinterval()
@@ -176,12 +184,12 @@ def _cached(spark, df):
     return cm.lookupCachedData(df._jdf).isDefined()
 
 
-@both_faces
-def test_validate_prices_every_projection_in_one_job(spark, warm_validator):
+@pytest.mark.usefixtures("spark_kernel")
+def test_validate_prices_every_projection_in_one_job(spark, new_warm_validator):
     """One validate call prices every distinct projection of its sets in
     one entropy-kernel job; a repeat call finds the counts cached. The
     base stays cached throughout."""
-    v = warm_validator
+    v = new_warm_validator()
     merged = [GOOD[0] + GOOD[1], GOOD[2]]
     first = v.validate([GOOD, BAD, merged])
     assert v.eng.jobs_run == 1
@@ -277,26 +285,89 @@ def test_fold_size_guard(spark, denorm, monkeypatch):
     v.close()
 
 
-def test_small_base_validate_runs_one_collect(spark, warm_validator):
-    """Below the bound, validation is the one pricing job plus one Arrow
-    collect of the base: after pricing, validating three sets starts
-    exactly one Spark job and no join."""
-    v = warm_validator
+def _count_collects(monkeypatch, df):
+    """Spy on DataFrame.toArrow; returns the list its calls append to."""
+    calls = []
+    to_arrow = type(df).toArrow
+
+    def spy(self, *args, **kwargs):
+        calls.append(None)
+        return to_arrow(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "toArrow", spy)
+    return calls
+
+
+def test_small_base_validate_runs_one_collect(spark, denorm, monkeypatch):
+    """Below the bound, validation is the kernel's sizing count plus its
+    one Arrow collect of the base, which prices the projections and feeds
+    every fold: validating three sets runs exactly one collect and one
+    kernel job, and a second call starts no Spark job and no join."""
+    collects = _count_collects(monkeypatch, denorm)
     sets = [GOOD, BAD, [GOOD[0] + GOOD[1], GOOD[2]]]
-    v.eng.group_counts(frozenset(c) for cs in sets for c in cs)
-    assert v.eng.jobs_run == 1
-    sc = spark.sparkContext
-    group = "validate-driver-face"
-    sc.setJobGroup(group, "validate after pricing")
+    v = DecompositionValidator(denorm)
     try:
-        infos = v.validate(sets)
+        first = v.validate(sets)
+        assert len(collects) == 1 and v.eng.jobs_run == 1
+        sc = spark.sparkContext
+        group = "validate-driver-face"
+        sc.setJobGroup(group, "validate after the collect")
+        try:
+            again = v.validate(sets)
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert len(collects) == 1 and v.eng.jobs_run == 1
+        assert [i.spurious_tuples for i in first] == \
+            [i.spurious_tuples for i in again] == \
+            [0, v.naive_join_spurious(BAD), 0]
     finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert v.eng.jobs_run == 1
-    assert [i.spurious_tuples for i in infos] == \
-        [0, v.naive_join_spurious(BAD), 0]
+        v.close()
+
+
+def test_concurrent_validates_run_one_collect(spark, denorm, monkeypatch):
+    """Concurrent validate calls on one fresh validator (as concurrent
+    DecompositionService submissions make), more than the cores: they
+    share the kernel's one Arrow collect of the base, since the first
+    sizes and collects under the engine's lock and the others wait."""
+    collects = _count_collects(monkeypatch, denorm)
+    v = DecompositionValidator(denorm)
+    sets = [GOOD, BAD, [GOOD[0] + GOOD[1], GOOD[2]], [GOOD[0], GOOD[1]]]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(6) as pool:
+            futures = [pool.submit(v.process_decomposition, sets[i % 4])
+                       for i in range(6)]
+            infos = [f.result(timeout=300) for f in futures]
+        assert len(collects) == 1 and v.eng.jobs_run == 1
+        expect = [0, v.naive_join_spurious(BAD), 0,
+                  v.naive_join_spurious([GOOD[0], GOOD[1]])]
+        assert [i.spurious_tuples for i in infos] == \
+            [expect[i % 4] for i in range(6)]
+    finally:
+        sys.setswitchinterval(old)
+        v.close()
+
+
+@both_faces
+def test_column_names_that_need_quoting(spark):
+    """A base column named like the fold's count column, and one with a
+    dot in its name, fold to the naive oracle's count on both faces."""
+    rows = [(1, "a", 1, "p"), (1, "b", 2, "q"), (2, "a", 2, "q"),
+            (2, "b", 1, "p")]
+    df = spark.createDataFrame(
+        rows, "cnt int, `k.x` string, cnt_r int, `CNT_R.b` string")
+    v = DecompositionValidator(df)
+    try:
+        for sets in ([["cnt", "k.x"], ["cnt", "cnt_r"]],
+                     [["k.x", "cnt_r"], ["k.x", "CNT_R.b"]],
+                     [["cnt", "k.x"], ["k.x", "CNT_R.b"], ["cnt_r", "cnt"]]):
+            got = v.process_decomposition(sets).spurious_tuples
+            assert got == v.naive_join_spurious(sets) and got > 0, sets
+    finally:
+        v.close()
 
 
 def _python_join_size(rows, cols, clusters):
@@ -318,6 +389,8 @@ def test_driver_fold_matches_python_join():
 
     import pyarrow as pa
 
+    from relationaldecomposition_spark.engine.entropy import _encode
+
     rng = random.Random(7)
     cols = ["a", "b", "c", "d", "e"]
     for _ in range(200):
@@ -326,7 +399,7 @@ def test_driver_fold_matches_python_join():
                       key=lambda r: tuple((v is None, v) for v in r))
         clusters = [frozenset(rng.sample(cols, rng.randint(1, 3)))
                     for _ in range(rng.randint(1, 4))]
-        codes = {x: decompose._encode(pa.chunked_array(
+        codes = {x: _encode(pa.chunked_array(
             [[r[i] for r in rows]], pa.int64())) for i, x in enumerate(cols)}
         order = decompose._greedy_order(clusters)
         got = decompose._driver_fold_total(codes, len(rows), order, cols)

@@ -11,6 +11,7 @@ from relationaldecomposition_spark.engine.measures import MeasureEngine
 from relationaldecomposition_spark.mining.inference import BeeriInference, DependencyBasis
 from relationaldecomposition_spark.mining.jd_miner import JDMiner
 from relationaldecomposition_spark.mining.transversals import Transversals
+from tests.conftest import both_faces
 
 
 def test_transversals_basic():
@@ -88,11 +89,23 @@ def planted5(spark):
 
 
 @pytest.fixture(scope="module")
-def miner5(planted5):
-    return JDMiner(MeasureEngine(SparkEntropyEngine(planted5)), epsilon=0.0)
+def new_miner5(planted5):
+    """A fresh JDMiner per call, so each face of both_faces builds its own
+    engine."""
+    miners = []
+
+    def make():
+        miners.append(JDMiner(MeasureEngine(SparkEntropyEngine(planted5)),
+                              epsilon=0.0))
+        return miners[-1]
+    yield make
+    for m in miners:
+        m.eng.unpersist()
 
 
-def test_consistent_jd_full_split(miner5):
+@both_faces
+def test_consistent_jd_full_split(new_miner5):
+    miner5 = new_miner5()
     start = JD.most_specific(frozenset(["k"]), miner5.schema)
     jd = miner5.consistent_jd_candidate(["k"], start)
     # independence given k: nothing merges, all three singleton components stay
@@ -102,6 +115,7 @@ def test_consistent_jd_full_split(miner5):
     assert miner5.jd_measure(jd) <= 1e-9
 
 
+@both_faces
 def test_consistent_jd_merges_correlated(spark):
     # b == c always: they must merge; JD [k | {a}, {b,c}]
     rows = [(k, a, v, v) for k in range(6) for a in range(3) for v in range(4)]
@@ -130,7 +144,9 @@ def test_consistent_jd_merges_correlated(spark):
         m.eng.unpersist()
 
 
-def test_mine_jds_with_lhs(miner5):
+@both_faces
+def test_mine_jds_with_lhs(new_miner5):
+    miner5 = new_miner5()
     jds = miner5.mine_jds_with_lhs(["k"], limit=0)
     # the full split is a valid JD and must be found
     assert any(jd.components == frozenset(
@@ -142,7 +158,9 @@ def test_mine_jds_with_lhs(miner5):
     assert len(first) == 1 and first <= jds
 
 
-def test_min_sep_mining(miner5):
+@both_faces
+def test_min_sep_mining(new_miner5):
+    miner5 = new_miner5()
     seps = miner5.mine_all_min_seps()
     # {k} is the unique minimal separator for every pair
     assert seps == {frozenset(["k"])}
@@ -152,12 +170,16 @@ def test_min_sep_mining(miner5):
         assert pseps == {frozenset(["k"])}, pair
 
 
-def test_full_mvds(miner5):
+@both_faces
+def test_full_mvds(new_miner5):
+    miner5 = new_miner5()
+    miner5.mine_all_min_seps()   # full MVDs start from the mined separators
     full = miner5.mine_all_full_mvds()
     assert any(jd.lhs == frozenset(["k"]) and len(jd.components) == 3
                for jd in full)
 
 
+@both_faces
 def test_min_sep_mining_mode_invariant(planted5, monkeypatch):
     """Eager lattice + parallel pairs, lazy + sequential, and lazy + parallel
     must mine identical separator sets (r2 perf work is pinned to be a pure

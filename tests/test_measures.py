@@ -9,6 +9,7 @@ import pytest
 from relationaldecomposition_spark.core.deps import FD, JD, MVD, Status
 from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
 from relationaldecomposition_spark.engine.measures import MeasureEngine
+from tests.conftest import both_faces
 
 
 @pytest.fixture(scope="module")
@@ -31,18 +32,30 @@ def planted(spark):
 
 
 @pytest.fixture(scope="module")
-def meng(planted):
-    eng = SparkEntropyEngine(planted)
-    return MeasureEngine(eng)
+def new_meng(planted):
+    """A fresh MeasureEngine per call, so each face of both_faces builds
+    its own engine."""
+    engines = []
+
+    def make():
+        engines.append(SparkEntropyEngine(planted))
+        return MeasureEngine(engines[-1])
+    yield make
+    for eng in engines:
+        eng.unpersist()
 
 
-def test_planted_fd_holds(meng):
+@both_faces
+def test_planted_fd_holds(new_meng):
+    meng = new_meng()
     assert meng.fd_measure(["k"], ["a"]) == 0.0
     # and a false FD has positive measure
     assert meng.fd_measure(["a"], ["k"]) > 0.1
 
 
-def test_planted_mvd_holds(meng):
+@both_faces
+def test_planted_mvd_holds(new_meng):
+    meng = new_meng()
     # b,c,d independent given k => k ->> {c} exactly (measure 0)
     assert meng.mvd_measure(["k"], ["c"]) == 0.0
     assert meng.mvd_measure(["k"], ["d"]) == 0.0
@@ -50,20 +63,26 @@ def test_planted_mvd_holds(meng):
     assert meng.mvd_measure(["a"], ["c"]) > 0.01
 
 
-def test_planted_jd_holds(meng):
+@both_faces
+def test_planted_jd_holds(new_meng):
+    meng = new_meng()
     assert meng.jd_measure(["k"], [["a", "b"], ["c"], ["d"]]) == 0.0
     # wrong grouping has positive measure
     assert meng.jd_measure(["a"], [["k", "b", "c"], ["d"]]) > 0.01
 
 
-def test_mvd_degenerate_full_cover(meng):
+@both_faces
+def test_mvd_degenerate_full_cover(new_meng):
+    meng = new_meng()
     # X ∪ Y = R: reference semantics return H(R) - H(X)
     m = meng.mvd_measure(["k"], ["a", "b", "c", "d"])
     h_k = meng.engine.entropy(["k"])
     assert m == pytest.approx(meng.total_entropy - h_k, abs=1e-9)
 
 
-def test_measure_all_batch(meng):
+@both_faces
+def test_measure_all_batch(new_meng):
+    meng = new_meng()
     deps = [
         FD(frozenset(["k"]), frozenset(["a"])),
         MVD(frozenset(["k"]), frozenset(["c"])),
@@ -77,6 +96,7 @@ def test_measure_all_batch(meng):
     assert deps[0].measure.is_less_than(0.01) is Status.TRUE
 
 
+@both_faces
 def test_honest_total_with_duplicate_rows(spark):
     # With duplicate rows, log2(N) over-states H(R) and the reference-style
     # MVD measure can go negative; MeasureEngine computes H(R) by group-by.

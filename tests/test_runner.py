@@ -94,6 +94,7 @@ def test_cancel_running_job(spark):
     v.close()
 
 
+@pytest.mark.usefixtures("spark_kernel")
 def test_timeout_runner_stops_search(spark, validator, monkeypatch):
     from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
     from relationaldecomposition_spark.engine.measures import MeasureEngine
@@ -126,6 +127,7 @@ def test_timeout_runner_stops_search(spark, validator, monkeypatch):
     assert miner.mined_min_seps
 
 
+@pytest.mark.usefixtures("spark_kernel")
 def test_timeout_runner_stops_mvd_miner(spark, validator):
     """The ADVICE r3 medium: a timed-out MVDMiner worker must stop LAUNCHING
     Spark jobs once the stop flag flips (cancelJobGroup only kills in-flight

@@ -37,11 +37,17 @@ COLS = ["l_returnflag", "l_linestatus", "l_quantity", "l_discount",
 
 
 class ProfiledEngine(SparkEntropyEngine):
-    """Wraps _batch_grouping_sets to record one row per chunk job."""
+    """Wraps _batch_grouping_sets to record one row per chunk job. It
+    profiles the Spark kernel's chunks, so the driver face (which answers
+    inputs of at most BROADCAST_MAX_ROWS rows without any chunk job) is
+    withheld."""
 
     def __init__(self, *a, **kw):
         super().__init__(*a, **kw)
         self.chunk_log: list[dict] = []
+
+    def _collect_table(self):
+        return None
 
     def _batch_grouping_sets(self, subsets):
         union = set().union(*subsets) if subsets else set()
