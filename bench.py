@@ -141,14 +141,14 @@ def build_queries(spark, sf_dir: str):
     def spurious_fold():
         # Floor note (round-6 profile): steady-state is ~2.5-2.7 s at
         # sf0.1, dominated by per-action job scheduling of the few jobs a
-        # validation needs (base distinct+persist, one entropy-kernel job
-        # pricing the projections and the base, and, under 1M base rows,
-        # one Arrow collect the fold runs over on the driver) — not data
-        # volume. The
-        # 2.78->3.38 s median creep flagged in round 5 was the COLD first
-        # sample (the validator's base.distinct().persist() materializes
-        # on first use: rep0 5.5 s vs rep1/2 2.5-2.7 s measured);
-        # median-of-3 (now the default) reports the steady state.
+        # validation needs (the engine's persist and sizing count of the
+        # relation, then, under 1M rows, one Arrow collect that prices the
+        # projections and the base and feeds every fold on the driver) —
+        # not data volume. The 2.78->3.38 s median creep flagged in round
+        # 5 was the COLD first sample (the validator's persisted base
+        # materializes on first use: rep0 5.5 s vs rep1/2 2.5-2.7 s
+        # measured); median-of-3 (now the default) reports the steady
+        # state.
         v = DecompositionValidator(denorm)
         for _, clusters in DECOMPOSITIONS:
             v.process_decomposition(clusters)
@@ -170,38 +170,15 @@ def build_queries(spark, sf_dir: str):
 
     def decompose_e2e():
         # the reference's core deliverable END-TO-END (round-5 ask #8):
-        # mine min-sep JDs on the denormalized relation -> enumerate
-        # acyclic schemas -> validate candidates' spurious-tuple counts
-        # (Yannakakis count-fold) -> bucketed+sorted write of the best
-        # schema on the join key, so downstream rejoins of the normalized
-        # tables are exchange-free sort-merge joins. Re-join equality of
-        # the written tables is pinned in tests/test_decompose_e2e.py.
-        import itertools
-
-        from relationaldecomposition_spark.engine.decompose import (
-            write_decomposition_bucketed)
-        from relationaldecomposition_spark.schema.acyclic import (
-            AcyclicSchemaEnumerator, validate_schemas_concurrent)
-        miner = JDMiner(MeasureEngine(SparkEntropyEngine(denorm)),
-                        epsilon=0.0)
-        miner.mine_all_min_seps()
-        v = DecompositionValidator(denorm)
-        # all candidates in one validate call: one pricing job, then every
-        # fold (see DecompositionValidator.validate)
-        candidates = list(itertools.islice(
-            AcyclicSchemaEnumerator(tuple(denorm.columns),
-                                    sorted(miner.mined_jds, key=str)), 3))
-        infos = validate_schemas_concurrent(v, candidates)
-        best, best_key = None, None
-        for schema, info in zip(candidates, infos):
-            key = (int(info.spurious_tuples), -len(schema.clusters))
-            if best_key is None or key < best_key:
-                best, best_key = schema, key
-        v.close()
-        miner.eng.unpersist()
-        if best is not None:
-            write_decomposition_bucketed(denorm, best.clusters,
-                                         "c_nationkey", "bench_decomp_e2e")
+        # pipeline.decompose mines min-sep JDs on the denormalized
+        # relation -> enumerates acyclic schemas -> validates candidates'
+        # spurious-tuple counts (Yannakakis count-fold) -> bucketed+sorted
+        # write of the best schema on the join key, so downstream rejoins
+        # of the normalized tables are exchange-free sort-merge joins.
+        # Re-join equality of the written tables is pinned in
+        # tests/test_decompose_e2e.py.
+        from relationaldecomposition_spark.pipeline import decompose
+        decompose(denorm, "c_nationkey", "bench_decomp_e2e")
 
     def semdedup_incr():
         # probe-only incremental embedding dedup (o63): even vec_ids are

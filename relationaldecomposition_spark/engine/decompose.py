@@ -21,30 +21,29 @@ Re-expresses the reference's SQLite-based validators Spark-first:
 - A16 distinct base count (`entropy/NewSmallDBInMemory.java:271-281`).
 - A21 DecompositionInfo metrics (`entropy/NewSmallDBInMemory.java:547-576`).
 
-Duplicate-row semantics follow the reference's validation path: the base
-relation is deduplicated before anything else (worker copies are
-``SELECT DISTINCT *``, `NewSmallDBInMemory.java:180-187`).
+Duplicate rows change no number validation reads, so the base is not
+deduplicated first (the reference validates ``SELECT DISTINCT *`` copies,
+`NewSmallDBInMemory.java:180-187`): projection sizes are group counts
+|π_X(R)|, |base| is the full column set's group count, and both folds join
+distinct projections.
 
 Scale notes (100 TB):
 - Projection sizes (A12) and the base count (A16) come from the entropy
-  kernel over the persisted dedup'd base: |π_X(R)| is the number of groups
-  of grouping set X.
-- The kernel's sizing count() reads |base|, and both the pricing and the
-  count fold follow it. At most BROADCAST_MAX_ROWS rows (the bound under which
-  the Spark face broadcasts every projection through the driver anyway),
-  the kernel collects the base once as Arrow and encodes it; pricing and
-  every fold then run on the driver in numpy from those codes, with no
-  further Spark job — the reference's single-node in-memory validation.
-  Concurrent validations on one validator share that one collect. A fold
-  step that would hold more rows than that bound, or a larger base, takes
-  the Spark face, after one pricing job per validate call.
+  kernel over the relation as given; pipeline.decompose mines on the same
+  engine, so the relation is persisted, sized and collected once.
+- The kernel's sizing count() of N rows picks the face of both the pricing
+  and the count fold. At most BROADCAST_MAX_ROWS rows, the kernel collects
+  the relation once as Arrow and encodes it; pricing and every fold then
+  run on the driver in numpy over its distinct code rows, with no further
+  Spark job — the reference's single-node in-memory validation. Concurrent
+  validations on one validator share that one collect. A fold step that
+  would hold more rows than that bound, or a larger relation (duplicates
+  counted), takes the Spark face, after one pricing job per validate call.
 - On the Spark face projections are not persisted; each is one
   column-pruned shuffle inside its fold. Columns are referenced backquoted
   and the count columns are named apart from the base's, so any column
-  name folds. The fold broadcasts any side known to be small — the
-  "broadcast small dims" rule, driven by exact counts instead of stats
-  guesses. AQE handles skewed join keys. It collects nothing but one final
-  scalar per set.
+  name folds. Join strategy and skew are left to AQE. It collects nothing
+  but one final scalar per set.
 - The group-by after every join keeps intermediates at most as wide as the
   union of remaining separators — the Yannakakis guarantee that
   intermediate size is bounded by output size for acyclic decompositions.
@@ -110,7 +109,7 @@ def _greedy_order(clusters: list[frozenset[str]]) -> list[frozenset[str]]:
     remaining = list(clusters)
     if not remaining:
         return []
-    # start with the largest cluster: biggest side stays un-broadcast first
+    # start with the largest cluster
     start = max(remaining, key=len)
     remaining.remove(start)
     order = [start]
@@ -189,16 +188,15 @@ class DecompositionValidator:
 
     def __init__(self, df: DataFrame):
         self.schema_cols = tuple(df.columns)
-        # validation-path semantics: dedup the base once, keep it hot
-        self.base = df.distinct().persist()
         # the one counter: cluster projection sizes are the kernel's group
-        # counts over the dedup'd base, and its N is |base|
-        self.eng = SparkEntropyEngine(self.base, cache_input=False)
+        # counts over the relation, and the full column set's is |base|
+        self.eng = SparkEntropyEngine(df)
+        self.base = self.eng.df
 
     @property
     def num_tuples(self) -> int:
         """A16: |SELECT DISTINCT * FROM base|."""
-        return self.eng.num_rows
+        return self.eng.num_distinct
 
     # -- A13/A14 count fold ---------------------------------------------------
 
@@ -217,16 +215,16 @@ class DecompositionValidator:
         negative when a join column holds nulls.
 
         The entropy kernel prices every distinct projection across all
-        sets, and the base (a repeat call finds them priced). The count
-        folds then take the kernel's face, chosen by its sizing count of
-        |base|:
+        sets, and the full column set, whose group count is |base|, in one
+        call (a repeat call finds them priced). The count folds then take
+        the kernel's face, chosen by its sizing count of the relation's N
+        rows:
 
-        - |base| <= BROADCAST_MAX_ROWS: the fold would broadcast every
-          projection through the driver anyway, so every set folds on the
-          driver (_driver_fold_total) over the codes of the kernel's one
-          Arrow collect of the base, which priced the projections too. A
-          set whose fold would hold more than BROADCAST_MAX_ROWS rows at
-          any step falls to the Spark face.
+        - N <= BROADCAST_MAX_ROWS: every set folds on the driver
+          (_driver_fold_total) over the distinct code rows of the kernel's
+          one Arrow collect, which priced the projections too. A set whose
+          fold would hold more than BROADCAST_MAX_ROWS rows at any step
+          falls to the Spark face.
         - otherwise, and for those sets: one kernel job prices the
           projections, and the Spark fold runs 4 sets at a time, since a
           single fold is a chain of short jobs whose cost is per-action
@@ -241,7 +239,9 @@ class DecompositionValidator:
                   for cs in cluster_sets]
         if stop():
             raise DecompositionCanceled("canceled before projection pricing")
-        counts = self.eng.group_counts(c for cl in orders for c in cl)
+        full = frozenset(self.schema_cols)
+        counts = self.eng.group_counts(
+            [full, *(c for cl in orders for c in cl)])
         infos = [DecompositionInfo() for _ in orders]
         for info, cl in zip(infos, orders):
             for c in cl:
@@ -258,52 +258,40 @@ class DecompositionValidator:
                 if total is None:
                     spark_todo.append(i)
                 else:
-                    infos[i].spurious_tuples = total - self.num_tuples
+                    infos[i].spurious_tuples = total - counts[full]
             todo = spark_todo
 
         def fold(i):
             if stop():
                 raise DecompositionCanceled("canceled before final aggregate")
-            total = self._fold_total_frame(orders[i], counts).first()["total"]
-            infos[i].spurious_tuples = int(total or 0) - self.num_tuples
+            total = self._fold_total_frame(orders[i]).first()["total"]
+            infos[i].spurious_tuples = int(total or 0) - counts[full]
 
         fanout(self.base.sparkSession, fold, todo, 4)
         return infos
 
-    def _fold_total_frame(self, cl, counts) -> DataFrame:
+    def _fold_total_frame(self, cl) -> DataFrame:
         """The lazy join-size fold of a greedy-ordered cluster list: a
         single-row DataFrame whose column ``total`` = |⋈ projections|."""
         cnt = _fresh("cnt", self.schema_cols)
         cnt_r = _fresh("cnt_r", self.schema_cols)
         acc_attrs = cl[0]
         acc = project_cluster(self.base, cl[0], self.schema_cols, cnt)
-        acc_count = counts[cl[0]]
         for i in range(1, len(cl)):
             c2 = cl[i]
             p2 = project_cluster(self.base, c2, self.schema_cols, cnt_r)
             join_cols = sorted_cols(acc_attrs & c2, self.schema_cols)
-            new_attrs = acc_attrs | c2
+            acc_attrs = acc_attrs | c2
             # attributes still needed: anything a remaining cluster mentions
-            needed = frozenset().union(*cl[i + 1:]) if i + 1 < len(cl) else frozenset()
-            group_cols = sorted_cols(needed & new_attrs, self.schema_cols)
-
-            left, right = acc, p2
-            if counts[c2] <= BROADCAST_MAX_ROWS:
-                right = F.broadcast(right)
-            elif acc_count <= BROADCAST_MAX_ROWS:
-                left = F.broadcast(left)
-            joined = (left.join(right, on=join_cols) if join_cols
-                      else left.crossJoin(right))
+            needed = frozenset().union(*cl[i + 1:])
+            group_cols = sorted_cols(needed & acc_attrs, self.schema_cols)
+            joined = (acc.join(p2, on=join_cols) if join_cols
+                      else acc.crossJoin(p2))
             prod = F.sum(F.col(cnt) * F.col(cnt_r)).alias(cnt)
             if group_cols:
                 acc = joined.groupBy(*map(_col, group_cols)).agg(prod)
             else:
                 acc = joined.agg(prod)
-            acc_attrs = new_attrs
-            # after the group-by the running count is unknown; disable
-            # count-based broadcast of the accumulator from here on (AQE
-            # still upgrades it at runtime if it turns out small)
-            acc_count = BROADCAST_MAX_ROWS + 1
         return acc.agg(F.sum(F.col(cnt)).alias("total"))
 
     # -- A15 naive oracle -----------------------------------------------------
@@ -324,7 +312,7 @@ class DecompositionValidator:
         return joined.distinct().count() - self.num_tuples
 
     def close(self) -> None:
-        self.base.unpersist()
+        self.eng.unpersist()
 
 
 def _remove_orphan_table_location(spark, name: str) -> None:

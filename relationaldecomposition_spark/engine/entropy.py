@@ -42,6 +42,12 @@ MasterCompressedDB's RangeSize bound) and large requests are chunked. The
 A11 lattice (``GROUP BY CUBE``) is the same grouping-sets job over every
 subset.
 
+Cache ownership. Spark keys cache entries by logical plan, so unpersisting
+a DataFrame uncaches every DataFrame with an equal plan. An engine persists
+its input only when Spark reports it uncached, and ``unpersist()`` releases
+only a cache that engine made: engines over one relation share one entry,
+and none uncaches another's input or the caller's own ``persist()``.
+
 Scale notes (100 TB):
 - Entropy is algebraic: sum(c*log2(c)) over a group-by — partial aggregation
   means shuffled bytes are O(#distinct groups), not O(rows).
@@ -67,6 +73,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -87,7 +94,7 @@ class MiningCancelled(RuntimeError):
 # (jobs 5 -> 4) raising 16 -> 32, and neutral at sf0.1 (same 4-job
 # packing either way); at 100 TB fewer chunks = fewer corpus scans, which
 # dominates once the input outgrows cache. Shuffle OUTPUT stays guarded by
-# the group-mass budget (group_budget_rows), not by this cap; the original
+# the group-mass budget (GROUP_BUDGET_ROWS), not by this cap; the original
 # 16 matched the reference's RangeSize envelope (5-16,
 # `search/MinimalJDGenerator.java:1142-1162`). Residual caveat: a COLD
 # chunk (no cached estimates) is budget-blind, so a wider cap doubles the
@@ -95,6 +102,11 @@ class MiningCancelled(RuntimeError):
 # singles-first seeding chunk populates estimates before any wide chunk
 # runs.
 DEFAULT_MAX_GROUPING_SETS = 32
+
+# Chunk shuffle-output budget, as a multiple of N: a batch of grouping sets
+# whose cache-estimated group counts sum past this is split, so near-key
+# subsets don't amplify one job's shuffle 16x.
+GROUP_BUDGET_ROWS = 4.0
 
 
 def _powerset(cols: Sequence[str]):
@@ -118,12 +130,9 @@ def _fresh(name: str, taken) -> str:
     return name
 
 
-# Broadcast a Spark fold side when its (exactly known) distinct row count is
-# below this. ~1M narrow rows ≈ tens of MB serialized: safely under default
-# executor memory while saving a shuffle of the big side. The same envelope
-# bounds the driver faces: a relation of at most this many rows is
-# collected and counted on the driver, and no driver fold step holds more
-# rows than this.
+# The driver faces' bound: a relation of at most this many rows is collected
+# and counted on the driver, and no driver fold step holds more rows than
+# this. ~1M narrow rows ≈ tens of MB of int64 codes.
 BROADCAST_MAX_ROWS = 1_000_000
 
 
@@ -191,24 +200,9 @@ class SparkEntropyEngine:
     validation path uses.
     """
 
-    def __init__(self, df: DataFrame, max_grouping_sets: int = DEFAULT_MAX_GROUPING_SETS,
-                 cache_input: bool = True,
-                 columns: Sequence[str] | None = None,
-                 group_budget_rows: float = 4.0):
-        """``columns``: when the mining column set is known up front, pass it
-        here — the engine projects the input to exactly those columns BEFORE
-        persisting, so the cache never holds full-width rows of a wide
-        relation (every subsequent groupBy then scans only mined columns).
-        Omitted = all columns of ``df`` are assumed minable."""
-        if columns is not None:
-            df = df.select(*columns)
+    def __init__(self, df: DataFrame, cache_input: bool = True):
         self.df = df
         self.schema_cols: tuple[str, ...] = tuple(df.columns)
-        self.max_grouping_sets = max_grouping_sets
-        # chunk shuffle-output budget, as a multiple of num_rows: a batch of
-        # grouping sets whose cache-estimated group counts sum past this is
-        # split, so near-key subsets don't amplify one job's shuffle 16x
-        self.group_budget_rows = group_budget_rows
         self._cache: dict[frozenset[str], float] = {}
         # group count |π_X(R)| of every subset the kernel computed
         self._groups: dict[frozenset[str], int] = {}
@@ -247,11 +241,13 @@ class SparkEntropyEngine:
         self.pre_agg_chunks = 0
         self.direct_chunks = 0
         self._stats_lock = threading.Lock()
-        if cache_input:
-            # Iterative mining re-scans the relation constantly; persisting
-            # the column-pruned input is the moral equivalent of the
-            # reference ingesting into H2 once (CompressedDB.init).
-            self.df = self.df.persist()
+        # Mining re-scans the relation constantly: persisting it is the
+        # reference ingesting into H2 once (CompressedDB.init). An input
+        # cached already is left to its owner (see Cache ownership).
+        self._owns_cache = (cache_input
+                            and df.storageLevel == StorageLevel.NONE)
+        if self._owns_cache:
+            self.df.persist()
 
     # ----- cardinalities ---------------------------------------------------
 
@@ -312,7 +308,7 @@ class SparkEntropyEngine:
     def entropies(self, subsets: Iterable[Iterable[str]]) -> dict[frozenset[str], float]:
         """Compute H(X) for many subsets; returns {frozenset: H}.
 
-        Uncached subsets are computed in chunks of <= max_grouping_sets
+        Uncached subsets are computed in chunks of <= DEFAULT_MAX_GROUPING_SETS
         subsets per Spark job via GROUP BY GROUPING SETS — one scan + one
         shuffle per chunk regardless of subset count.
         """
@@ -401,8 +397,8 @@ class SparkEntropyEngine:
         entropy the previous chunks just cached: each grouping set
         replicates every input row into the shuffle, so a chunk's shuffle
         OUTPUT is ~ sum of its subsets' group counts. Cap chunks at
-        max_grouping_sets AND at a group budget of ``group_budget_rows x
-        num_rows`` using cache-derived estimates, so 16 near-key subsets
+        DEFAULT_MAX_GROUPING_SETS AND at a group budget of ``GROUP_BUDGET_ROWS
+        x num_rows`` using cache-derived estimates, so 16 near-key subsets
         don't ride in one job shuffling 16x the distinct rows. Estimates
         are optimistic when unknown — cold-cache behavior is exactly the
         old fixed-width chunking.
@@ -419,7 +415,7 @@ class SparkEntropyEngine:
         chunking on 3 of 4 (the 4th is the cold singleton seeding chunk),
         116 s -> ~80 s."""
         n = self._num_rows or 0  # unknown before the first job: no budget
-        budget = self.group_budget_rows * n
+        budget = GROUP_BUDGET_ROWS * n
         # pre-agg qualification threshold in bits (see _batch_grouping_sets:
         # chunks whose UNION-column perplexity is <= N/8 aggregate once on
         # the union before the grouping sets)
@@ -448,7 +444,7 @@ class SparkEntropyEngine:
             return e is not None and e <= thresh_bits
 
         for x in todo[1:]:
-            if len(cur) >= self.max_grouping_sets:
+            if len(cur) >= DEFAULT_MAX_GROUPING_SETS:
                 break
             est = self._est_log2_groups(x)
             cold = est is None and len(x) > 1
@@ -763,4 +759,7 @@ class SparkEntropyEngine:
             self._cache.update(values)
 
     def unpersist(self) -> None:
-        self.df.unpersist()
+        """Release the input's cache if this engine made it."""
+        if self._owns_cache:
+            self._owns_cache = False
+            self.df.unpersist()

@@ -17,7 +17,7 @@ Column mapping to Spark counters (all pre-existing instrumentation on
 SparkEntropyEngine / DecompositionInfo):
   "#File Scans"/"#In-Memory Queries Issued" -> engine.jobs_run
   "total file scan time"/"Query Time"       -> engine.scan_seconds
-  "Range Size"                              -> engine.max_grouping_sets
+  "Range Size"                              -> DEFAULT_MAX_GROUPING_SETS
                                                (the grouping-set width cap,
                                                the analogue of the
                                                reference's range envelope)
@@ -125,7 +125,7 @@ def run_minsep_experiment(df: DataFrame, out_csv: str, sep_dir: str,
     `.sep` file of mined JDs per run (file name pattern matches the
     reference: <name>.TO.<timeout>.RANGE.<range>.THRESH.<thresh>.sep, which
     AcyclicSchemaEnumerator parses the threshold back out of)."""
-    from .engine.entropy import SparkEntropyEngine
+    from .engine.entropy import DEFAULT_MAX_GROUPING_SETS, SparkEntropyEngine
     from .engine.measures import MeasureEngine
     from .mining.jd_miner import JDMiner
     from .runner import TimeoutRunner
@@ -161,7 +161,7 @@ def run_minsep_experiment(df: DataFrame, out_csv: str, sep_dir: str,
         total = time.monotonic() - t0
         scan = eng.scan_seconds - build_scan
         pct = 100.0 * scan / total if total > 0 else 0.0
-        row = [len(df.columns), eng.num_rows, eng.max_grouping_sets, thresh,
+        row = [len(df.columns), eng.num_rows, DEFAULT_MAX_GROUPING_SETS, thresh,
                timeout_sec, str(completed_seps), len(miner.mined_min_seps),
                str(completed_mvds or not mine_full_mvds),
                len(miner.full_mvds), round(t_build, 3), eng.jobs_run,
@@ -170,7 +170,7 @@ def run_minsep_experiment(df: DataFrame, out_csv: str, sep_dir: str,
         results.append(RunResult(completed_seps, row))
         sep_path = os.path.join(
             sep_dir, f"{name}.TO.{int(timeout_sec)}.RANGE."
-                     f"{eng.max_grouping_sets}.THRESH.{thresh}.sep")
+                     f"{DEFAULT_MAX_GROUPING_SETS}.THRESH.{thresh}.sep")
         jds = set(miner.full_mvds) | set(miner.mined_jds)
         write_jds(sorted(jds, key=str), sep_path, list(df.columns))
         eng.unpersist()
@@ -184,7 +184,7 @@ def run_schema_enumeration(df: DataFrame, sep_path: str, out_csv: str,
     """Enumerate acyclic schemas from a `.sep` file of mined JDs and emit
     one ENUM_HEADER row per schema (AcyclicSchemaEnumerator step 5)."""
     from .engine.decompose import DecompositionValidator
-    from .schema.acyclic import AcyclicSchemaEnumerator, validate_schema
+    from .schema.acyclic import AcyclicSchemaEnumerator
     from .sources.jd_io import read_jds
 
     jds = read_jds(sep_path, list(df.columns))
@@ -198,7 +198,7 @@ def run_schema_enumeration(df: DataFrame, sep_path: str, out_csv: str,
             if i >= max_schemas:
                 break
             if validate:
-                info = validate_schema(v, schema)
+                info = v.process_decomposition(schema.clusters)
                 spurious, largest = info.spurious_tuples, info.largest_relation
                 tuples, cells = info.total_tuples, info.total_cells
             else:

@@ -1,30 +1,81 @@
-"""End-to-end corpus curation: the operators composed the way a training-
-data pipeline actually runs them — exact dedup -> near-dup (MinHash-LSH +
-connected components) -> quality gates (heuristic score, Gopher-style
-repetition, optional unigram-LM cross-entropy band) -> benchmark
-decontamination -> mixture rebalance -> sequence packing.
+"""End-to-end pipelines. They add no semantics — every stage is an
+already oracle-verified operator — they pin the COMPOSITION.
 
-Everything stays one lazy DataFrame program per stage (no collects, no
-Python in hot paths); the funnel report is itself a DataFrame (a union of
-single-row count aggregates), so evaluating it is one Spark job and the
-curated output can be written without ever materializing intermediates.
+``decompose``: the paper's deliverable (Kenig et al., SIGMOD 2020) — mine
+a relation's minimal-separator JDs, enumerate acyclic schemas, count their
+spurious tuples, keep one and write it, all over one entropy engine. o69
+checks it against its DuckDB twin.
 
-This module adds no new semantics — every stage is an already
-oracle-verified operator — it pins the COMPOSITION: ids surviving each
-stage, and that the stages commute with each other's output contracts
-(tested on a planted fixture in tests/test_pipeline.py).
+``curate_corpus``: the operators composed the way a training-data pipeline
+actually runs them — exact dedup -> near-dup (MinHash-LSH + connected
+components) -> quality gates (heuristic score, Gopher-style repetition,
+optional unigram-LM cross-entropy band) -> benchmark decontamination ->
+mixture rebalance -> sequence packing. Everything stays one lazy DataFrame
+program per stage (no collects, no Python in hot paths); the funnel report
+is itself a DataFrame (a union of single-row count aggregates), so
+evaluating it is one Spark job and the curated output can be written
+without ever materializing intermediates. tests/test_pipeline.py pins the
+ids surviving each stage on a planted fixture.
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, functions as F
 
+from .engine.decompose import (DecompositionValidator,
+                               write_decomposition_bucketed)
+from .engine.measures import MeasureEngine
+from .mining.jd_miner import JDMiner
 from .operators.corpus import (decontaminate, quality_repetition_profile,
                                unigram_xent_score)
 from .operators.dedup import (apply_dedup, connected_components,
                               exact_dedup, lsh_candidate_pairs)
 from .operators.sampling import rebalance_to_mixture
 from .operators.text import pack_sequences
+from .schema.acyclic import (AcyclicSchemaEnumerator,
+                             validate_schemas_concurrent)
+
+# a decomposition validates the first CANDIDATES schemas enumerated
+CANDIDATES = 3
+
+
+def candidate_schemas(v: DecompositionValidator) -> tuple[list, list]:
+    """Mine exact (epsilon = 0) minimal-separator JDs on the validator's
+    engine, enumerate the first CANDIDATES acyclic schemas and validate
+    them in one call; returns (schemas, infos)."""
+    miner = JDMiner(MeasureEngine(v.eng), epsilon=0.0)
+    miner.mine_all_min_seps()
+    schemas = list(itertools.islice(AcyclicSchemaEnumerator(
+        v.schema_cols, sorted(miner.mined_jds, key=str)), CANDIDATES))
+    return schemas, validate_schemas_concurrent(v, schemas)
+
+
+def choose_schema(schemas: list, infos: list) -> int:
+    """Index of the schema to keep: fewest spurious tuples, then more
+    clusters, then the first enumerated (o69's contract, twinned in
+    DuckDB by oracles_mining.oracle_decompose_summary)."""
+    return min(range(len(schemas)), key=lambda i: (
+        infos[i].spurious_tuples, -len(schemas[i].clusters), i))
+
+
+def decompose(df: DataFrame, join_key: str, table_prefix: str
+              ) -> tuple[list, list, int, list[str]]:
+    """Mine, enumerate, validate and choose a schema for ``df``, and write
+    it bucketed on ``join_key``. Returns the candidate schemas and their
+    DecompositionInfos in enumeration order, the index of the one written,
+    and its tables, which the caller owns. Every cache the call makes is
+    released before it returns or raises."""
+    v = DecompositionValidator(df)
+    try:
+        schemas, infos = candidate_schemas(v)
+        best = choose_schema(schemas, infos)
+        tables = write_decomposition_bucketed(df, schemas[best].clusters,
+                                              join_key, table_prefix)
+    finally:
+        v.close()
+    return schemas, infos, best, tables
 
 
 def curate_corpus(docs: DataFrame, text_col: str, id_col: str, *,

@@ -422,9 +422,8 @@ def q_a14_spurious_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14 join-tree-ordered count fold (SmallDBInMemory.spuritousTuples:
     496-681): build the join tree of two compatible JDs, validate its
     clusters."""
-    from .schema.acyclic import AcyclicSchema, validate_schema
-
     from .core.deps import JD
+    from .schema.acyclic import AcyclicSchema
     denorm = denorm_customer_nation_region(spark, sf_dir)
     jds = [
         JD(frozenset(["c_nationkey"]),
@@ -438,7 +437,7 @@ def q_a14_spurious_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = AcyclicSchema(DENORM_COLS, jds)
     schema.build_join_tree()
     v = DecompositionValidator(denorm)
-    info = validate_schema(v, schema)
+    info = v.process_decomposition(schema.clusters)
     v.close()
     return spark.createDataFrame(
         [(len(schema.clusters), int(info.spurious_tuples))],
@@ -492,24 +491,16 @@ def q_b11_min_seps(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_b15_enumerate_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B14-B16 acyclic-schema enumeration over mined JDs + per-schema
     validation (rows-only check)."""
-    from .mining.jd_miner import JDMiner
-    from .schema.acyclic import AcyclicSchemaEnumerator, validate_schema
+    from .pipeline import candidate_schemas
 
-    denorm = _denorm6(spark, sf_dir)
-    miner = JDMiner(MeasureEngine(SparkEntropyEngine(denorm)), epsilon=0.0)
-    miner.mine_all_min_seps()
-    v = DecompositionValidator(denorm)
-    rows = []
-    for i, schema in enumerate(AcyclicSchemaEnumerator(DENORM6_COLS,
-                                                       sorted(miner.mined_jds,
-                                                              key=str))):
-        if i >= 3:
-            break
-        info = validate_schema(v, schema)
-        rows.append((";".join(sorted(",".join(sorted(c)) for c in schema.clusters)),
-                     len(schema.clusters), int(info.spurious_tuples)))
-    v.close()
-    miner.eng.unpersist()
+    v = DecompositionValidator(_denorm6(spark, sf_dir))
+    try:
+        schemas, infos = candidate_schemas(v)
+    finally:
+        v.close()
+    rows = [(";".join(sorted(",".join(sorted(c)) for c in schema.clusters)),
+             len(schema.clusters), int(info.spurious_tuples))
+            for schema, info in zip(schemas, infos)]
     # B15_SCHEMAS pins the enumeration order for the sf0.01 gate data; if the
     # enumeration ever drifts there, fail HERE with a diagnostic naming the
     # stale constant instead of surfacing as an opaque oracle hash mismatch.
@@ -528,7 +519,7 @@ def q_b15_enumerate_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_o69_decompose_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decompose-e2e deliverable END-TO-END under the hard gate
-    (bench.py decompose_e2e at the 6-col projection): mine min-sep JDs →
+    (pipeline.decompose at the 6-col projection): mine min-sep JDs →
     enumerate the first 3 acyclic schemas → validate spurious counts
     concurrently → pick the best by (spurious ASC, n_clusters DESC,
     enumeration order) → bucketed+sorted WRITE of the winner on
@@ -540,46 +531,23 @@ def q_o69_decompose_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     certification CTEs)."""
     from functools import reduce
 
-    from .engine.decompose import write_decomposition_bucketed
-    from .mining.jd_miner import JDMiner
-    from .schema.acyclic import (AcyclicSchemaEnumerator,
-                                 validate_schemas_concurrent)
+    from .pipeline import decompose
 
     denorm = _denorm6(spark, sf_dir)
-    miner = JDMiner(MeasureEngine(SparkEntropyEngine(denorm)), epsilon=0.0)
-    miner.mine_all_min_seps()
-    candidates = []
-    for i, schema in enumerate(AcyclicSchemaEnumerator(
-            DENORM6_COLS, sorted(miner.mined_jds, key=str))):
-        if i >= 3:
-            break
-        candidates.append(schema)
-    v = DecompositionValidator(denorm)
+    candidates, infos, best_i, names = decompose(
+        denorm, "c_nationkey", "gate_decomp_summary")
     try:
-        infos = validate_schemas_concurrent(v, candidates)
-    finally:
-        v.close()
-        miner.eng.unpersist()
-    # same gate-drift diagnostic as q_b15, ORDER-sensitive here: the twin
-    # pins enum_idx by O69_SCHEMA_ORDER position
-    if "sf0.01" in sf_dir:
-        expect = [";".join(sorted(",".join(c) for c in s))
-                  for s in O69_SCHEMA_ORDER]
-        got = [";".join(sorted(",".join(sorted(c)) for c in s.clusters))
-               for s in candidates]
-        if got != expect:
-            raise AssertionError(
-                "o69 enumeration order diverged from B15_SCHEMAS on the "
-                f"gate data.\n  expected: {expect}\n  got: {got}")
-    best_i, best_key = 0, None
-    for i, (schema, info) in enumerate(zip(candidates, infos)):
-        key = (int(info.spurious_tuples), -len(schema.clusters))
-        if best_key is None or key < best_key:
-            best_i, best_key = i, key
-    names = write_decomposition_bucketed(
-        denorm, candidates[best_i].clusters, "c_nationkey",
-        "gate_decomp_summary")
-    try:
+        # same gate-drift diagnostic as q_b15, ORDER-sensitive here: the
+        # twin pins enum_idx by O69_SCHEMA_ORDER position
+        if "sf0.01" in sf_dir:
+            expect = [";".join(sorted(",".join(c) for c in s))
+                      for s in O69_SCHEMA_ORDER]
+            got = [";".join(sorted(",".join(sorted(c)) for c in s.clusters))
+                   for s in candidates]
+            if got != expect:
+                raise AssertionError(
+                    "o69 enumeration order diverged from B15_SCHEMAS on the "
+                    f"gate data.\n  expected: {expect}\n  got: {got}")
         parts = [spark.table(n) for n in names]
 
         def nat_join(a, b):

@@ -10,8 +10,8 @@ JD-incompatibility graph) and `search/AcyclicSchemaEnumerator.java:40-133`
 
 The data-plane validation of an enumerated schema (spurious-tuple count over
 its join-tree clusters) is ``DecompositionValidator.validate`` in
-engine/decompose.py; ``validate_schema`` and ``validate_schemas_concurrent``
-here just bridge the two.
+engine/decompose.py; ``validate_schemas_concurrent`` here just bridges the
+two.
 """
 
 from __future__ import annotations
@@ -215,18 +215,11 @@ class AcyclicSchemaEnumerator:
         return schema
 
 
-def validate_schema(validator, schema: AcyclicSchema):
-    """Bridge to the data plane: spurious-tuple count for the schema's
-    join-tree clusters (the per-schema SQLite job of
-    `search/AcyclicSchemaEnumerator.java:309-552` step 5, on Spark)."""
-    return validate_schemas_concurrent(validator, [schema])[0]
-
-
 def validate_schemas_concurrent(validator, schemas) -> list:
-    """validate_schema over several CANDIDATE schemas in one
-    ``DecompositionValidator.validate`` call, which prices the clusters
-    they share once and then folds every schema; returns the
-    DecompositionInfo list in input order."""
+    """Spurious-tuple counts of several schemas' join-tree clusters (step 5
+    of `search/AcyclicSchemaEnumerator.java:309-552`) in one
+    ``DecompositionValidator.validate`` call, which prices shared clusters
+    once; returns the DecompositionInfo list in input order."""
     schemas = list(schemas)
     for s in schemas:
         if not s.clusters:

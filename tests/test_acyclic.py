@@ -9,7 +9,8 @@ from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
 from relationaldecomposition_spark.engine.measures import MeasureEngine
 from relationaldecomposition_spark.mining.jd_miner import JDMiner
 from relationaldecomposition_spark.schema.acyclic import (
-    AcyclicSchema, AcyclicSchemaEnumerator, is_compatible, validate_schema)
+    AcyclicSchema, AcyclicSchemaEnumerator, is_compatible,
+    validate_schemas_concurrent)
 from tests.conftest import both_faces, load
 
 COLS = ["c_custkey", "c_nationkey", "c_mktsegment", "n_name", "n_regionkey", "r_name"]
@@ -76,10 +77,8 @@ def denorm6(spark):
 def test_validate_schemas_concurrent_matches_sequential(denorm6):
     """The thread-pooled candidate validation must return the same
     DecompositionInfo values, in input order, as sequential
-    validate_schema calls — including a deliberately LOSSY candidate so
-    the spurious counts differ across schemas."""
-    from relationaldecomposition_spark.schema.acyclic import (
-        validate_schemas_concurrent)
+    one-schema calls — including a deliberately LOSSY candidate so the
+    spurious counts differ across schemas."""
 
     miner = JDMiner(MeasureEngine(SparkEntropyEngine(denorm6)), epsilon=0.0)
     miner.mine_all_min_seps()
@@ -90,7 +89,7 @@ def test_validate_schemas_concurrent_matches_sequential(denorm6):
         if i >= 2:
             break
     v = DecompositionValidator(denorm6)
-    seq = [validate_schema(v, s) for s in schemas]
+    seq = [validate_schemas_concurrent(v, [s])[0] for s in schemas]
     conc = validate_schemas_concurrent(v, schemas)
     assert [
         (i.spurious_tuples, i.largest_relation, i.total_tuples,
@@ -118,7 +117,7 @@ def test_mine_enumerate_validate_pipeline(denorm6):
     assert schemas
     v = DecompositionValidator(denorm6)
     for s in schemas[:2]:
-        info = validate_schema(v, s)
+        info = validate_schemas_concurrent(v, [s])[0]
         assert info.spurious_tuples == 0, repr(s)
         # every cluster is a projection: never more rows than the base
         assert info.largest_relation <= v.num_tuples

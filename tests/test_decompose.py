@@ -64,7 +64,8 @@ def test_lossy_decomposition_matches_naive_oracle(denorm):
 
 @both_faces
 def test_duplicate_rows_are_dedupped_first(spark):
-    # validation path dedups the base: duplicates must not count as spurious
+    # validation ignores duplicate rows: |base| counts distinct rows, and
+    # duplicates must not count as spurious
     rows = [(1, "a", "p"), (1, "a", "p"), (2, "b", "q")]
     df = spark.createDataFrame(rows, ["k", "x", "y"])
     v = DecompositionValidator(df)
@@ -103,13 +104,15 @@ def _persisted(spark):
 def new_warm_validator(denorm):
     """Builds validators whose persisted base is already materialized, so
     the persistent-RDD count moves only with projection persists. A
-    factory, so each face of a both_faces test sizes its own engine."""
+    factory, so each face of a both_faces test sizes its own engine; the
+    base is materialized by a count of its own, which leaves the engine
+    unsized and runs no kernel job."""
     made = []
 
     def make():
         v = DecompositionValidator(denorm)
         made.append(v)
-        assert v.num_tuples > 0
+        assert v.base.count() > 0
         return v
 
     yield make
@@ -204,6 +207,60 @@ def test_validate_prices_every_projection_in_one_job(spark, new_warm_validator):
     assert _cached(spark, v.base)
 
 
+def test_caller_persisted_input_stays_cached(spark):
+    """An engine and a validator over a DataFrame its caller persisted read
+    that cache and leave it to the caller: neither eng.unpersist() nor
+    v.close() uncaches it."""
+    from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
+
+    df = spark.range(64).selectExpr("id % 8 AS k", "id % 4 AS a",
+                                    "id % 2 AS b").persist()
+    try:
+        df.count()
+        eng = SparkEntropyEngine(df)
+        assert eng.entropy(["k", "a"]) > 0
+        eng.unpersist()
+        assert _cached(spark, df)
+        v = DecompositionValidator(df)
+        assert v.process_decomposition([["k", "a"], ["k", "b"]]) \
+            .spurious_tuples == 0
+        v.close()
+        assert _cached(spark, df)
+    finally:
+        df.unpersist()
+
+
+def test_miner_and_validator_share_one_cache(spark, denorm):
+    """A miner and a validator over one DataFrame share one cache entry:
+    whichever is released first leaves the other's input cached, and once
+    both are released the persistent RDDs are back to their count from
+    before."""
+    from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
+    from relationaldecomposition_spark.engine.measures import MeasureEngine
+    from relationaldecomposition_spark.mining.jd_miner import JDMiner
+
+    before = _persisted(spark)
+    for miner_first in (True, False):
+        df = denorm.select("c_custkey", "c_nationkey", "n_name",
+                           "n_regionkey", "r_name")
+        if miner_first:
+            miner = JDMiner(MeasureEngine(SparkEntropyEngine(df)), epsilon=0.0)
+            v = DecompositionValidator(df)
+        else:
+            v = DecompositionValidator(df)
+            miner = JDMiner(MeasureEngine(SparkEntropyEngine(df)), epsilon=0.0)
+        assert miner.mine_all_min_seps()
+        lossless = [["c_custkey", "c_nationkey"], GOOD[1], GOOD[2]]
+        assert v.process_decomposition(lossless).spurious_tuples == 0
+        first, second = ((v.close, miner.eng.unpersist) if miner_first
+                         else (miner.eng.unpersist, v.close))
+        first()
+        assert _cached(spark, df)
+        second()
+        assert not _cached(spark, df)
+        assert _persisted(spark) == before
+
+
 # null, NaN and -0.0 in the join column k: a null key joins nothing (so the
 # spurious count can go negative), NaN joins NaN, -0.0 joins 0.0
 DIRTY = [
@@ -251,9 +308,9 @@ def test_fold_size_guard(spark, denorm, monkeypatch):
     spark_folds = []
     fold = DecompositionValidator._fold_total_frame
 
-    def spy(self, cl, counts):
+    def spy(self, cl):
         spark_folds.append(cl)
-        return fold(self, cl, counts)
+        return fold(self, cl)
 
     monkeypatch.setattr(DecompositionValidator, "_fold_total_frame", spy)
     v = DecompositionValidator(denorm)

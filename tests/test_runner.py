@@ -128,17 +128,19 @@ def test_timeout_runner_stops_search(spark, validator, monkeypatch):
 
 
 @pytest.mark.usefixtures("spark_kernel")
-def test_timeout_runner_stops_mvd_miner(spark, validator):
+def test_timeout_runner_stops_mvd_miner(spark, validator, monkeypatch):
     """The ADVICE r3 medium: a timed-out MVDMiner worker must stop LAUNCHING
     Spark jobs once the stop flag flips (cancelJobGroup only kills in-flight
     ones). Wide projection + tiny timeout forces the flag path; the miner
     polls at level and batch boundaries, so jobs_run stops advancing shortly
     after the TimeoutError surfaces."""
+    from relationaldecomposition_spark.engine import entropy
     from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
     from relationaldecomposition_spark.engine.measures import MeasureEngine
     from relationaldecomposition_spark.mining.lattice import MVDMiner
 
-    eng = SparkEntropyEngine(validator.base, max_grouping_sets=2)
+    monkeypatch.setattr(entropy, "DEFAULT_MAX_GROUPING_SETS", 2)
+    eng = SparkEntropyEngine(validator.base)
     runner = TimeoutRunner(spark)
     try:
         with pytest.raises(TimeoutError):

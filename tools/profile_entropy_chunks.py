@@ -4,7 +4,8 @@ component profile; profile chunk sizing against exchange count before
 touching the chunked grouping-sets shape).
 
 What it does, in ONE Spark session (interleaved configs, weather-immune):
-for each max_grouping_sets in --widths, run the bench's exact batch32
+for each grouping-set width cap in --widths (set as the engine module's
+DEFAULT_MAX_GROUPING_SETS), run the bench's exact batch32
 subset list against lineitem with a FRESH engine (cold driver cache per
 run — the bench's shape), recording per chunk: set count, union width,
 whether the pre-aggregation gate fired, and wall seconds. Total Expand
@@ -27,6 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from relationaldecomposition_spark.engine import entropy  # noqa: E402
 from relationaldecomposition_spark.engine.entropy import (  # noqa: E402
     SparkEntropyEngine)
 from relationaldecomposition_spark.session import get_spark  # noqa: E402
@@ -89,7 +91,8 @@ def main():
         for w in widths:
             spark.sparkContext.setJobDescription(
                 f"entropy_batch32 profile width={w} rep={rep}")
-            eng = ProfiledEngine(li, max_grouping_sets=w, columns=COLS)
+            entropy.DEFAULT_MAX_GROUPING_SETS = w
+            eng = ProfiledEngine(li.select(*COLS))
             t0 = time.monotonic()
             eng.entropies(batch32())
             wall = time.monotonic() - t0
