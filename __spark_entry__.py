@@ -24,30 +24,33 @@ def entry(spark: SparkSession) -> DataFrame:
     from pyspark.sql import functions as F
 
     from relationaldecomposition_spark.engine.decompose import DecompositionValidator
-    from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
     from relationaldecomposition_spark.engine.measures import MeasureEngine
     from relationaldecomposition_spark.queries import DECOMPOSITIONS
     from relationaldecomposition_spark.sources.tables import (
         denorm_customer_nation_region)
 
     denorm = denorm_customer_nation_region(spark, SMOKE_SF_DIR)
-    meng = MeasureEngine(SparkEntropyEngine(denorm))
-    rows = [
-        ("fd", "c_nationkey -> n_name",
-         float(meng.fd_measure(["c_nationkey"], ["n_name"]))),
-        ("mvd", "c_nationkey ->> {n_name,n_regionkey,r_name}",
-         float(meng.mvd_measure(["c_nationkey"], ["n_name", "n_regionkey", "r_name"]))),
-        ("jd", "[c_nationkey | cust-cols, nation-cols]",
-         float(meng.jd_measure(["c_nationkey"],
-                               [["c_custkey", "c_name", "c_acctbal", "c_mktsegment"],
-                                ["n_name", "n_regionkey", "r_name"]]))),
-    ]
-    meng.engine.unpersist()
+    # one engine: the measures and the validation share its sizing and cache
     v = DecompositionValidator(denorm)
-    for name, clusters in DECOMPOSITIONS:
-        rows.append(("spurious", name,
-                     float(v.process_decomposition(clusters).spurious_tuples)))
-    v.close()
+    try:
+        meng = MeasureEngine(v.eng)
+        rows = [
+            ("fd", "c_nationkey -> n_name",
+             float(meng.fd_measure(["c_nationkey"], ["n_name"]))),
+            ("mvd", "c_nationkey ->> {n_name,n_regionkey,r_name}",
+             float(meng.mvd_measure(["c_nationkey"],
+                                    ["n_name", "n_regionkey", "r_name"]))),
+            ("jd", "[c_nationkey | cust-cols, nation-cols]",
+             float(meng.jd_measure(
+                 ["c_nationkey"],
+                 [["c_custkey", "c_name", "c_acctbal", "c_mktsegment"],
+                  ["n_name", "n_regionkey", "r_name"]]))),
+        ]
+        for name, clusters in DECOMPOSITIONS:
+            rows.append(("spurious", name, float(
+                v.process_decomposition(clusters).spurious_tuples)))
+    finally:
+        v.close()
     return spark.createDataFrame(rows, "kind string, object string, value double") \
         .select("kind", "object", F.round("value", 6).alias("value"))
 

@@ -11,6 +11,9 @@ Outputs per relation (reference schemas, experiments.py):
   mode=mvd:    <name>.out.csv                (MVD sweep)
   mode=minsep: <name>.csv + per-run .sep     (min-sep mining)
                <name>.enum.out.csv           (with --enumerate)
+
+Each relation is read, persisted and sized once: every threshold mines on
+one entropy engine, and --enumerate validates each run's schemas on it.
 """
 
 from __future__ import annotations

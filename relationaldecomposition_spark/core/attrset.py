@@ -43,16 +43,3 @@ def sorted_cols(s: Iterable[str], schema: Sequence[str] | None = None) -> list[s
 def complement(s: Iterable[str], schema: Sequence[str]) -> frozenset[str]:
     """R - S for the relation schema (AttributeSet.complement)."""
     return frozenset(schema) - frozenset(s)
-
-
-def bit_string(s: Iterable[str], schema: Sequence[str]) -> str:
-    """Debug rendering equivalent to AttributeSet.bitString(): one char per
-    schema column, '1' when present."""
-    ss = frozenset(s)
-    return "".join("1" if c in ss else "0" for c in schema)
-
-
-def subsets_of_size(schema: Sequence[str], k: int) -> list[frozenset[str]]:
-    from itertools import combinations
-
-    return [frozenset(c) for c in combinations(schema, k)]

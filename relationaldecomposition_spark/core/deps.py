@@ -303,9 +303,6 @@ class DependencySet:
                 return True
         return False
 
-    def with_lhs(self, lhs: frozenset[str]) -> set[Dependency]:
-        return self._by_lhs.get(lhs, set())
-
     def with_rhs(self, rhs: frozenset[str]) -> set[Dependency]:
         return self._by_rhs.get(rhs, set())
 

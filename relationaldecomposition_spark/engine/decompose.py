@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
 from .entropy import (BROADCAST_MAX_ROWS, SparkEntropyEngine, _col, _fresh,
-                      _group_ids)
+                      _group_ids, cache_unless_cached)
 from .fanout import fanout
 
 
@@ -349,15 +349,18 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
     Only clusters containing ``join_key`` are bucketed; others are written
     unbucketed. Returns the created table names (input order).
 
+    Each table's ``select(...).distinct()`` deduplicates the relation as
+    given, which is persisted only when uncached (``cache_unless_cached``).
+
     The per-cluster writes run CONCURRENTLY (round-8): each is an
-    independent distinct+shuffle+write over the shared persisted base
+    independent distinct+shuffle+write over the shared persisted relation
     whose wall-clock is dominated by job scheduling and the write
     barrier, not executor saturation — three sf0.1 cluster writes
     measure ~5 s sequential vs ~2 s overlapped. Table names are disjoint
     per worker, so the DROP/orphan-cleanup prologue never races on the
     same location. The first failure cancels every not-yet-started write
     and is re-raised."""
-    base = df.distinct().persist()
+    release = cache_unless_cached(df)
     spark = df.sparkSession
 
     def write_one(item):
@@ -371,7 +374,7 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
         # local location first. Real metastores never orphan.
         spark.sql(f"DROP TABLE IF EXISTS `{name}`")
         _remove_orphan_table_location(spark, name)
-        writer = base.select(*map(_col, cols)).distinct().write.mode("overwrite")
+        writer = df.select(*map(_col, cols)).distinct().write.mode("overwrite")
         if join_key in cols:
             writer = writer.bucketBy(num_buckets, join_key).sortBy(join_key)
         writer.saveAsTable(name)
@@ -380,4 +383,4 @@ def write_decomposition_bucketed(df: DataFrame, clusters, join_key: str,
     try:
         return fanout(spark, write_one, enumerate(clusters), 4)
     finally:
-        base.unpersist()
+        release()

@@ -46,7 +46,8 @@ Cache ownership. Spark keys cache entries by logical plan, so unpersisting
 a DataFrame uncaches every DataFrame with an equal plan. An engine persists
 its input only when Spark reports it uncached, and ``unpersist()`` releases
 only a cache that engine made: engines over one relation share one entry,
-and none uncaches another's input or the caller's own ``persist()``.
+and none uncaches another's input or the caller's own ``persist()``. The
+rule is ``cache_unless_cached``; the bucketed writer follows it too.
 
 Scale notes (100 TB):
 - Entropy is algebraic: sum(c*log2(c)) over a group-by — partial aggregation
@@ -182,6 +183,21 @@ def _group_ids(cols: list[np.ndarray], n: int) -> tuple[np.ndarray, np.ndarray]:
     return ids, np.unique(ids, return_index=True)[1]
 
 
+def cache_unless_cached(df: DataFrame) -> Callable[[], None]:
+    """The cache-ownership rule: persist ``df`` only when Spark reports it
+    uncached. Returns the release, which unpersists once and only a cache
+    this call made."""
+    if df.storageLevel != StorageLevel.NONE:
+        return lambda: None
+    held = [df.persist()]
+
+    def release() -> None:
+        if held:
+            held.pop().unpersist()
+
+    return release
+
+
 def entropy_from_counts(counts: Iterable[int], num_rows: int) -> float:
     """Driver-side oracle: H from a histogram (AbstractDataset.java:187-201)."""
     if num_rows <= 0:
@@ -242,12 +258,9 @@ class SparkEntropyEngine:
         self.direct_chunks = 0
         self._stats_lock = threading.Lock()
         # Mining re-scans the relation constantly: persisting it is the
-        # reference ingesting into H2 once (CompressedDB.init). An input
-        # cached already is left to its owner (see Cache ownership).
-        self._owns_cache = (cache_input
-                            and df.storageLevel == StorageLevel.NONE)
-        if self._owns_cache:
-            self.df.persist()
+        # reference ingesting into H2 once (CompressedDB.init).
+        self._release = (cache_unless_cached(df) if cache_input
+                         else lambda: None)
 
     # ----- cardinalities ---------------------------------------------------
 
@@ -760,6 +773,4 @@ class SparkEntropyEngine:
 
     def unpersist(self) -> None:
         """Release the input's cache if this engine made it."""
-        if self._owns_cache:
-            self._owns_cache = False
-            self.df.unpersist()
+        self._release()

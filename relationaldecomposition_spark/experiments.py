@@ -13,15 +13,19 @@ column so downstream analysis scripts keep working:
 - Schema-enum CSV (`search/AcyclicSchemaEnumerator.java:243-300`):
   one row per enumerated acyclic schema with its validation metrics.
 
-Column mapping to Spark counters (all pre-existing instrumentation on
-SparkEntropyEngine / DecompositionInfo):
+Each sweep mines on one entropy engine per relation (entropies depend on
+the data, not on the threshold), so per-run counters are deltas over the
+run, and a run the shared cache serves reads 0. Column mapping to Spark
+counters (SparkEntropyEngine / DecompositionInfo instrumentation):
   "#File Scans"/"#In-Memory Queries Issued" -> engine.jobs_run
   "total file scan time"/"Query Time"       -> engine.scan_seconds
+  "Time Building range Tbls"                -> the sizing count and collect
+                                               (first threshold, ~0 after)
   "Range Size"                              -> DEFAULT_MAX_GROUPING_SETS
                                                (the grouping-set width cap,
                                                the analogue of the
                                                reference's range envelope)
-  "Cached Entropy Objects"                  -> engine.cache_size
+  "Cached Entropy Objects"                  -> engine.cache_size (shared)
   "Number of tuples processed..."           -> engine.tuples_processed
 Times are wall-clock SECONDS (floats), not the reference's millis — the
 unit is stated here once instead of being implicit.
@@ -34,7 +38,9 @@ the CLI in cli.py exposes it.
 from __future__ import annotations
 
 import csv
+import itertools
 import os
+import threading
 import time
 from dataclasses import dataclass
 
@@ -56,6 +62,8 @@ MINSEP_HEADER = ["#Attribtues", "#Rows", "Range Size", "Threshold",
                  "Query Time", "total Running time", "%querying",
                  "Cached Entropy Objects",
                  "Number of tuples processed during Entropy Computation"]
+
+MAX_SCHEMAS = 100  # ENUM_HEADER rows per `.sep` file
 
 ENUM_HEADER = ["#Attribtues", "#Rows", "JDMeasure", "Separator Size",
                "Elapsed Time (sec)", "#Schemas Returned", "Largest Relation",
@@ -80,6 +88,23 @@ class RunResult:
     row: list
 
 
+def _mine_timed(runner, eng, make_miner, mine, timeout_sec: float):
+    """(miner, completed) of ``mine(miner)`` under the runner's timeout.
+    The miner gets a stop flag made on this thread, so no late worker can
+    leave a fired flag on the shared engine after the reset below."""
+    stop = threading.Event()
+    miner = make_miner(stop.is_set)
+    try:
+        runner.run(lambda _: mine(miner), timeout=timeout_sec)
+        return miner, True
+    except TimeoutError:
+        stop.set()
+        return miner, False
+    finally:
+        # a fired flag left on the engine would cancel the next run's jobs
+        eng.stop_check = None
+
+
 def run_mvd_sweep(df: DataFrame, out_csv: str,
                   thresholds=DEFAULT_THRESHOLDS,
                   timeout_sec: float = 12000.0) -> list[RunResult]:
@@ -93,26 +118,28 @@ def run_mvd_sweep(df: DataFrame, out_csv: str,
     runner = TimeoutRunner(df.sparkSession)
     results: list[RunResult] = []
     n_atts = len(df.columns)
-    for thresh in thresholds:
-        eng = SparkEntropyEngine(df)
-        t0 = time.monotonic()
-        try:
-            mined = runner.run(
-                lambda stop: MVDMiner(MeasureEngine(eng), alpha=thresh,
-                                      stop_flag=stop).mine(),
-                timeout=timeout_sec)
+    eng = SparkEntropyEngine(df)
+    meng = MeasureEngine(eng)
+    try:
+        for thresh in thresholds:
+            jobs0, scan0, t0 = eng.jobs_run, eng.scan_seconds, time.monotonic()
+            miner, done = _mine_timed(
+                runner, eng,
+                lambda stop: MVDMiner(meng, alpha=thresh, stop_flag=stop),
+                MVDMiner.mine, timeout_sec)
             total = time.monotonic() - t0
-            pct = 100.0 * eng.scan_seconds / total if total > 0 else 0.0
-            row = [n_atts, eng.num_rows, thresh, len(list(mined)),
-                   eng.jobs_run, round(eng.scan_seconds, 3),
-                   round(total, 3), round(pct, 2)]
-            results.append(RunResult(True, row))
-        except TimeoutError:
-            row = [n_atts, "NaN", thresh, "NaN", "NaN", "NaN",
-                   f">{timeout_sec}", "NaN"]
-            results.append(RunResult(False, row))
-        finally:
-            eng.unpersist()
+            scan = eng.scan_seconds - scan0
+            pct = 100.0 * scan / total if total > 0 else 0.0
+            if done:
+                row = [n_atts, eng.num_rows, thresh, len(list(miner.discovered)),
+                       eng.jobs_run - jobs0, round(scan, 3), round(total, 3),
+                       round(pct, 2)]
+            else:
+                row = [n_atts, "NaN", thresh, "NaN", "NaN", "NaN",
+                       f">{timeout_sec}", "NaN"]
+            results.append(RunResult(done, row))
+    finally:
+        eng.unpersist()
     _append_rows(out_csv, MVD_SWEEP_HEADER, [r.row for r in results])
     return results
 
@@ -120,111 +147,105 @@ def run_mvd_sweep(df: DataFrame, out_csv: str,
 def run_minsep_experiment(df: DataFrame, out_csv: str, sep_dir: str,
                           name: str, thresholds=(0.0,),
                           timeout_sec: float = 12000.0,
-                          mine_full_mvds: bool = True) -> list[RunResult]:
+                          mine_full_mvds: bool = True,
+                          enum_csv: str | None = None) -> list[RunResult]:
     """Minimal-separator mining per threshold -> MINSEP_HEADER rows plus a
     `.sep` file of mined JDs per run (file name pattern matches the
     reference: <name>.TO.<timeout>.RANGE.<range>.THRESH.<thresh>.sep, which
-    AcyclicSchemaEnumerator parses the threshold back out of)."""
-    from .engine.entropy import DEFAULT_MAX_GROUPING_SETS, SparkEntropyEngine
+    AcyclicSchemaEnumerator parses the threshold back out of). With
+    ``enum_csv``, each run's `.sep` file is enumerated and validated on the
+    engine the sweep mines on, as run_schema_enumeration does."""
+    from .engine.decompose import DecompositionValidator
+    from .engine.entropy import DEFAULT_MAX_GROUPING_SETS
     from .engine.measures import MeasureEngine
     from .mining.jd_miner import JDMiner
     from .runner import TimeoutRunner
     from .sources.jd_io import write_jds
 
+    def mine(miner):
+        miner.mine_all_min_seps()
+        if mine_full_mvds:
+            miner.mine_all_full_mvds()
+
     os.makedirs(sep_dir, exist_ok=True)
     runner = TimeoutRunner(df.sparkSession)
     results: list[RunResult] = []
-    for thresh in thresholds:
-        eng = SparkEntropyEngine(df)
-        t_build0 = time.monotonic()
-        # materialize the persisted input ("range tables"): the sizing
-        # count, and on the driver face the one collect, are build time,
-        # not query time
-        _ = eng.num_rows
-        t_build = time.monotonic() - t_build0
-        build_scan = eng.scan_seconds
-        miner = JDMiner(MeasureEngine(eng), epsilon=thresh)
-        t0 = time.monotonic()
-        completed_seps = completed_mvds = True
-        try:
-            def mine(stop):
-                miner._stop = stop
-                miner.eng.stop_check = stop
-                miner.mine_all_min_seps()
-                if mine_full_mvds:
-                    miner.mine_all_full_mvds()
-                return miner
-
-            runner.run(mine, timeout=timeout_sec)
-        except TimeoutError:
-            completed_seps = completed_mvds = False
-        total = time.monotonic() - t0
-        scan = eng.scan_seconds - build_scan
-        pct = 100.0 * scan / total if total > 0 else 0.0
-        row = [len(df.columns), eng.num_rows, DEFAULT_MAX_GROUPING_SETS, thresh,
-               timeout_sec, str(completed_seps), len(miner.mined_min_seps),
-               str(completed_mvds or not mine_full_mvds),
-               len(miner.full_mvds), round(t_build, 3), eng.jobs_run,
-               round(scan, 3), round(total, 3), round(pct, 2),
-               eng.cache_size, eng.tuples_processed]
-        results.append(RunResult(completed_seps, row))
-        sep_path = os.path.join(
-            sep_dir, f"{name}.TO.{int(timeout_sec)}.RANGE."
-                     f"{DEFAULT_MAX_GROUPING_SETS}.THRESH.{thresh}.sep")
-        jds = set(miner.full_mvds) | set(miner.mined_jds)
-        write_jds(sorted(jds, key=str), sep_path, list(df.columns))
-        eng.unpersist()
+    enum_rows: list[list] = []
+    v = DecompositionValidator(df)
+    eng, cols = v.eng, list(df.columns)
+    meng = MeasureEngine(eng)
+    try:
+        for thresh in thresholds:
+            jobs0, tuples0, t_build0 = (eng.jobs_run, eng.tuples_processed,
+                                        time.monotonic())
+            # the sizing count and the driver face's collect are build
+            # time, not query time; only the first threshold pays them
+            n_rows = eng.num_rows
+            t_build = time.monotonic() - t_build0
+            scan0, t0 = eng.scan_seconds, time.monotonic()
+            miner, done = _mine_timed(
+                runner, eng,
+                lambda stop: JDMiner(meng, epsilon=thresh, stop_flag=stop),
+                mine, timeout_sec)
+            total = time.monotonic() - t0
+            scan = eng.scan_seconds - scan0
+            pct = 100.0 * scan / total if total > 0 else 0.0
+            results.append(RunResult(done, [
+                len(cols), n_rows, DEFAULT_MAX_GROUPING_SETS, thresh,
+                timeout_sec, str(done), len(miner.mined_min_seps),
+                str(done or not mine_full_mvds), len(miner.full_mvds),
+                round(t_build, 3), eng.jobs_run - jobs0, round(scan, 3),
+                round(total, 3), round(pct, 2), eng.cache_size,
+                eng.tuples_processed - tuples0]))
+            sep_path = os.path.join(
+                sep_dir, f"{name}.TO.{int(timeout_sec)}.RANGE."
+                         f"{DEFAULT_MAX_GROUPING_SETS}.THRESH.{thresh}.sep")
+            jds = set(miner.full_mvds) | set(miner.mined_jds)
+            write_jds(sorted(jds, key=str), sep_path, cols)
+            if enum_csv is not None:
+                enum_rows += _enum_rows(v, sep_path, MAX_SCHEMAS)
+    finally:
+        v.close()
     _append_rows(out_csv, MINSEP_HEADER, [r.row for r in results])
+    if enum_csv is not None:
+        _append_rows(enum_csv, ENUM_HEADER, enum_rows)
     return results
 
 
-def run_schema_enumeration(df: DataFrame, sep_path: str, out_csv: str,
-                           max_schemas: int = 100,
-                           validate: bool = True) -> list[list]:
-    """Enumerate acyclic schemas from a `.sep` file of mined JDs and emit
-    one ENUM_HEADER row per schema (AcyclicSchemaEnumerator step 5)."""
-    from .engine.decompose import DecompositionValidator
+def _enum_rows(v, sep_path: str, max_schemas: int) -> list[list]:
+    """One ENUM_HEADER row per acyclic schema enumerated from a `.sep`
+    file, validated on ``v`` (AcyclicSchemaEnumerator step 5)."""
     from .schema.acyclic import AcyclicSchemaEnumerator
     from .sources.jd_io import read_jds
 
-    jds = read_jds(sep_path, list(df.columns))
+    cols = list(v.schema_cols)
+    jds = sorted(read_jds(sep_path, cols), key=str)
     rows: list[list] = []
-    v = DecompositionValidator(df) if validate else None
-    try:
-        n_rows = v.num_tuples if validate else df.count()
-        t0 = time.monotonic()
-        for i, schema in enumerate(
-                AcyclicSchemaEnumerator(list(df.columns), sorted(jds, key=str))):
-            if i >= max_schemas:
-                break
-            if validate:
-                info = v.process_decomposition(schema.clusters)
-                spurious, largest = info.spurious_tuples, info.largest_relation
-                tuples, cells = info.total_tuples, info.total_cells
-            else:
-                spurious = largest = tuples = cells = "NaN"
-            rows.append([len(df.columns), n_rows,
-                         round(schema.estimated_measure, 9),
-                         schema.max_separator,
-                         round(time.monotonic() - t0, 3), i + 1, largest,
-                         len(schema.clusters), spurious, tuples, cells])
-    finally:
-        if v is not None:
-            v.close()
-    _append_rows(out_csv, ENUM_HEADER, rows)
+    n_rows, t0 = v.num_tuples, time.monotonic()
+    for i, schema in enumerate(itertools.islice(
+            AcyclicSchemaEnumerator(cols, jds), max_schemas)):
+        info = v.process_decomposition(schema.clusters)
+        rows.append([len(cols), n_rows, round(schema.estimated_measure, 9),
+                     schema.max_separator, round(time.monotonic() - t0, 3),
+                     i + 1, info.largest_relation, len(schema.clusters),
+                     info.spurious_tuples, info.total_tuples,
+                     info.total_cells])
     return rows
 
 
-def load_relation(spark: SparkSession, path: str,
-                  columns: list[str] | None = None) -> DataFrame:
-    """Parquet or reference-style CSV (A1 semantics via sources.tables)."""
-    from .sources.tables import read_csv_ref
+def run_schema_enumeration(df: DataFrame, sep_path: str, out_csv: str,
+                           max_schemas: int = MAX_SCHEMAS) -> list[list]:
+    """Enumerate acyclic schemas from a standalone `.sep` file of mined JDs
+    and emit one ENUM_HEADER row per schema."""
+    from .engine.decompose import DecompositionValidator
 
-    if path.endswith(".parquet"):
-        df = spark.read.parquet(path)
-    else:
-        df = read_csv_ref(spark, path)
-    return df.select(*columns) if columns else df
+    v = DecompositionValidator(df)
+    try:
+        rows = _enum_rows(v, sep_path, max_schemas)
+    finally:
+        v.close()
+    _append_rows(out_csv, ENUM_HEADER, rows)
+    return rows
 
 
 def sweep_directory(spark: SparkSession, in_dir: str, out_dir: str,
@@ -236,7 +257,10 @@ def sweep_directory(spark: SparkSession, in_dir: str, out_dir: str,
     """Main.java:202-221: process every relation in `in_dir`
     smallest-file-first, sweeping thresholds under a per-run timeout.
     mode='mvd' emits <name>.out.csv; mode='minsep' emits <name>.csv +
-    .sep files (+ <name>.enum.out.csv when enumerate_schemas)."""
+    .sep files (+ <name>.enum.out.csv when enumerate_schemas). CSV
+    relations are read with A1 semantics (sources.tables.read_csv_ref)."""
+    from .sources.tables import read_csv_ref
+
     os.makedirs(out_dir, exist_ok=True)
     files = [os.path.join(in_dir, f) for f in os.listdir(in_dir)
              if f.endswith((".parquet", ".csv"))]
@@ -246,23 +270,17 @@ def sweep_directory(spark: SparkSession, in_dir: str, out_dir: str,
     out: dict[str, list[RunResult]] = {}
     for path in files:
         name = os.path.basename(path).split(".")[0]
-        df = load_relation(spark, path, columns)
+        df = (spark.read.parquet(path) if path.endswith(".parquet")
+              else read_csv_ref(spark, path))
+        df = df.select(*columns) if columns else df
         if mode == "mvd":
             out[name] = run_mvd_sweep(
                 df, os.path.join(out_dir, f"{name}.out.csv"),
                 thresholds, timeout_sec)
             continue
+        enum_csv = (os.path.join(out_dir, f"{name}.enum.out.csv")
+                    if enumerate_schemas else None)
         out[name] = run_minsep_experiment(
             df, os.path.join(out_dir, f"{name}.csv"), out_dir, name,
-            thresholds, timeout_sec)
-        if enumerate_schemas:
-            from .engine.entropy import DEFAULT_MAX_GROUPING_SETS
-            for res, thresh in zip(out[name], thresholds):
-                sep = os.path.join(
-                    out_dir, f"{name}.TO.{int(timeout_sec)}"
-                             f".RANGE.{DEFAULT_MAX_GROUPING_SETS}"
-                             f".THRESH.{thresh}.sep")
-                if os.path.exists(sep):
-                    run_schema_enumeration(
-                        df, sep, os.path.join(out_dir, f"{name}.enum.out.csv"))
+            thresholds, timeout_sec, enum_csv=enum_csv)
     return out

@@ -105,15 +105,3 @@ class BeeriInference:
     def implies(self, dep: Dependency) -> bool:
         self.infer(dep)
         return dep.measure.is_less_than(self.alpha) is Status.TRUE
-
-    def batch_infer(self, deps: Iterable[Dependency]) -> None:
-        """Group by lhs so each basis is computed once
-        (doBatchInference)."""
-        by_lhs: dict[frozenset[str], list[Dependency]] = {}
-        for d in deps:
-            by_lhs.setdefault(d.lhs, []).append(d)
-        for lhs, group in by_lhs.items():
-            basis = DependencyBasis(self.schema, lhs)
-            basis.compute(self.discovered)
-            for d in group:
-                basis.infer(d)

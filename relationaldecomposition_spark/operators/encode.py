@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 DEFAULT_DICT_PARTITIONS = 32
-BROADCAST_MAX_ROWS = 1_000_000
 
 
 def dict_encode_column(df: DataFrame, column: str,
@@ -83,23 +82,19 @@ def dict_encode_column(df: DataFrame, column: str,
 
 
 def encode_columns(df: DataFrame, columns: list[str],
-                   num_partitions: int = DEFAULT_DICT_PARTITIONS,
-                   broadcast_max_rows: int = BROADCAST_MAX_ROWS
+                   num_partitions: int = DEFAULT_DICT_PARTITIONS
                    ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """Encode `columns` of `df` to dense ints (CompressedDB's encoded base
     table). Returns (encoded df with <col>_code columns, {col: codes}).
-    Each dictionary joins back broadcast when its exactly-known size is
-    under the bound, else as a regular (sort-merge) join. Caller unpersists
-    each codes frame."""
+    Each dictionary joins back on its value; the join strategy is AQE's,
+    which reads the cached dictionary's size. Caller unpersists each codes
+    frame."""
     out = df
     dicts: dict[str, DataFrame] = {}
     for c in columns:
         codes = dict_encode_column(df, c, num_partitions)
         dicts[c] = codes
-        n = codes.count()  # served from cache
         side = codes.select(F.col("value").alias(c),
                             F.col("code").alias(f"{c}_code"))
-        if n <= broadcast_max_rows:
-            side = F.broadcast(side)
         out = out.join(side, on=c, how="left")
     return out, dicts

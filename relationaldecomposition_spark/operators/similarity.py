@@ -208,16 +208,6 @@ def _plane_dots_sql(vname: str, planes: list[list[float]]) -> str:
             f"(x, y) -> x * y), 0.0D, (a, b) -> a + b))")
 
 
-def lsh_bucket_signature(df: DataFrame, vec_col: str, id_col: str,
-                         n_planes: int = DEFAULT_N_PLANES,
-                         dim: int = DEFAULT_DIM, seed: int = 42) -> DataFrame:
-    """Bucket id = bit vector of sign(v . r_i) over the seeded hyperplanes."""
-    planes = random_hyperplanes(n_planes, dim, seed)
-    return (df.select(F.col(id_col), _as_double(vec_col).alias("_v"))
-            .select(F.col(id_col),
-                    F.expr(_bucket_sql("_v", planes)).alias("bucket")))
-
-
 def table_planes(n_planes: int, dim: int, seed: int, n_tables: int):
     """Hyperplane sets for L independent hash tables. Table 0 uses `seed`
     verbatim so n_tables=1 is byte-identical to the original single-table

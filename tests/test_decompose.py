@@ -97,13 +97,16 @@ def test_disconnected_clusters_cartesian(spark):
 
 
 def _persisted(spark):
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    """Ids of the persistent RDDs. Callers assert that no new id appeared
+    (``<= before``): RDDs that other tests left behind may be
+    garbage-collected meanwhile, so a count may fall."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 @pytest.fixture
 def new_warm_validator(denorm):
     """Builds validators whose persisted base is already materialized, so
-    the persistent-RDD count moves only with projection persists. A
+    a new persistent RDD can only come from a projection persist. A
     factory, so each face of a both_faces test sizes its own engine; the
     base is materialized by a count of its own, which leaves the engine
     unsized and runs no kernel job."""
@@ -130,7 +133,7 @@ def test_validate_releases_projections_on_return(spark, new_warm_validator):
     assert good.spurious_tuples == 0 and other.spurious_tuples == 0
     shared = ("n_regionkey", "r_name")
     assert good.cluster_sizes[shared] == other.cluster_sizes[shared]
-    assert _persisted(spark) == before
+    assert _persisted(spark) <= before
 
 
 @both_faces
@@ -147,7 +150,7 @@ def test_validate_releases_projections_on_cancel(spark, new_warm_validator):
 
     with pytest.raises(DecompositionCanceled):
         v.validate([GOOD, BAD], should_stop=priced)
-    assert _persisted(spark) == before
+    assert _persisted(spark) <= before
     # nothing stale is left behind: the next validation is exact
     assert v.process_decomposition(GOOD).spurious_tuples == 0
 
@@ -159,7 +162,7 @@ def test_validate_releases_projections_on_unknown_column(spark, new_warm_validat
     # the unknown column fails the pricing of all sets, GOOD's included
     with pytest.raises(ValueError, match="unknown column"):
         v.validate([GOOD, [["c_custkey", "no_such_column"]]])
-    assert _persisted(spark) == before
+    assert _persisted(spark) <= before
 
 
 @both_faces
@@ -179,7 +182,7 @@ def test_concurrent_validates_share_and_release(spark, new_warm_validator):
     finally:
         sys.setswitchinterval(old)
     assert all([i.spurious_tuples for i in r] == [0, 0] for r in results)
-    assert _persisted(spark) == before
+    assert _persisted(spark) <= before
 
 
 def _cached(spark, df):
@@ -233,7 +236,7 @@ def test_caller_persisted_input_stays_cached(spark):
 def test_miner_and_validator_share_one_cache(spark, denorm):
     """A miner and a validator over one DataFrame share one cache entry:
     whichever is released first leaves the other's input cached, and once
-    both are released the persistent RDDs are back to their count from
+    both are released no persistent RDD is left that was not there
     before."""
     from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
     from relationaldecomposition_spark.engine.measures import MeasureEngine
@@ -258,7 +261,7 @@ def test_miner_and_validator_share_one_cache(spark, denorm):
         assert _cached(spark, df)
         second()
         assert not _cached(spark, df)
-        assert _persisted(spark) == before
+        assert _persisted(spark) <= before
 
 
 # null, NaN and -0.0 in the join column k: a null key joins nothing (so the

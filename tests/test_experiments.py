@@ -34,12 +34,14 @@ def test_mvd_sweep_csv(tmp_path, denorm4):
     rows = _read(out)
     assert rows[0] == MVD_SWEEP_HEADER
     assert len(rows) == 3
-    for res, row in zip(results, rows[1:]):
+    for i, (res, row) in enumerate(zip(results, rows[1:])):
         assert res.completed
         assert int(row[0]) == 4                 # #Attribtues
         assert int(row[1]) > 0                  # #Rows
         assert int(row[3]) >= 1                 # #MVDs mined
-        assert int(row[4]) >= 1                 # jobs run
+        # jobs run, a per-threshold delta: the engine is shared by the
+        # sweep, so a later threshold can be served by its cache
+        assert int(row[4]) >= (1 if i == 0 else 0)
         assert float(row[6]) >= float(row[5])   # total time >= scan time
         assert 0.0 <= float(row[7]) <= 100.0    # %scanning
 
@@ -123,3 +125,124 @@ def test_cli_end_to_end(tmp_path, spark):
         assert any(f.startswith(f"{t}.TO.") and f.endswith(".sep")
                    for f in got)
         assert len(_read(os.path.join(out_dir, f"{t}.csv"))) == 3
+
+
+SWEEP = (0.0, 1.0, 2.0)
+
+
+def _sep_name(thresh):
+    from relationaldecomposition_spark.engine.entropy import (
+        DEFAULT_MAX_GROUPING_SETS)
+    return f"denorm4.TO.600.RANGE.{DEFAULT_MAX_GROUPING_SETS}.THRESH.{thresh}.sep"
+
+
+def _fresh_sep(df, thresh, path):
+    """The .sep file of one threshold mined on an engine of its own."""
+    from relationaldecomposition_spark.engine.entropy import SparkEntropyEngine
+    from relationaldecomposition_spark.engine.measures import MeasureEngine
+    from relationaldecomposition_spark.mining.jd_miner import JDMiner
+    from relationaldecomposition_spark.sources.jd_io import write_jds
+
+    miner = JDMiner(MeasureEngine(SparkEntropyEngine(df)), epsilon=thresh)
+    try:
+        miner.mine_all_min_seps()
+        miner.mine_all_full_mvds()
+    finally:
+        miner.eng.unpersist()
+    write_jds(sorted(set(miner.full_mvds) | set(miner.mined_jds), key=str),
+              path, list(df.columns))
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def test_minsep_sweep_sizes_and_collects_once(spark, tmp_path, denorm4,
+                                              monkeypatch):
+    """A sweep with enumeration mines every threshold and validates every
+    run's schemas on one engine: one sizing count and one Arrow collect
+    of the relation, and no persistent RDD left behind."""
+    from tests.test_decompose import _count_collects, _persisted
+
+    collects = _count_collects(monkeypatch, denorm4)
+    counts = []
+    count = type(denorm4).count
+
+    def spy(self):
+        counts.append(None)
+        return count(self)
+
+    monkeypatch.setattr(type(denorm4), "count", spy)
+    before = _persisted(spark)
+    out = str(tmp_path / "denorm4.csv")
+    run_minsep_experiment(denorm4, out, str(tmp_path / "seps"), "denorm4",
+                          thresholds=SWEEP, timeout_sec=600,
+                          enum_csv=str(tmp_path / "denorm4.enum.out.csv"))
+    assert len(counts) == 1 and len(collects) == 1
+    assert _persisted(spark) <= before
+    rows = _read(out)[1:]
+    assert [float(r[3]) for r in rows] == list(SWEEP)
+    # the collect is the first threshold's build and its one job
+    assert int(rows[0][10]) == 1
+    assert all(int(r[10]) == 0 for r in rows[1:])
+
+
+def test_minsep_sweep_matches_fresh_engines(tmp_path, denorm4):
+    """Per threshold, the shared engine writes the same .sep bytes as an
+    engine of its own, and the in-sweep ENUM rows are
+    run_schema_enumeration's rows on that file (but for elapsed time)."""
+    sep_dir = str(tmp_path / "seps")
+    enum = str(tmp_path / "denorm4.enum.out.csv")
+    run_minsep_experiment(denorm4, str(tmp_path / "m.csv"), sep_dir,
+                          "denorm4", thresholds=SWEEP, timeout_sec=600,
+                          enum_csv=enum)
+    expected = [ENUM_HEADER]
+    for i, thresh in enumerate(SWEEP):
+        sep = os.path.join(sep_dir, _sep_name(thresh))
+        with open(sep, "rb") as f:
+            assert f.read() == _fresh_sep(denorm4, thresh,
+                                          str(tmp_path / f"fresh{i}.sep"))
+        alone = str(tmp_path / f"alone{i}.csv")
+        run_schema_enumeration(denorm4, sep, alone)
+        expected += _read(alone)[1:]
+    got = _read(enum)
+    assert len(got) == len(expected) > len(SWEEP)
+
+    def drop_time(rows):
+        return [r[:4] + r[5:] for r in rows]
+
+    assert drop_time(got) == drop_time(expected)
+
+
+def test_timed_out_threshold_leaves_no_stop_flag(tmp_path, denorm4,
+                                                 monkeypatch):
+    """The first threshold times out while it mines; its fired stop flag
+    is taken off the shared engine, so the next threshold completes with
+    a fresh engine's separators and the engine ends with no stop_check."""
+    from relationaldecomposition_spark.engine.decompose import (
+        DecompositionValidator)
+    from relationaldecomposition_spark.runner import TimeoutRunner
+
+    calls = []
+    run = TimeoutRunner.run
+
+    def first_times_out(self, fn, timeout):
+        calls.append(None)
+        return run(self, fn, 0 if len(calls) == 1 else timeout)
+
+    flags = []
+    close = DecompositionValidator.close
+
+    def spy_close(self):
+        flags.append(self.eng.stop_check)
+        close(self)
+
+    monkeypatch.setattr(TimeoutRunner, "run", first_times_out)
+    monkeypatch.setattr(DecompositionValidator, "close", spy_close)
+    sep_dir = str(tmp_path / "seps")
+    results = run_minsep_experiment(
+        denorm4, str(tmp_path / "m.csv"), sep_dir, "denorm4",
+        thresholds=(0.0, 2.0), timeout_sec=600,
+        enum_csv=str(tmp_path / "e.csv"))
+    assert [r.completed for r in results] == [False, True]
+    assert flags == [None]
+    with open(os.path.join(sep_dir, _sep_name(2.0)), "rb") as f:
+        assert f.read() == _fresh_sep(denorm4, 2.0, str(tmp_path / "f.sep"))
