@@ -66,6 +66,7 @@ the driver's single-line capture in round 4 (BENCH_r04 parsed: null).
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
@@ -721,11 +722,17 @@ def _run_calibration_sched(spark) -> None:
 
 def run_bench(spark, sf_dir: str, repeats: int = 1,
               only: list[str] | None = None,
-              calibrate: bool = True) -> dict[str, float]:
+              calibrate: bool = True,
+              compiles: dict[str, list[int]] | None = None
+              ) -> dict[str, float]:
     """Per-query median over `repeats` runs, in seconds. `only` restricts to
     a subset (tools/bench_scaling.py's skewed section). Unless disabled, the
     result carries a ``_calibration`` row (fixed work, sf-independent) for
-    host-noise normalization."""
+    host-noise normalization. A ``compiles`` dict receives, per row, the
+    number of classes Spark's code generator compiled in each repeat: the
+    first repeat compiles the row's working set, later ones 0 unless the
+    codegen cache is too small for it."""
+    from relationaldecomposition_spark.session import codegen_compiles
     from relationaldecomposition_spark.sources.tables import load_table
 
     # Warm JVM/parquet footers AND the shuffle + hash-aggregate codegen
@@ -740,52 +747,35 @@ def run_bench(spark, sf_dir: str, repeats: int = 1,
         queries = {k: queries[k] for k in only}
     verbose = os.environ.get("SPARK_GRAFT_BENCH_VERBOSE") == "1"
     out: dict[str, float] = {}
-    if calibrate:
-        # one unmeasured run first: the hash-chain codegen compile (~5 s
-        # cold) belongs to JVM warm-up, not to the host-speed signal
-        _run_calibration(spark)
-        cal = []
+
+    def measure(name, fn) -> None:
+        samples, compiled = [], []
         for _ in range(repeats):
-            t0 = time.time()
-            _run_calibration(spark)
-            cal.append(time.time() - t0)
-        out["_calibration"] = statistics.median(cal)
-        if verbose:
-            print(f"[bench] {sf_dir} _calibration: "
-                  f"{out['_calibration']:.2f}s", file=sys.stderr, flush=True)
-        if os.path.exists(os.path.join(_CAL_IO_DIR, "lineitem.parquet")):
-            _run_calibration_io(spark)  # unmeasured warm-up, same rule
-            cal_io = []
-            for _ in range(repeats):
-                t0 = time.time()
-                _run_calibration_io(spark)
-                cal_io.append(time.time() - t0)
-            out["_calibration_io"] = statistics.median(cal_io)
-            if verbose:
-                print(f"[bench] {sf_dir} _calibration_io: "
-                      f"{out['_calibration_io']:.2f}s",
-                      file=sys.stderr, flush=True)
-        _run_calibration_sched(spark)  # unmeasured warm-up, same rule
-        cal_sched = []
-        for _ in range(repeats):
-            t0 = time.time()
-            _run_calibration_sched(spark)
-            cal_sched.append(time.time() - t0)
-        out["_calibration_sched"] = statistics.median(cal_sched)
-        if verbose:
-            print(f"[bench] {sf_dir} _calibration_sched: "
-                  f"{out['_calibration_sched']:.2f}s",
-                  file=sys.stderr, flush=True)
-    for name, fn in queries.items():
-        samples = []
-        for _ in range(repeats):
+            before = codegen_compiles(spark)
             t0 = time.time()
             fn()
             samples.append(time.time() - t0)
+            compiled.append(codegen_compiles(spark) - before)
+        if compiles is not None:
+            compiles[name] = compiled
         out[name] = statistics.median(samples)
         if verbose:
             print(f"[bench] {sf_dir} {name}: {out[name]:.2f}s",
                   file=sys.stderr, flush=True)
+
+    if calibrate:
+        # one unmeasured run of each sentinel first: the hash-chain codegen
+        # compile (~5 s cold) belongs to JVM warm-up, not to the host-speed
+        # signal
+        sentinels = [("_calibration", _run_calibration)]
+        if os.path.exists(os.path.join(_CAL_IO_DIR, "lineitem.parquet")):
+            sentinels.append(("_calibration_io", _run_calibration_io))
+        sentinels.append(("_calibration_sched", _run_calibration_sched))
+        for name, sentinel in sentinels:
+            sentinel(spark)
+            measure(name, functools.partial(sentinel, spark))
+    for name, fn in queries.items():
+        measure(name, fn)
     return out
 
 
@@ -873,7 +863,8 @@ def main() -> None:
     from relationaldecomposition_spark.session import get_spark
 
     spark = get_spark("bench")
-    timings = run_bench(spark, sf_dir, repeats)
+    compiles: dict[str, list[int]] = {}
+    timings = run_bench(spark, sf_dir, repeats, compiles=compiles)
     spark.stop()
 
     calibration = timings.pop("_calibration", None)
@@ -887,6 +878,8 @@ def main() -> None:
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": sf,
         "repeats": repeats,
+        # generated classes compiled in each of a row's repeats
+        "codegen_compiles": compiles,
     }
     if calibration is not None:
         record["calibration"] = {

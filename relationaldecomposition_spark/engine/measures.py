@@ -22,6 +22,7 @@ Reference semantics kept verbatim:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable, Sequence
 
 from ..core.attrset import attrset
@@ -70,12 +71,15 @@ class MeasureEngine:
 
     def jd_measure(self, lhs: Iterable[str], components: Iterable[Iterable[str]]) -> float:
         """mu(⋈[X | C1..Ck]) = sum H(X ∪ Ci) - (k-1) H(X) - H(R), floored at 0
-        (AbstractDataset.computeJD:244-277)."""
+        (AbstractDataset.computeJD:244-277). The component sum is
+        correctly rounded (``math.fsum``), so the measure does not depend on
+        the order the components come in (a frozenset's order follows the
+        process's string hash seed)."""
         x = attrset(lhs)
         comps = [attrset(c) for c in components]
         subsets = [x | c for c in comps] + [x]
         got = self.engine.entropies(subsets)
-        comp_part = sum(got[x | c] for c in comps)
+        comp_part = math.fsum(got[x | c] for c in comps)
         m = _clamp(comp_part - (len(comps) - 1) * got[x] - self.total_entropy)
         return m if m > 0.0 else 0.0
 

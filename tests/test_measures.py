@@ -126,3 +126,26 @@ def test_measure_interval_logic():
     with pytest.raises(ValueError):
         m2 = Measure(1.0, 2.0)
         m2.set_value(5.0)
+
+
+class _StubEngine:
+    """Fixed entropies, no Spark: H(k ∪ Ci) is 0.1, 0.2 and 0.3, whose
+    float sum depends on the order it is taken in."""
+
+    schema_cols = ["k", "a", "b", "c"]
+    table = {frozenset("k"): 0.0, frozenset("ka"): 0.1, frozenset("kb"): 0.2,
+             frozenset("kc"): 0.3, frozenset("kabc"): 0.5}
+
+    def entropies(self, subsets):
+        return {s: self.table[s] for s in subsets}
+
+    def entropy(self, cols):
+        return self.table[frozenset(cols)]
+
+
+def test_jd_measure_does_not_depend_on_component_order():
+    assert (0.1 + 0.2) + 0.3 != 0.1 + (0.2 + 0.3)
+    meng = MeasureEngine(_StubEngine())
+    forward = meng.jd_measure(["k"], [["a"], ["b"], ["c"]])
+    backward = meng.jd_measure(["k"], [["c"], ["b"], ["a"]])
+    assert forward == backward == math.fsum([0.1, 0.2, 0.3]) - 0.5

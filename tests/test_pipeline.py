@@ -135,3 +135,31 @@ def test_quality_repetition_profile_matches_separate_faces(spark):
         for c in ("n_tokens", "dup_token_frac", "top_ngram_frac",
                   "repetitive"):
             assert row[c] == rep[d][c], (d, c)
+
+
+def test_second_curation_compiles_no_code(spark):
+    """The session's codegen cache holds a whole curation run's generated
+    classes: run the benchmark's curation operation twice (packed output
+    and funnel forced) and the second run compiles nothing. With Spark's
+    default 100 entries every class is evicted before it is needed again
+    and the second run compiles as much as the first."""
+    from bench import _force
+    from relationaldecomposition_spark.session import codegen_compiles
+    from tests.conftest import load
+
+    docs = load(spark, "documents")
+    compiled = []
+    for _ in range(2):
+        before = codegen_compiles(spark)
+        packed, funnel = curate_corpus(
+            docs, "text", "doc_id", source_col="source",
+            mixture={"src0": 0.5, "src1": 0.3, "src2": 0.2},
+            benchmark=docs.where(F.col("doc_id") % 20 == 7),
+            max_bucket=1000, pack_target=256, pack_shards=16,
+            persist_stages=True)
+        _force(packed)
+        funnel.collect()
+        spark.catalog.clearCache()
+        compiled.append(codegen_compiles(spark) - before)
+    assert codegen_compiles(spark) > 0  # the counter is live
+    assert compiled[1] == 0, compiled
