@@ -125,7 +125,9 @@ def build_queries(spark, sf_dir: str):
                 "l_tax", "l_shipdate"]
         subsets = [frozenset(c) for r in (1, 2, 3)
                    for c in itertools.combinations(cols, r)][:32]
-        eng = SparkEntropyEngine(li)
+        # the engine persists, sizes and may collect its whole input: give
+        # it only the priced columns
+        eng = SparkEntropyEngine(li.select(*cols))
         eng.entropies(subsets)
         eng.unpersist()
 

@@ -1,8 +1,19 @@
-"""Plan-cost estimate for cost-based face choices."""
+"""Plan-cost estimates for cost-based face choices, and the one driver
+budget that decides every driver face."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import BinaryType, DecimalType, StringType
+
+# The entropy engine's relation and connected_components' edges are
+# collected only within this many Arrow bytes, and no driver count-fold
+# step holds more in its int64 arrays. 80 MB is 5M numeric edges, the
+# largest driver input of the old row bounds (CHANGES.md sizes the rest).
+DRIVER_MAX_BYTES = 80_000_000
 
 
 def plan_bytes(df: DataFrame) -> int | None:
@@ -18,3 +29,46 @@ def plan_bytes(df: DataFrame) -> int | None:
                    .sizeInBytes())
     except Exception:
         return None
+
+
+def driver_budget(spark: SparkSession) -> int:
+    """DRIVER_MAX_BYTES, capped at half of ``spark.driver.maxResultSize``
+    when that is set and non-zero (0 is unlimited), so Spark never refuses
+    a collect the budget admits."""
+    raw = spark.conf.get("spark.driver.maxResultSize", None) or ""
+    # Spark's byte strings: plain bytes, or k/m/g/t/p (powers of 1024)
+    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", raw.strip().lower())
+    limit = int(m[1]) << 10 * "bkmgtp".index(m[2] or "b") if m else 0
+    return min(DRIVER_MAX_BYTES, limit // 2) if limit else DRIVER_MAX_BYTES
+
+
+# Arrow bytes per cell of the atomic types not 8 wide; strings and
+# binaries take a 4-byte offset plus their bytes
+_WIDTH = {"boolean": 1, "byte": 1, "short": 2, "integer": 4, "float": 4,
+          "date": 4, "decimal": 16}
+
+
+def collect_size(df: DataFrame) -> tuple[int, int]:
+    """(rows, bytes) of ``df``'s Arrow collect, estimated before it. A
+    cached ``df`` is counted, filling the cache, whose plan then holds its
+    bytes: no job (nulls' validity bitmaps left out). Otherwise, or with
+    no plan statistics, one aggregate counts rows and string bytes; the
+    estimate of an uncached plan is no check (it read a 4.3 MB relation
+    of 200-character strings as 0.36 MB)."""
+    fields = df.schema.fields
+    if df.storageLevel != StorageLevel.NONE:
+        n = df.count()
+        est = plan_bytes(df.select("*")) if n else 0
+        if est is not None:
+            # the cache counts 8 bytes a decimal cell, Arrow 16
+            decimals = sum(isinstance(f.dataType, DecimalType) for f in fields)
+            return n, est + 8 * n * decimals
+    var = [f.name for f in fields
+           if isinstance(f.dataType, (StringType, BinaryType))]
+    width = sum(4 if f.name in var else _WIDTH.get(f.dataType.typeName(), 8)
+                for f in fields)
+    row = df.agg(F.count(F.lit(1)),
+                 *(F.coalesce(F.sum(F.octet_length(
+                     F.col("`" + c.replace("`", "``") + "`"))), F.lit(0))
+                   for c in var)).first()
+    return row[0], row[0] * width + sum(row[1:])

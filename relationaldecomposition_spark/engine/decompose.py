@@ -31,14 +31,12 @@ Scale notes (100 TB):
 - Projection sizes (A12) and the base count (A16) come from the entropy
   kernel over the relation as given; pipeline.decompose mines on the same
   engine, so the relation is persisted, sized and collected once.
-- The kernel's sizing count() of N rows picks the face of both the pricing
-  and the count fold. At most BROADCAST_MAX_ROWS rows, the kernel collects
-  the relation once as Arrow and encodes it; pricing and every fold then
-  run on the driver in numpy over its distinct code rows, with no further
-  Spark job — the reference's single-node in-memory validation. Concurrent
-  validations on one validator share that one collect. A fold step that
-  would hold more rows than that bound, or a larger relation (duplicates
-  counted), takes the Spark face, after one pricing job per validate call.
+- The kernel's sizing picks the face: when the relation's Arrow collect
+  fits ``cost.driver_budget``, pricing and every fold run in numpy over its
+  distinct code rows, with no further Spark job — the reference's
+  single-node in-memory validation; concurrent validations share the
+  collect. A fold step whose arrays would pass that budget, or a relation
+  over it, takes the Spark face, after one pricing job per validate call.
 - On the Spark face projections are not persisted; each is one
   column-pruned shuffle inside its fold. Columns are referenced backquoted
   and the count columns are named apart from the base's, so any column
@@ -61,8 +59,9 @@ from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.attrset import attrset, sorted_cols
-from .entropy import (BROADCAST_MAX_ROWS, SparkEntropyEngine, _col, _fresh,
-                      _group_ids, cache_unless_cached)
+from .cost import driver_budget
+from .entropy import (SparkEntropyEngine, _col, _fresh, _group_ids,
+                      cache_unless_cached)
 from .fanout import fanout
 
 
@@ -127,9 +126,10 @@ def _checked_sums(gid: np.ndarray, k: int, w: np.ndarray) -> np.ndarray:
     ARITHMETIC_OVERFLOW where Spark's ANSI sum would, instead of wrapping."""
     sums = np.zeros(k, np.int64)
     np.add.at(sums, gid, w)
-    # over at most BROADCAST_MAX_ROWS terms a float sum is within a relative
-    # 1e-9 of exact, so every group that could pass 2^63 reads above 2^62;
-    # only those are re-summed exactly
+    # a fold step keeps 3+ int64 arrays per row in the driver budget, so at
+    # most DRIVER_MAX_BYTES / 24 (3.3M) terms: a float sum is within a
+    # relative 1e-9 of exact, every group that could pass 2^63 reads above
+    # 2^62, and only those are re-summed exactly
     approx = np.bincount(gid, weights=w, minlength=k)
     for g in np.flatnonzero(approx >= 2.0 ** 62):
         if sum(map(int, w[gid == g])) > np.iinfo(np.int64).max:
@@ -138,13 +138,14 @@ def _checked_sums(gid: np.ndarray, k: int, w: np.ndarray) -> np.ndarray:
     return sums
 
 
-def _driver_fold_total(codes: dict, n: int, cl, schema_cols) -> int | None:
+def _driver_fold_total(codes: dict, n: int, cl, schema_cols,
+                       max_bytes: int) -> int | None:
     """A13 on the driver: the fold of _fold_total_frame over the n encoded
     base rows, in the same greedy order, joining on shared columns (a null
     key never matches) and summing counts per still-needed group. Returns
-    |⋈ projections|, or None when a step's join would hold more than
-    BROADCAST_MAX_ROWS rows, a size read off the two sides' key histograms
-    before the step is materialized."""
+    |⋈ projections|, or None when a step's int64 arrays (two row indices,
+    counts, one per kept column) would pass ``max_bytes``, a size read off
+    the two sides' key histograms before the step is materialized."""
     def project(c):
         cols = sorted_cols(c, schema_cols)
         first = _group_ids([codes[x] for x in cols], n)[1]
@@ -165,16 +166,16 @@ def _driver_fold_total(codes: dict, n: int, cl, schema_cols) -> int | None:
         hist = np.bincount(rid[rows], minlength=int(ids.max(initial=-1)) + 2)
         per = hist[lid]
         size = int(per.sum())
-        if size > BROADCAST_MAX_ROWS:
+        acc_attrs = acc_attrs | cl[i]
+        needed = frozenset().union(*cl[i + 1:])
+        group = sorted_cols(needed & acc_attrs, schema_cols)
+        if size * 8 * (3 + len(group)) > max_bytes:
             return None
         # left row li[j] meets the right rows of its key, stored contiguously
         li = np.repeat(np.arange(m), per)
         run = np.arange(size) - np.repeat(np.cumsum(per) - per, per)
         by_key = rows[np.argsort(rid[rows], kind="stable")]
         ri = by_key[(np.cumsum(hist) - hist)[lid[li]] + run]
-        acc_attrs = acc_attrs | cl[i]
-        needed = frozenset().union(*cl[i + 1:])
-        group = sorted_cols(needed & acc_attrs, schema_cols)
         vals = [acc[x][li] if x in acc else p2[x][ri] for x in group]
         gid, first = _group_ids(vals, size)
         acc, m = {x: v[first] for x, v in zip(group, vals)}, len(first)
@@ -217,14 +218,12 @@ class DecompositionValidator:
         The entropy kernel prices every distinct projection across all
         sets, and the full column set, whose group count is |base|, in one
         call (a repeat call finds them priced). The count folds then take
-        the kernel's face, chosen by its sizing count of the relation's N
-        rows:
+        the kernel's face, chosen by its sizing of the relation:
 
-        - N <= BROADCAST_MAX_ROWS: every set folds on the driver
-          (_driver_fold_total) over the distinct code rows of the kernel's
-          one Arrow collect, which priced the projections too. A set whose
-          fold would hold more than BROADCAST_MAX_ROWS rows at any step
-          falls to the Spark face.
+        - its Arrow collect fits ``cost.driver_budget``: every set folds
+          on the driver (_driver_fold_total) over the distinct code rows
+          of the kernel's one collect, which priced the projections too. A
+          set whose fold step would pass the same budget falls to Spark.
         - otherwise, and for those sets: one kernel job prices the
           projections, and the Spark fold runs 4 sets at a time, since a
           single fold is a chain of short jobs whose cost is per-action
@@ -249,12 +248,13 @@ class DecompositionValidator:
         todo = [i for i, cl in enumerate(orders) if cl]
         table = self.eng.driver_table() if todo else None
         if table is not None:
+            budget = driver_budget(self.base.sparkSession)
             spark_todo = []
             for i in todo:
                 if stop():
                     raise DecompositionCanceled("canceled before a fold")
                 total = _driver_fold_total(table.codes, table.rows, orders[i],
-                                           self.schema_cols)
+                                           self.schema_cols, budget)
                 if total is None:
                     spark_todo.append(i)
                 else:

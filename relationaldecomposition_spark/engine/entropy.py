@@ -8,26 +8,29 @@ when the relation is small, on Spark otherwise. Both faces compute
 
   H(X) = log2(N) - (1/N) * sum over groups g of X of (c_g * log2(c_g))
 
-Sizing. The engine's first kernel action is a count() of its persisted
-input: N, which the lazy mining path (H(R)) and the validator (|base|)
-need anyway. It scans the cache and shuffles nothing.
+Sizing. The engine's first kernel action sizes its persisted input
+(``cost.collect_size``): a count() of the cache gives N, which mining
+(H(R)) and the validator (|base|) need anyway, and the filled cache's plan
+gives the bytes of an Arrow collect with no job.
 
-Driver face. When N <= BROADCAST_MAX_ROWS and no column is nested, the raw
-rows are collected ONCE as Arrow, every column is dictionary-encoded (A3,
-``_encode``), and repeated rows fold into D distinct rows with their
-multiplicities. From then on every request is answered in numpy with no
-Spark job: group ids, weighted ``bincount``, then H and the group count.
-This is the reference's single-node design (`entropy/CompressedDB.java`:
-encode once into in-memory H2, memoize every entropy); at this size a
-Spark job is planning and scheduling latency, not work.
+Driver face. When that collect fits ``cost.driver_budget`` and no column
+is nested, the raw rows are collected ONCE as Arrow, every column is
+dictionary-encoded (A3, ``_encode``), and repeated rows fold into D
+distinct rows with their multiplicities. From then on every request is
+answered in numpy with no Spark job: group ids, weighted ``bincount``,
+then H and the group count. This is the reference's single-node design
+(`entropy/CompressedDB.java`: encode once into in-memory H2, memoize every
+entropy); at this size a Spark job is planning and scheduling latency, not
+work.
 
-Spark face (larger N, or a nested column): ``df.groupBy(*X).count()`` + a
-scalar aggregate: one shuffle of exactly the columns in X (Catalyst prunes
-the scan to X), partial map-side aggregation, and a collect of one row per
-set. The reference's inverted indexes (A4), tid joins (A6), and
-HAVING-singleton correction (`entropy/CompressedDB.java:275-284,330-340`)
-exist to make a single-node SQL engine do this cheaply; on Spark they are
-subsumed by the shuffle-based hash aggregate.
+Spark face (a collect over the budget, or a nested column):
+``df.groupBy(*X).count()`` + a scalar aggregate: one shuffle of exactly the
+columns in X (Catalyst prunes the scan to X), partial map-side
+aggregation, and a collect of one row per set. The reference's inverted
+indexes (A4), tid joins (A6), and HAVING-singleton correction
+(`entropy/CompressedDB.java:275-284,330-340`) exist to make a single-node
+SQL engine do this cheaply; on Spark they are subsumed by the shuffle-based
+hash aggregate.
 
 Batching (A8, `ExternalFileDataSet.computeEntropies:111-166` — one scan
 feeding many count maps) maps to ``DataFrame.groupingSets``: one scan +
@@ -55,9 +58,9 @@ Scale notes (100 TB):
 - High-cardinality subsets (worst case: near-key column sets) shuffle one
   row per group; AQE coalescing keeps partition counts sane. The Spark face
   collects one row per grouping set.
-- The driver face holds at most BROADCAST_MAX_ROWS rows as int64 codes
-  (8 bytes per cell) for the engine's lifetime. Above the bound the only
-  cost it adds is the count() per engine, a scan of the cached input.
+- The driver face collects at most ``cost.DRIVER_MAX_BYTES`` of Arrow and
+  keeps the distinct rows as int64 codes for the engine's lifetime. Above
+  it, it costs the sizing count of the cache per engine.
 - The driver-side cache (A9) is the real optimizer: lattice searches re-ask
   the same subsets constantly; the reference relies on the same memoization
   (`entropy/ExternalFileDataSet.java:15,44-48`).
@@ -79,6 +82,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..core.attrset import attrset, sorted_cols
+from .cost import collect_size, driver_budget
 
 
 class MiningCancelled(RuntimeError):
@@ -129,12 +133,6 @@ def _fresh(name: str, taken) -> str:
     while name.lower() in low:
         name = "_" + name
     return name
-
-
-# The driver faces' bound: a relation of at most this many rows is collected
-# and counted on the driver, and no driver fold step holds more rows than
-# this. ~1M narrow rows ≈ tens of MB of int64 codes.
-BROADCAST_MAX_ROWS = 1_000_000
 
 
 # ----- dictionary codes: the driver faces' one in-memory form ---------------
@@ -512,18 +510,17 @@ class SparkEntropyEngine:
         return self._table
 
     def _collect_table(self) -> CodeTable | None:
-        """Sizing, then the driver face's one Arrow collect. N is a count()
-        of the persisted input (a scan of the cache, no shuffle). When N <=
-        BROADCAST_MAX_ROWS the raw rows are collected, every column is
-        encoded, and repeated rows fold into one row with its multiplicity,
-        so every later set costs O(D). None, with no job, when a column is
-        nested (the encoder cannot key it); None after the count when N is
-        above the bound."""
+        """Sizing (N and the collect's bytes), then, within
+        ``cost.driver_budget``, the driver face's one Arrow collect: every
+        column is encoded and repeated rows fold into one row with its
+        multiplicity, so every later set costs O(D). None, with no job, when
+        a column is nested (the encoder cannot key it), or after sizing."""
         nested = (ArrayType, MapType, StructType)
         if any(isinstance(f.dataType, nested) for f in self.df.schema.fields):
             return None
-        n = self._num_rows = self.df.count()
-        if n > BROADCAST_MAX_ROWS:
+        n, nbytes = collect_size(self.df)
+        self._num_rows = n
+        if nbytes > driver_budget(self.df.sparkSession):
             return None
         t0 = time.monotonic()
         tbl = self.df.select(*map(_col, self.schema_cols)).toArrow()

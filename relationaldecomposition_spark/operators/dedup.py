@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..engine.cost import collect_size, driver_budget
 from .materialize import local_materialize
 from ..functions.hashing import (
     H32_MOD, MERSENNE_P, affine_hash, exploded_shingles, minhash_params,
@@ -975,8 +976,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 25,
-                         driver_max_edges: int | None = 5_000_000) -> DataFrame:
+                         id_b: str = "id_b", max_iter: int = 25) -> DataFrame:
     """Cluster candidate pairs into connected components: (id, rep) with
     rep = the minimum id reachable from `id` — the standard tail of a
     near-dup pipeline (LSH pairs -> clusters -> keep one survivor per
@@ -994,51 +994,29 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     distributed. Raises RuntimeError if max_iter rounds don't converge
     (pathological graph, not a corpus shape).
 
-    Small-graph fast path: each pointer-jump round costs ~6 Spark jobs of
-    pure scheduling on a graph that fits in one task, so when the
-    (symmetrized, deduped) edge count — already materialized for the loop,
-    so the count is free of extra scans — is at most `driver_max_edges`,
-    the components are solved with one driver-side vectorized min-root
-    union-find over a BOUNDED collect (<= driver_max_edges slim (a, b)
-    rows; the 5M default is ~80 MB on the driver, solved in ~1 s of
-    numpy) and returned as a distributed frame. Identical (id, rep)
-    output.
-    Near-dup survivor graphs are tiny relative to their corpora — even
-    the sf10 SemDeDup pair set is 3.4M symmetrized edges — so this
-    removes the per-round scheduling floor at every scale where the loop
-    isn't genuinely needed; pass None to force the distributed loop,
-    which remains the path for genuinely huge pair sets.
-
-    The guard is BYTE-aware, not just a row count: `driver_max_edges`
-    rows are admitted only up to the byte budget they imply for numeric
-    ids (16 bytes/row — ~80 MB at the 5M default). String ids cost their
-    character bytes plus ~57 bytes/cell of CPython object overhead in the
-    collected pandas frame, so wide ids (URLs, long doc keys) admit
-    proportionally fewer rows instead of silently collecting GBs
-    (round-7 advisor finding; the estimate costs no extra job — it rides
-    the same aggregate that was already counting the edges)."""
-    # Symmetrize by EXPLODE, not self-union: union(fwd, fwd.swapped)
-    # evaluates the entire `pairs` subtree twice (Spark has no automatic
-    # subtree reuse — the round-12 shared-subtree law), and pairs is the
-    # expensive side here (for LSH input: shingle -> minhash -> band ->
-    # bucket join). One explode doubles rows map-side after a single
-    # evaluation; the distinct shuffle is unchanged.
+    Small-graph fast path: a round costs ~6 Spark jobs of pure scheduling,
+    so when the symmetrized edges' Arrow collect fits the driver budget
+    (``cost.driver_budget``; 80 MB is 5M numeric edges, ~1 s of numpy), a
+    driver-side union-find solves them, with identical output. The check
+    comes first: one aggregate over the checkpointed edges counts them and
+    sums the bytes of string ids, so wide ids (URLs) admit fewer edges.
+    Even the sf10 SemDeDup pair set is 3.4M symmetrized edges."""
+    # Symmetrize by EXPLODE, not self-union: a union evaluates the whole
+    # `pairs` subtree twice (Spark has no automatic subtree reuse), and
+    # pairs is the expensive side (for LSH input: shingle -> minhash ->
+    # band -> bucket join). One explode doubles rows map-side.
     #
-    # NOTE on partitioning: pre-repartitioning edges on the join key does
-    # let the per-round neighbor join skip its edges Exchange — but ONLY
-    # with AQE off. Under AQE (the production session), the checkpoint's
-    # coalesced output partitioning no longer satisfies the join's
-    # requirement and EnsureRequirements re-exchanges anyway, so the extra
-    # up-front shuffle would be pure cost. Measured, not assumed — see
-    # test_plans.py history; we let AQE own the exchange placement.
+    # Partitioning edges on the join key up front lets the per-round join
+    # skip its Exchange only with AQE off; under AQE the checkpoint's
+    # coalesced partitioning no longer satisfies the join, which
+    # re-exchanges anyway (measured, see test_plans.py), so AQE owns it.
     edges = (pairs.select(F.explode(F.array(
                 F.struct(F.col(id_a).alias("a"), F.col(id_b).alias("b")),
                 F.struct(F.col(id_b).alias("a"), F.col(id_a).alias("b"))))
                 .alias("e"))
              .select("e.a", "e.b")
              .distinct().localCheckpoint(eager=True))
-    if driver_max_edges is not None and _edges_fit_driver(edges,
-                                                          driver_max_edges):
+    if collect_size(edges)[1] <= driver_budget(pairs.sparkSession):
         return _driver_union_find(pairs.sparkSession, edges)
     labels = (edges.select(F.col("a").alias("id")).distinct()
               .select("id", F.col("id").alias("rep"))
@@ -1067,68 +1045,37 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                        f"in {max_iter} rounds")
 
 
-_DRIVER_BYTES_PER_EDGE = 16      # two int64 cells — what the 5M default
-                                 # (~80 MB) was calibrated against
-_STR_CELL_OVERHEAD = 57          # CPython str header + object pointer per
-                                 # pandas object-column cell (CPython 3.12
-                                 # sys.getsizeof('') == 49, + 8-byte ref)
-
-
-def _edges_fit_driver(edges: DataFrame, max_edges: int) -> bool:
-    """True when the symmetrized edge set fits the driver fast path: row
-    count <= max_edges AND estimated collected size within the byte budget
-    those rows imply for numeric ids (max_edges x 16 bytes). Numeric ids
-    are exactly 16 bytes/row; string ids are estimated as character bytes
-    (F.length — an undercount for multi-byte UTF-8, already dwarfed by the
-    per-cell overhead term) plus _STR_CELL_OVERHEAD per cell. One
-    aggregate job either way."""
-    from pyspark.sql.types import NumericType
-
-    if isinstance(edges.schema["a"].dataType, NumericType):
-        return edges.count() <= max_edges
-    stats = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.length("a") + F.length("b")),
-                   F.lit(0)).alias("chars")).first()
-    est_bytes = stats.n * 2 * _STR_CELL_OVERHEAD + stats.chars
-    return (stats.n <= max_edges
-            and est_bytes <= max_edges * _DRIVER_BYTES_PER_EDGE)
-
-
 def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
-    """(id, rep) for a bounded symmetrized edge set, vectorized.
-
-    Bounded by construction: only called by connected_components under its
-    driver_max_edges guard. Min-label propagation over value-sorted node
-    codes (so the smaller CODE is the smaller ID): each sweep hooks the
+    """(id, rep) for a symmetrized edge set whose Arrow collect fits the
+    driver budget, vectorized. Min-label propagation over value-sorted
+    node codes (Arrow sorts strings by their bytes, as Spark compares
+    them, so the smaller code is the smaller id): each sweep hooks the
     larger endpoint label to the smaller (`np.minimum.at`) and fully
-    path-compresses by pointer doubling; labels shrink monotonically to
-    the component minimum — the same rep the pointer-jump loop converges
-    to. Converges in O(log diameter) vectorized sweeps; ~3M edges solve
-    in well under a second."""
+    path-compresses by pointer doubling, so labels shrink to the component
+    minimum, the loop's rep, in O(log diameter) sweeps."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from pyspark.sql.types import StructField, StructType
 
     id_type = edges.schema["a"].dataType
     out = StructType([StructField("id", id_type),
                       StructField("rep", id_type)])
-    pdf = edges.toPandas()
-    a = pdf["a"].to_numpy()
-    if len(a) == 0:
+    tbl = edges.toArrow()
+    n = tbl.num_rows
+    if n == 0:
         return spark.createDataFrame([], out)
-    b = pdf["b"].to_numpy()
+    ends = pa.concat_arrays([tbl[c].combine_chunks() for c in ("a", "b")])
     # value-sorted codes: code order == id order, so min code == min id
-    uniq = np.unique(np.concatenate([a, b]))
-    ea = np.searchsorted(uniq, a)
-    eb = np.searchsorted(uniq, b)
+    uniq = pc.unique(ends)
+    uniq = uniq.take(pc.sort_indices(uniq))
+    codes = pc.index_in(ends, value_set=uniq).to_numpy()
+    ea, eb = codes[:n], codes[n:]
     parent = np.arange(len(uniq), dtype=np.int64)
     while True:
-        pa, pb = parent[ea], parent[eb]
-        hi = np.maximum(pa, pb)
-        lo = np.minimum(pa, pb)
-        np.minimum.at(parent, hi, lo)          # hook larger root to smaller
+        ra, rb = parent[ea], parent[eb]        # hook larger root to smaller
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
         while True:                            # pointer-doubling compression
             pp = parent[parent]
             if np.array_equal(pp, parent):
@@ -1137,7 +1084,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
         if np.array_equal(parent[ea], parent[eb]):
             break
     return spark.createDataFrame(
-        pd.DataFrame({"id": uniq, "rep": uniq[parent]}), out)
+        pa.table({"id": uniq, "rep": uniq.take(parent)}), out)
 
 
 def apply_dedup(df: DataFrame, clusters: DataFrame, id_col: str) -> DataFrame:

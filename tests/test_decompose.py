@@ -8,7 +8,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark.errors import ArithmeticException
 
-from relationaldecomposition_spark.engine import decompose
+from relationaldecomposition_spark.engine import cost, decompose
 from relationaldecomposition_spark.engine.decompose import (
     DecompositionCanceled, DecompositionValidator)
 from tests.conftest import both_faces, load
@@ -305,9 +305,9 @@ def test_join_size_never_wraps_int64(spark):
 
 
 def test_fold_size_guard(spark, denorm, monkeypatch):
-    """A driver fold step whose join would exceed BROADCAST_MAX_ROWS sends
-    its set to the Spark face; on the bench-shaped sets the guard stays
-    inert and no Spark fold runs."""
+    """A driver fold step whose int64 arrays would pass the driver budget
+    sends its set to the Spark face; on the bench-shaped sets the guard
+    stays inert and no Spark fold runs."""
     spark_folds = []
     fold = DecompositionValidator._fold_total_frame
 
@@ -323,13 +323,14 @@ def test_fold_size_guard(spark, denorm, monkeypatch):
         [0, v.naive_join_spurious(BAD), 0]
     v.close()
 
-    # the cartesian fixture: a 2-row base under the bound, a 4-row join over it
-    monkeypatch.setattr(decompose, "BROADCAST_MAX_ROWS", 3)
+    # the cartesian fixture: a 2-row base (26 bytes of Arrow) fits the
+    # budget; its 4-row last join step holds 3 int64 arrays, 96 bytes
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "x"])
+    monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", 95)
     v = DecompositionValidator(df)
     assert v.process_decomposition([["k"], ["x"]]).spurious_tuples == 2
-    assert len(spark_folds) == 1
-    monkeypatch.setattr(decompose, "BROADCAST_MAX_ROWS", 4)
+    assert v.eng.driver_table() is not None and len(spark_folds) == 1
+    monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", 96)
     assert v.process_decomposition([["k"], ["x"]]).spurious_tuples == 2
     assert len(spark_folds) == 1
     v.close()
@@ -462,5 +463,6 @@ def test_driver_fold_matches_python_join():
         codes = {x: _encode(pa.chunked_array(
             [[r[i] for r in rows]], pa.int64())) for i, x in enumerate(cols)}
         order = decompose._greedy_order(clusters)
-        got = decompose._driver_fold_total(codes, len(rows), order, cols)
+        got = decompose._driver_fold_total(codes, len(rows), order, cols,
+                                           cost.DRIVER_MAX_BYTES)
         assert got == _python_join_size(rows, cols, order), (rows, order)

@@ -3,10 +3,11 @@ pattern from SURVEY.md §5: CompressedDB.compareTest vs ExternalFileDataSet)."""
 
 import itertools
 import math
+from decimal import Decimal
 
 import pytest
 
-from relationaldecomposition_spark.engine import entropy
+from relationaldecomposition_spark.engine import cost, entropy
 from relationaldecomposition_spark.engine.entropy import (
     SparkEntropyEngine, entropy_from_counts)
 from tests.conftest import both_faces, load
@@ -275,6 +276,40 @@ def test_cold_wide_chunk_clamped_to_16(spark, monkeypatch):
         # warm chunk keeps the FULL raised width (21 sets fit under both
         # the 32 cap and the 32x budget: 21 x 2^6 = 1344 <= 2048)
         assert len(eng._next_chunk(wide)) == 21
+    finally:
+        eng.unpersist()
+
+
+@pytest.mark.usefixtures("spark_kernel")
+def test_batch32_shape_leaves_cold_wide_clamp_inert(spark, monkeypatch):
+    """The cold-wide clamp's inert side, on bench.py's entropy_batch32
+    batch (32 subsets of 6 lineitem columns, sizes 1-3) at test scale: the
+    singles run alone first, so every later chunk is planned with all its
+    sets warm and the clamp never counts a cold wide set. Pins the chunk
+    count and sizes of the Spark face."""
+    cols = ["l_returnflag", "l_linestatus", "l_quantity", "l_discount",
+            "l_tax", "l_shipdate"]
+    subsets = [frozenset(c) for r in (1, 2, 3)
+               for c in itertools.combinations(cols, r)][:32]
+    eng = SparkEntropyEngine(load(spark, "lineitem").select(*cols))
+    plan, chunks = eng._next_chunk, []
+
+    def planned(todo):
+        chunk = plan(todo)
+        cold_wide = sum(len(x) > 1 and eng._est_log2_groups(x) is None
+                        for x in chunk)
+        chunks.append((len(chunk), cold_wide))
+        return chunk
+
+    monkeypatch.setattr(eng, "_next_chunk", planned)
+    try:
+        eng.entropies(subsets)
+        # 6,000 rows: the 6 singles, then the group budget packs the 26
+        # warm sets into chunks of 4, 8, 6, 5 and 3
+        assert [size for size, _ in chunks] == [6, 4, 8, 6, 5, 3]
+        assert [cold for _, cold in chunks] == [0] * 6
+        assert eng.jobs_run == 6
+        assert eng.cache_size == 32
     finally:
         eng.unpersist()
 
@@ -562,23 +597,23 @@ def test_single_grouping_set_wider_than_62_columns(spark, width):
 
 
 def test_driver_face_size_guard(spark, monkeypatch):
-    """The sizing count N picks the face: the driver face engages at N =
-    bound, with row weights when rows repeat, and stays inert at N = bound
-    + 1, where the count adds no kernel job to the Spark kernel's. A
-    nested column goes to Spark without sizing."""
-    from relationaldecomposition_spark.engine import entropy
-
+    """Sizing picks the face by the bytes of the Arrow collect: the driver
+    face engages at a budget equal to them, with row weights when rows
+    repeat, and stays inert one byte below, where sizing adds no kernel
+    job to the Spark kernel's. A nested column goes to Spark without
+    sizing."""
     rows = [(i % 4, i % 3) for i in range(24)]      # 24 rows, D = 12
     df = spark.createDataFrame(rows, ["a", "b"])
     sets = [frozenset("a"), frozenset("b"), frozenset("ab")]
     expect = {s: oracle_entropy(rows, [df.columns.index(c) for c in sorted(s)])
               for s in sets}
-    for bound, driver in ((24, True), (23, False)):
-        monkeypatch.setattr(entropy, "BROADCAST_MAX_ROWS", bound)
+    for budget, driver in ((24 * 16, True), (24 * 16 - 1, False)):
+        monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", budget)
         eng = SparkEntropyEngine(df)
         try:
+            assert cost.collect_size(eng.df) == (24, 24 * 16)
             got = eng.entropies(sets)
-            assert (eng.driver_table() is not None) == driver, bound
+            assert (eng.driver_table() is not None) == driver, budget
             # the collect, or the Spark kernel's two chunks (singles first,
             # then the pair)
             assert eng.jobs_run == (1 if driver else 2)
@@ -590,7 +625,7 @@ def test_driver_face_size_guard(spark, monkeypatch):
                 assert list(eng.driver_table().weights) == [2] * 12
         finally:
             eng.unpersist()
-    monkeypatch.setattr(entropy, "BROADCAST_MAX_ROWS", 1_000_000)
+    monkeypatch.undo()
     df = spark.createDataFrame([(1, [1]), (2, [1]), (2, [2])],
                                "k int, arr array<int>")
     eng = SparkEntropyEngine(df)
@@ -600,6 +635,88 @@ def test_driver_face_size_guard(spark, monkeypatch):
         assert eng.driver_table() is None and eng.jobs_run == 1
     finally:
         eng.unpersist()
+
+
+def _count_collects(monkeypatch, df):
+    """Count the Arrow collects of every frame of ``df``'s class."""
+    calls = []
+    to_arrow = type(df).toArrow
+
+    def spied(self):
+        calls.append(self)
+        return to_arrow(self)
+
+    monkeypatch.setattr(type(df), "toArrow", spied)
+    return calls
+
+
+def test_wide_rows_over_budget_never_collect(spark, monkeypatch):
+    """Bytes, not rows: 40 rows of 200-character strings (8,800 bytes) over
+    an 8,000-byte budget take the Spark face of the engine and of the
+    fold with no Arrow collect at all, and give the same H and spurious
+    counts as the driver face at a budget that admits them."""
+    from relationaldecomposition_spark.engine.decompose import (
+        DecompositionValidator)
+
+    df = spark.range(40).selectExpr(
+        "id % 4 AS g", "id % 5 AS h",
+        "concat(repeat('x', 198), lpad(cast(id % 20 AS string), 2, '0')) AS s")
+    sets = [frozenset("g"), frozenset("s"), frozenset("gh"), frozenset("gs"),
+            frozenset("ghs")]
+    clusters = [[["g", "s"], ["s", "h"]], [["g", "h"], ["h", "s"]]]
+    calls = _count_collects(monkeypatch, df)
+    got = {}
+    for budget, driver in ((8_000, False), (8_800, True)):
+        monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", budget)
+        calls.clear()
+        eng = SparkEntropyEngine(df)
+        v = DecompositionValidator(df)
+        try:
+            assert cost.collect_size(eng.df) == (40, 40 * (8 + 8 + 204))
+            h = eng.entropies(sets)
+            spurious = [i.spurious_tuples for i in v.validate(clusters)]
+            assert (eng.driver_table() is not None) == driver
+            assert (v.eng.driver_table() is not None) == driver
+            assert len(calls) == (2 if driver else 0)
+            got[driver] = h, spurious
+        finally:
+            v.close()
+            eng.unpersist()
+    (h_spark, sp_spark), (h_driver, sp_driver) = got[False], got[True]
+    assert sp_spark == sp_driver == [0, 60]
+    for s in sets:
+        assert h_spark[s] == pytest.approx(h_driver[s], abs=1e-12), s
+
+
+def test_sizing_without_plan_statistics(spark, monkeypatch):
+    """With no plan statistics, sizing falls back to its aggregate: the same
+    bytes for numbers, strings and decimals (16 Arrow bytes a cell, which
+    the cache's statistics count as 8), so the engine takes the same face
+    on each side of the budget, with the same entropies."""
+    rows = [(i % 4, f"s{i % 6:03d}", Decimal(i % 5) / 4) for i in range(24)]
+    df = spark.createDataFrame(rows, ["a", "s", "d"])
+    size = (24, 24 * (8 + 4 + 4 + 16))
+    sets = [frozenset("a"), frozenset("s"), frozenset("as"), frozenset("ad")]
+    expect = {s: oracle_entropy(rows, [df.columns.index(c) for c in sorted(s)])
+              for s in sets}
+    eng = SparkEntropyEngine(df)
+    try:
+        assert cost.collect_size(eng.df) == size     # the plan read
+    finally:
+        eng.unpersist()
+    monkeypatch.setattr(cost, "plan_bytes", lambda df: None)
+    assert cost.collect_size(df) == size             # uncached: aggregate
+    for budget, driver in ((size[1], True), (size[1] - 1, False)):
+        monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", budget)
+        eng = SparkEntropyEngine(df)
+        try:
+            assert cost.collect_size(eng.df) == size
+            got = eng.entropies(sets)
+            assert (eng.driver_table() is not None) == driver, budget
+            for s in sets:
+                assert got[s] == pytest.approx(expect[s], abs=1e-12), s
+        finally:
+            eng.unpersist()
 
 
 def test_driver_face_polls_stop_between_sets(tiny):

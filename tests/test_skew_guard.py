@@ -14,6 +14,7 @@ dwarfs the cap — and pin the two properties the guards exist for:
 import pytest
 from pyspark.sql import functions as F
 
+from relationaldecomposition_spark.engine import cost
 from relationaldecomposition_spark.operators import dedup, similarity
 
 HOT_N = 64          # identical docs -> one bucket of 64 rows in every band
@@ -155,7 +156,30 @@ def test_ann_cap_bounds_candidates_keeps_topk(skewed_vecs):
 # connected-components clustering (the dedup pipeline tail)
 # ---------------------------------------------------------------------------
 
-def test_connected_components_shapes(spark):
+_UNION_FIND = dedup._driver_union_find
+
+
+def _components(monkeypatch, df, budget):
+    """connected_components(df) as {id: rep} at a driver budget of
+    ``budget`` bytes, and whether the driver union-find solved it."""
+    driver = []
+
+    def union_find(*args):
+        driver.append(args)
+        return _UNION_FIND(*args)
+
+    monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", budget)
+    monkeypatch.setattr(dedup, "_driver_union_find", union_find)
+    got = {r["id"]: r["rep"] for r in
+           dedup.connected_components(df).collect()}
+    return got, bool(driver)
+
+
+# the driver union-find at the default budget, the distributed loop at 0
+BUDGETS = (cost.DRIVER_MAX_BYTES, 0)
+
+
+def test_connected_components_shapes(spark, monkeypatch):
     # chain 1-2-3-4-5 (forces multi-round convergence), clique 10-11-12,
     # isolated pair (20, 21)
     pairs = [(1, 2), (2, 3), (3, 4), (4, 5),
@@ -165,23 +189,19 @@ def test_connected_components_shapes(spark):
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                 10: 10, 11: 10, 12: 10,
                 20: 20, 21: 20}
-    # both faces: the small-graph driver union-find (default) and the
-    # distributed pointer-jump loop (driver_max_edges=None) must agree
-    for dme in (200_000, None):
-        got = {r["id"]: r["rep"] for r in
-               dedup.connected_components(df, driver_max_edges=dme)
-               .collect()}
-        assert got == expected, dme
+    # both faces must agree
+    for budget in BUDGETS:
+        assert _components(monkeypatch, df, budget) == \
+            (expected, budget > 0), budget
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     # a 64-node chain: plain neighbor-min needs 63 rounds; pointer jumping
     # must converge within the 25-round bound (log-diameter)
     pairs = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    got = {r["id"]: r["rep"] for r in
-           dedup.connected_components(df, driver_max_edges=None).collect()}
-    assert set(got.values()) == {0}
+    got, driver = _components(monkeypatch, df, 0)
+    assert set(got.values()) == {0} and not driver
     assert len(got) == 65
 
 
@@ -196,7 +216,7 @@ def test_apply_dedup_keeps_survivors_and_unpaired(spark):
     assert kept == {0, 1, 4, 5, 7}
 
 
-def test_connected_components_random_vs_union_find(spark):
+def test_connected_components_random_vs_union_find(spark, monkeypatch):
     """Randomized cross-check: the distributed label propagation must agree
     with a driver-side union-find on arbitrary graphs (seeded, so failures
     reproduce)."""
@@ -224,51 +244,59 @@ def test_connected_components_random_vs_union_find(spark):
         edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(50)]
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, ["id_a", "id_b"])
-        for dme in (200_000, None):
-            got = {r["id"]: r["rep"] for r in
-                   dedup.connected_components(df, driver_max_edges=dme)
-                   .collect()}
-            assert got == union_find(edges), (seed, dme)
+        for budget in BUDGETS:
+            assert _components(monkeypatch, df, budget) == \
+                (union_find(edges), budget > 0), (seed, budget)
 
 
-def test_edges_fit_driver_byte_gate(spark):
-    """The driver fast path admits rows only up to the byte budget they
-    imply for numeric ids (16 bytes/row): numeric edges gate on row count
-    alone; string edges charge character bytes + per-cell object overhead,
-    so wide ids (URLs, long doc keys) fall back to the distributed loop
-    even when the row count is under the limit (round-7 advisor
-    finding)."""
+def test_edges_fit_driver_byte_gate(spark, monkeypatch):
+    """The driver union-find takes the symmetrized edges only when their
+    Arrow collect fits the driver budget: numeric ids cost 8 bytes a cell,
+    string ids a 4-byte offset plus their bytes, so wide ids (URLs, long
+    doc keys) fall back to the distributed loop at an edge count whose
+    numeric twin fits."""
     num = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-    num_edges = num.selectExpr("id_a as a", "id_b as b")
-    assert dedup._edges_fit_driver(num_edges, 10)
-    assert not dedup._edges_fit_driver(num_edges, 1)
+    # 4 symmetrized edges x 2 long cells = 64 bytes
+    for budget in (64, 63):
+        assert _components(monkeypatch, num, budget) == \
+            ({1: 1, 2: 1, 3: 1}, budget == 64), budget
 
     wide = "u" * 200
     s = spark.createDataFrame(
         [(f"{wide}{i}", f"{wide}{i + 1}") for i in range(4)],
         ["id_a", "id_b"])
-    s_edges = s.selectExpr("id_a as a", "id_b as b")
-    # 4 rows but ~4*(2*57+400) bytes >> 10*16: bytes veto the row budget
-    assert not dedup._edges_fit_driver(s_edges, 10)
-    # generous budget: short overhead fits
-    assert dedup._edges_fit_driver(s_edges, 100_000)
+    assert cost.collect_size(s) == (4, 4 * 2 * (4 + 201))
+    # 8 symmetrized edges: 3,280 bytes, where 8 numeric edges take 128
+    for budget in (3_280, 3_279, 128):
+        got, driver = _components(monkeypatch, s, budget)
+        assert set(got.values()) == {f"{wide}0"}
+        assert driver == (budget == 3_280), budget
 
 
-def test_connected_components_string_ids_both_paths(spark):
+def test_connected_components_string_ids_both_paths(spark, monkeypatch):
     """String-id graphs produce identical (id, rep) through the driver
-    union-find (string codes sort lexicographically, min code = min id)
+    union-find (Arrow sorts strings by their bytes, so min code = min id)
     and the distributed loop — including when the byte gate forces the
-    distributed loop despite a driver_max_edges that would admit the row
-    count."""
+    distributed loop at a budget that would admit as many numeric edges
+    (6 x 16 = 96 bytes, against 108 for these ids)."""
     pairs = [("doc-b", "doc-c"), ("doc-a", "doc-b"), ("doc-x", "doc-y")]
     df = spark.createDataFrame(pairs, ["id_a", "id_b"])
     expected = {"doc-a": "doc-a", "doc-b": "doc-a", "doc-c": "doc-a",
                 "doc-x": "doc-x", "doc-y": "doc-x"}
-    for dme in (200_000, 7, None):  # 7 rows admitted, bytes veto -> loop
-        got = {r["id"]: r["rep"] for r in
-               dedup.connected_components(df, driver_max_edges=dme)
-               .collect()}
-        assert got == expected, dme
+    for budget in (*BUDGETS, 100):
+        assert _components(monkeypatch, df, budget) == \
+            (expected, budget == BUDGETS[0]), budget
+
+
+def test_components_without_plan_statistics(spark, monkeypatch):
+    """Edge sizing is an aggregate over the checkpointed edges, so missing
+    plan statistics change neither the face nor the components."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
+    expected = {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    monkeypatch.setattr(cost, "plan_bytes", lambda df: None)
+    for budget in (*BUDGETS, 96, 95):    # 6 edges x 16 bytes
+        assert _components(monkeypatch, df, budget) == \
+            (expected, budget >= 96), budget
 
 
 def test_cluster_size_histogram(spark):

@@ -41,8 +41,8 @@ COLS = ["l_returnflag", "l_linestatus", "l_quantity", "l_discount",
 class ProfiledEngine(SparkEntropyEngine):
     """Wraps _batch_grouping_sets to record one row per chunk job. It
     profiles the Spark kernel's chunks, so the driver face (which answers
-    inputs of at most BROADCAST_MAX_ROWS rows without any chunk job) is
-    withheld."""
+    any input whose Arrow collect fits the driver budget, cost.py, without
+    any chunk job) is withheld."""
 
     def __init__(self, *a, **kw):
         super().__init__(*a, **kw)
