@@ -3,8 +3,6 @@ budget that decides every driver face."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import BinaryType, DecimalType, StringType
@@ -16,30 +14,50 @@ from pyspark.sql.types import BinaryType, DecimalType, StringType
 DRIVER_MAX_BYTES = 80_000_000
 
 
-def plan_bytes(df: DataFrame) -> int | None:
+def plan_bytes(df: DataFrame, rows: int | None = None) -> int | None:
     """Catalyst's sizeInBytes estimate for the optimized plan: driver-side
     plan statistics, no job. Exact for parquet scans (file footers), an
-    overestimate for derived plans.
+    overestimate for derived plans. With ``rows``, only if the plan counts
+    as many: a cached plan does once all its cache is loaded, and reports
+    the uncached estimate before.
 
     ``None`` when plan statistics are unreachable — ``_jdf`` is the
     classic-PySpark JVM handle, absent under Spark Connect. Each caller
     states which face it uses then."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes())
+        stats = _plan_stats(df)
+        if rows is not None:
+            counted = stats.rowCount()
+            if not counted.isDefined() or int(str(counted.get())) != rows:
+                return None
+        return int(stats.sizeInBytes())
     except Exception:
         return None
 
 
+def _plan_stats(df: DataFrame):
+    return df._jdf.queryExecution().optimizedPlan().stats()
+
+
 def driver_budget(spark: SparkSession) -> int:
     """DRIVER_MAX_BYTES, capped at half of ``spark.driver.maxResultSize``
-    when that is set and non-zero (0 is unlimited), so Spark never refuses
-    a collect the budget admits."""
-    raw = spark.conf.get("spark.driver.maxResultSize", None) or ""
-    # Spark's byte strings: plain bytes, or k/m/g/t/p (powers of 1024)
-    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", raw.strip().lower())
-    limit = int(m[1]) << 10 * "bkmgtp".index(m[2] or "b") if m else 0
+    as Spark reads it (0 is unlimited, unset 1g), so Spark never refuses a
+    collect the budget admits; with no JVM handle the constant stands."""
+    try:
+        limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+            "spark.driver.maxResultSize", "1g")
+    except Exception:
+        return DRIVER_MAX_BYTES
     return min(DRIVER_MAX_BYTES, limit // 2) if limit else DRIVER_MAX_BYTES
+
+
+def driver_fits(df: DataFrame) -> tuple[int, bool]:
+    """(rows of ``df``, whether a driver face may take it): its Arrow
+    collect and the 8-byte int64 code the driver makes of every cell (a
+    boolean's 8 times its Arrow byte) both fit ``driver_budget``."""
+    n, nbytes = collect_size(df)
+    return n, max(nbytes, 8 * n * len(df.columns)) <= driver_budget(
+        df.sparkSession)
 
 
 # Arrow bytes per cell of the atomic types not 8 wide; strings and
@@ -51,14 +69,14 @@ _WIDTH = {"boolean": 1, "byte": 1, "short": 2, "integer": 4, "float": 4,
 def collect_size(df: DataFrame) -> tuple[int, int]:
     """(rows, bytes) of ``df``'s Arrow collect, estimated before it. A
     cached ``df`` is counted, filling the cache, whose plan then holds its
-    bytes: no job (nulls' validity bitmaps left out). Otherwise, or with
-    no plan statistics, one aggregate counts rows and string bytes; the
-    estimate of an uncached plan is no check (it read a 4.3 MB relation
-    of 200-character strings as 0.36 MB)."""
+    bytes and row count: no job (nulls' validity bitmaps left out).
+    Otherwise, or with no such plan statistics, one aggregate counts rows
+    and string bytes; the estimate of an uncached plan is no check (it read
+    a 4.3 MB relation of 200-character strings as 0.36 MB)."""
     fields = df.schema.fields
     if df.storageLevel != StorageLevel.NONE:
         n = df.count()
-        est = plan_bytes(df.select("*")) if n else 0
+        est = plan_bytes(df.select("*"), rows=n) if n else 0
         if est is not None:
             # the cache counts 8 bytes a decimal cell, Arrow 16
             decimals = sum(isinstance(f.dataType, DecimalType) for f in fields)

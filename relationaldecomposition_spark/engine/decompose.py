@@ -32,11 +32,12 @@ Scale notes (100 TB):
   kernel over the relation as given; pipeline.decompose mines on the same
   engine, so the relation is persisted, sized and collected once.
 - The kernel's sizing picks the face: when the relation's Arrow collect
-  fits ``cost.driver_budget``, pricing and every fold run in numpy over its
-  distinct code rows, with no further Spark job — the reference's
-  single-node in-memory validation; concurrent validations share the
-  collect. A fold step whose arrays would pass that budget, or a relation
-  over it, takes the Spark face, after one pricing job per validate call.
+  and codes fit ``cost.driver_budget``, pricing and every fold run in
+  numpy over its distinct code rows with no further Spark job (the
+  reference's single-node in-memory validation); concurrent validations
+  share the collect. A fold step whose arrays would pass that budget, or a
+  relation over it, takes the Spark face, after one pricing job per
+  validate call.
 - On the Spark face projections are not persisted; each is one
   column-pruned shuffle inside its fold. Columns are referenced backquoted
   and the count columns are named apart from the base's, so any column
@@ -220,7 +221,7 @@ class DecompositionValidator:
         call (a repeat call finds them priced). The count folds then take
         the kernel's face, chosen by its sizing of the relation:
 
-        - its Arrow collect fits ``cost.driver_budget``: every set folds
+        - its collect and codes fit ``cost.driver_budget``: every set folds
           on the driver (_driver_fold_total) over the distinct code rows
           of the kernel's one collect, which priced the projections too. A
           set whose fold step would pass the same budget falls to Spark.

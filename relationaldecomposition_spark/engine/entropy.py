@@ -9,13 +9,13 @@ when the relation is small, on Spark otherwise. Both faces compute
   H(X) = log2(N) - (1/N) * sum over groups g of X of (c_g * log2(c_g))
 
 Sizing. The engine's first kernel action sizes its persisted input
-(``cost.collect_size``): a count() of the cache gives N, which mining
+(``cost.driver_fits``): a count() of the cache gives N, which mining
 (H(R)) and the validator (|base|) need anyway, and the filled cache's plan
 gives the bytes of an Arrow collect with no job.
 
-Driver face. When that collect fits ``cost.driver_budget`` and no column
-is nested, the raw rows are collected ONCE as Arrow, every column is
-dictionary-encoded (A3, ``_encode``), and repeated rows fold into D
+Driver face. When that collect and its int64 codes fit the budget and no
+column is nested, the raw rows are collected ONCE as Arrow, every column
+is dictionary-encoded (A3, ``_encode``), and repeated rows fold into D
 distinct rows with their multiplicities. From then on every request is
 answered in numpy with no Spark job: group ids, weighted ``bincount``,
 then H and the group count. This is the reference's single-node design
@@ -59,8 +59,9 @@ Scale notes (100 TB):
   row per group; AQE coalescing keeps partition counts sane. The Spark face
   collects one row per grouping set.
 - The driver face collects at most ``cost.DRIVER_MAX_BYTES`` of Arrow and
-  keeps the distinct rows as int64 codes for the engine's lifetime. Above
-  it, it costs the sizing count of the cache per engine.
+  of int64 codes (its temporaries are a few times that) and keeps the
+  distinct rows' codes for the engine's lifetime. Above it, it costs the
+  sizing count of the cache per engine.
 - The driver-side cache (A9) is the real optimizer: lattice searches re-ask
   the same subsets constantly; the reference relies on the same memoization
   (`entropy/ExternalFileDataSet.java:15,44-48`).
@@ -82,7 +83,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..core.attrset import attrset, sorted_cols
-from .cost import collect_size, driver_budget
+from .cost import driver_fits
 
 
 class MiningCancelled(RuntimeError):
@@ -510,17 +511,17 @@ class SparkEntropyEngine:
         return self._table
 
     def _collect_table(self) -> CodeTable | None:
-        """Sizing (N and the collect's bytes), then, within
-        ``cost.driver_budget``, the driver face's one Arrow collect: every
-        column is encoded and repeated rows fold into one row with its
-        multiplicity, so every later set costs O(D). None, with no job, when
-        a column is nested (the encoder cannot key it), or after sizing."""
+        """Sizing (``cost.driver_fits``), then, within the driver budget,
+        the driver face's one Arrow collect: every column is encoded and
+        repeated rows fold into one row with its multiplicity, so every
+        later set costs O(D). None, with no job, when a column is nested
+        (the encoder cannot key it), or after sizing."""
         nested = (ArrayType, MapType, StructType)
         if any(isinstance(f.dataType, nested) for f in self.df.schema.fields):
             return None
-        n, nbytes = collect_size(self.df)
+        n, fits = driver_fits(self.df)
         self._num_rows = n
-        if nbytes > driver_budget(self.df.sparkSession):
+        if not fits:
             return None
         t0 = time.monotonic()
         tbl = self.df.select(*map(_col, self.schema_cols)).toArrow()

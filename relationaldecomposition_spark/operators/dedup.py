@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..engine.cost import collect_size, driver_budget
+from ..engine.cost import driver_fits
 from .materialize import local_materialize
 from ..functions.hashing import (
     H32_MOD, MERSENNE_P, affine_hash, exploded_shingles, minhash_params,
@@ -995,8 +995,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     (pathological graph, not a corpus shape).
 
     Small-graph fast path: a round costs ~6 Spark jobs of pure scheduling,
-    so when the symmetrized edges' Arrow collect fits the driver budget
-    (``cost.driver_budget``; 80 MB is 5M numeric edges, ~1 s of numpy), a
+    so when the symmetrized edges' Arrow collect and codes fit the driver
+    budget (``cost.driver_fits``; 80 MB is 5M edges, ~1 s of numpy), a
     driver-side union-find solves them, with identical output. The check
     comes first: one aggregate over the checkpointed edges counts them and
     sums the bytes of string ids, so wide ids (URLs) admit fewer edges.
@@ -1016,7 +1016,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 .alias("e"))
              .select("e.a", "e.b")
              .distinct().localCheckpoint(eager=True))
-    if collect_size(edges)[1] <= driver_budget(pairs.sparkSession):
+    if driver_fits(edges)[1]:
         return _driver_union_find(pairs.sparkSession, edges)
     labels = (edges.select(F.col("a").alias("id")).distinct()
               .select("id", F.col("id").alias("rep"))

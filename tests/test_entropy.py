@@ -688,6 +688,35 @@ def test_wide_rows_over_budget_never_collect(spark, monkeypatch):
         assert h_spark[s] == pytest.approx(h_driver[s], abs=1e-12), s
 
 
+def test_narrow_cells_sized_by_their_codes(spark, monkeypatch):
+    """A boolean is 1 Arrow byte a cell but 8 as the driver face's int64
+    code: 24 rows of 4 booleans (96 bytes of Arrow) whose codes (768
+    bytes) pass the budget take the Spark face with no Arrow collect, and
+    give the entropies of the driver face at a budget that admits the
+    codes."""
+    rows = [tuple(bool(i >> b & 1) for b in range(4)) for i in range(24)]
+    df = spark.createDataFrame(rows, "a boolean, b boolean, c boolean, "
+                                     "d boolean")
+    sets = [frozenset("a"), frozenset("ab"), frozenset("abd"),
+            frozenset("abcd")]
+    expect = {s: oracle_entropy(rows, [df.columns.index(c) for c in sorted(s)])
+              for s in sets}
+    calls = _count_collects(monkeypatch, df)
+    for budget, driver in ((24 * 4 * 8, True), (24 * 4 * 8 - 1, False)):
+        monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", budget)
+        calls.clear()
+        eng = SparkEntropyEngine(df)
+        try:
+            assert cost.collect_size(eng.df) == (24, 24 * 4)
+            got = eng.entropies(sets)
+            assert (eng.driver_table() is not None) == driver, budget
+            assert len(calls) == (1 if driver else 0)
+            for s in sets:
+                assert got[s] == pytest.approx(expect[s], abs=1e-12), s
+        finally:
+            eng.unpersist()
+
+
 def test_sizing_without_plan_statistics(spark, monkeypatch):
     """With no plan statistics, sizing falls back to its aggregate: the same
     bytes for numbers, strings and decimals (16 Arrow bytes a cell, which
@@ -704,7 +733,7 @@ def test_sizing_without_plan_statistics(spark, monkeypatch):
         assert cost.collect_size(eng.df) == size     # the plan read
     finally:
         eng.unpersist()
-    monkeypatch.setattr(cost, "plan_bytes", lambda df: None)
+    monkeypatch.setattr(cost, "plan_bytes", lambda df, rows=None: None)
     assert cost.collect_size(df) == size             # uncached: aggregate
     for budget, driver in ((size[1], True), (size[1] - 1, False)):
         monkeypatch.setattr(cost, "DRIVER_MAX_BYTES", budget)

@@ -293,7 +293,7 @@ def test_components_without_plan_statistics(spark, monkeypatch):
     plan statistics change neither the face nor the components."""
     df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
     expected = {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-    monkeypatch.setattr(cost, "plan_bytes", lambda df: None)
+    monkeypatch.setattr(cost, "plan_bytes", lambda df, rows=None: None)
     for budget in (*BUDGETS, 96, 95):    # 6 edges x 16 bytes
         assert _components(monkeypatch, df, budget) == \
             (expected, budget >= 96), budget
