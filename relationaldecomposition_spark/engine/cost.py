@@ -25,7 +25,7 @@ def plan_bytes(df: DataFrame, rows: int | None = None) -> int | None:
     classic-PySpark JVM handle, absent under Spark Connect. Each caller
     states which face it uses then."""
     try:
-        stats = _plan_stats(df)
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
         if rows is not None:
             counted = stats.rowCount()
             if not counted.isDefined() or int(str(counted.get())) != rows:
@@ -33,10 +33,6 @@ def plan_bytes(df: DataFrame, rows: int | None = None) -> int | None:
         return int(stats.sizeInBytes())
     except Exception:
         return None
-
-
-def _plan_stats(df: DataFrame):
-    return df._jdf.queryExecution().optimizedPlan().stats()
 
 
 def driver_budget(spark: SparkSession) -> int:

@@ -46,19 +46,25 @@ def test_cached_plan_bytes_need_its_row_count(spark, monkeypatch):
     df = spark.createDataFrame([(i, f"s{i:03d}") for i in range(10)],
                                ["a", "s"]).persist(StorageLevel.MEMORY_ONLY)
     size = (10, 10 * (8 + 4 + 4))
+    plan_bytes = cost.plan_bytes
+
+    def stub(rows):
+        """plan_bytes over a stand-in plan of 1 byte counting ``rows``."""
+        counted = SimpleNamespace(isDefined=lambda: rows is not None,
+                                  get=lambda: rows)
+        stats = SimpleNamespace(sizeInBytes=lambda: 1,
+                                rowCount=lambda: counted)
+        plan = SimpleNamespace(stats=lambda: stats)
+        jdf = SimpleNamespace(queryExecution=lambda: SimpleNamespace(
+            optimizedPlan=lambda: plan))
+        return lambda d, **kw: plan_bytes(SimpleNamespace(_jdf=jdf), **kw)
+
     try:
         assert cost.collect_size(df) == size          # the loaded cache
-
-        def stub(rows):
-            counted = SimpleNamespace(isDefined=lambda: rows is not None,
-                                      get=lambda: rows)
-            return lambda d: SimpleNamespace(sizeInBytes=lambda: 1,
-                                             rowCount=lambda: counted)
-
         for rows, got in ((10, (10, 1)), (11, size), (None, size)):
-            monkeypatch.setattr(cost, "_plan_stats", stub(rows))
+            monkeypatch.setattr(cost, "plan_bytes", stub(rows))
             assert cost.collect_size(df) == got, rows
-        # plan_bytes without rows reads the estimate as before
+        # without rows, the estimate is read as before
         assert cost.plan_bytes(df) == 1
     finally:
         df.unpersist()
